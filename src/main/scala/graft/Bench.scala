@@ -98,8 +98,9 @@ object Bench {
             roundTotal += (System.nanoTime() - t0) / 1e9
             errors(name) = e.getClass.getSimpleName
         } finally {
-          // release builder-owned materialized pair sets (d04/d05/d07/d15)
-          // outside the timed window — rounds must not accumulate caches
+          // release builder-owned materialized results (every owned(...)
+          // query in SparkEntry) outside the timed window — rounds must not
+          // accumulate caches
           SparkEntry.releaseOwnedCaches()
         }
       }

@@ -65,20 +65,20 @@ object SparkEntry {
     extractedCache.getOrElseUpdate((spark, dir),
       ExtractJob.run(fixturePages(spark, dir)).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Pair sets materialized-and-persisted by a query builder invocation
-    * (d04/d05/d07/d15): registered here so harness loops (Bench rounds, long
-    * sessions) can release them — without this, every invocation left one
-    * persisted result DataFrame behind forever. The long-lived shared caches
-    * above (extraction, blocks) are NOT registered: they are meant to
-    * survive across queries. */
+  /** Results materialized-and-persisted by a query builder invocation
+    * (d04/d05/d07/d15/d24/d27/d38–d42/x15): registered here so harness
+    * loops (Bench rounds, long sessions) can release them — without this,
+    * every invocation left one persisted result DataFrame behind forever.
+    * The long-lived shared caches above (extraction, blocks) are NOT
+    * registered: they are meant to survive across queries. */
   private val ownedCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private def owned(df: DataFrame): DataFrame = ownedCaches.synchronized {
     ownedCaches += df
     df
   }
 
-  /** Unpersist every builder-owned materialized pair set registered since the
-    * last call. Call between bench rounds / after consuming d04/d05/d07/d15
+  /** Unpersist every builder-owned materialized result registered since the
+    * last call. Call between bench rounds / after consuming owned query
     * results in a long-lived session. */
   def releaseOwnedCaches(): Unit = ownedCaches.synchronized {
     ownedCaches.foreach(_.unpersist(false))

@@ -73,18 +73,8 @@ object Dedup {
 
   /** MinHash-LSH near-dup pairs: band signatures, bucket-join, then exact
     * Jaccard estimate from the full signatures. Returns (doc_a, doc_b,
-    * est_jaccard_pct) with doc_a < doc_b, est >= threshold.
-    *
-    * The returned pair set is MATERIALIZED (persisted MEMORY_AND_DISK and
-    * already computed) and the signature cache is released before returning,
-    * so repeated calls in a long-lived session don't accumulate corpus-sized
-    * cache entries; caller may `unpersist()` the (small) result.
-    *
-    * `materialize = false` returns the UNEXECUTED plan for explain/audit
-    * ONLY (PlanCheck): its upstream persist() markers (the signature cache)
-    * have no owner on that path, so EXECUTING the returned plan would build
-    * a corpus-sized cache nothing ever releases — audit the plan, then call
-    * again with materialize = true to actually compute. */
+    * est_jaccard_pct) with doc_a < doc_b, est >= threshold, materialized
+    * with the signature cache released — see [[materialized]]. */
   def minhashPairs(spark: SparkSession, docs: DataFrame,
       bands: Int = 16, threshold: Double = 0.7, maxBucket: Int = 64,
       materialize: Boolean = true): DataFrame = {
@@ -118,15 +108,7 @@ object Dedup {
     val candidates = banded
       .groupByKey(k => (k.band, k.bucket))
       .flatMapGroups { (_: (Int, Long), it: Iterator[BandKey]) =>
-        val ids = it.map(_.doc_id).take(maxBucket + 1).toArray
-        if (ids.length > maxBucket) Iterator.empty // degenerate bucket: skip (logged upstream at scale)
-        else {
-          java.util.Arrays.sort(ids)
-          for {
-            i <- ids.indices.iterator
-            j <- (i + 1) until ids.length
-          } yield (ids(i), ids(j))
-        }
+        bucketPairs(it.map(_.doc_id), maxBucket)(identity)
       }
       .distinct()
       .toDF("doc_a", "doc_b")
@@ -142,13 +124,7 @@ object Dedup {
       // a floor would silently lower the nominal threshold by one point
       .filter(col("est_jaccard_pct") >= math.round(threshold * 100).toInt)
       .select(col("doc_a"), col("doc_b"), col("est_jaccard_pct"))
-    if (!materialize) out // plan-only: nothing executed, nothing cached yet
-    else {
-      val cached = out.persist(StorageLevel.MEMORY_AND_DISK)
-      cached.count() // materialize so the signature cache can be released now
-      sigs.unpersist()
-      cached
-    }
+    if (materialize) materialized(sigs)(out) else out
   }
 
   /** MinHash signatures in an engine-agnostic md5 hash family — the oracle
@@ -241,11 +217,9 @@ object Dedup {
     * set, not intra-corpus).
     *
     * Returns (doc_id, n_windows, n_dup_windows, dup_pct) per document; docs
-    * with fewer than n tokens report 0/0/0 rather than disappearing. The
-    * result is MATERIALIZED (persisted MEMORY_AND_DISK, already computed);
-    * caller may `unpersist()` it. `materialize = false` returns the
-    * UNEXECUTED plan (leak-free: unlike minhashPairs there is no internal
-    * gram cache to orphan — see plan shape below).
+    * with fewer than n tokens report 0/0/0 rather than disappearing.
+    * Materialized — see [[materialized]]; the lazy plan has no internal
+    * cache to orphan (plan shape below).
     *
     * Plan shape at 10^12 rows — built on the complement identity
     * n_dup_windows = n_windows − n_singleton_windows, where a singleton
@@ -308,8 +282,7 @@ object Dedup {
           TextOps.asciiTokens(col("__txt")), n)).as("gkey"))
     val singletons = keyed
       .groupBy(col("gkey"))
-      // deterministic despite first(): count==1 groups hold exactly one row
-      .agg(count(lit(1)).as("__c"), first(col("doc_id")).as("doc_id"))
+      .agg(count(lit(1)).as("__c"), min(col("doc_id")).as("doc_id"))
       .filter(col("__c") === 1)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("__n_singleton"))
     // NULL-SAFE doc join (<=>): ids that are null or fail the long cast
@@ -331,12 +304,7 @@ object Dedup {
         when(col("n_windows") === 0, lit(0L))
           .otherwise(floor(lit(100) * col("n_dup_windows") / col("n_windows")))
           .cast("long").as("dup_pct"))
-    if (!materialize) out // plan-only OR lazy composition: nothing cached
-    else {
-      val cached = out.persist(StorageLevel.MEMORY_AND_DISK)
-      cached.count()
-      cached
-    }
+    if (materialize) materialized()(out) else out
   }
 
   /** Exact-substring REMOVAL pass (Lee et al. 2022, "Deduplicating Training
@@ -373,8 +341,8 @@ object Dedup {
     * `oracleKeys` as in [[dupWindowStats]]: md5 gram-string keys the d42
     * DuckDB oracle recomputes, or native xxhash64 window keys for
     * oracle-free pipeline stages (~1e-8 false-flag rate at 10^12 windows).
-    * materialize=false returns the UNEXECUTED plan with no persist markers
-    * (leak-free; the tokenize is recomputed per branch). */
+    * Materialized with the tokenize cache released — see [[materialized]];
+    * the lazy plan takes no persist (the tokenize runs once per branch). */
   def removeDupWindows(docs: DataFrame, n: Int = 50,
       textCol: String = "text", idCol: String = "doc_id",
       oracleKeys: Boolean = true, materialize: Boolean = true): DataFrame = {
@@ -383,70 +351,60 @@ object Dedup {
     import spark.implicits._
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("__txt"))
-    def toksOf(df: DataFrame) = df.select(col("doc_id"),
+    val toks0 = base.select(col("doc_id"),
       TextOps.asciiTokens(col("__txt")).as("__t"))
-    val toks0 = toksOf(base)
     val toks = if (materialize)
       toks0.persist(StorageLevel.MEMORY_AND_DISK) else toks0
-    try {
-      // posexplode: pos = 0-based window start, aligned with the gram array
-      // (tokenNgrams/windowXx64Keys emit exactly one entry per start). The
-      // md5 projection runs post-explode in the same stage — gram strings
-      // never ride a shuffle.
-      val addressed = toks.filter(col("doc_id").isNotNull)
-      val w =
-        if (oracleKeys) addressed
-          .select(col("doc_id"),
-            posexplode(Decontam.tokenNgrams(col("__t"), n)).as(Seq("pos", "g")))
-          .select(col("doc_id"), col("pos"), TextOps.md5Key(col("g")).as("gkey"))
-        else addressed
-          .select(col("doc_id"), posexplode(
-            graft.functions.TokenFunctions.windowXx64Keys(col("__t"), n))
-            .as(Seq("pos", "gkey")))
-      val dupGrams = w.groupBy(col("gkey"))
-        .agg(count(lit(1)).as("__c"),
-          min(struct(col("doc_id"), col("pos"))).as("__own"))
-        .filter(col("__c") >= 2)
-        .select(col("gkey"), col("__own"))
-      val flags = w.join(dupGrams, Seq("gkey"))
-        .filter(!(col("doc_id") === col("__own.doc_id") &&
-          col("pos") === col("__own.pos")))
-        .groupBy(col("doc_id"))
-        .agg(collect_list(col("pos")).as("__flags"))
-      val out = toks.join(flags, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("__t"), col("__flags"))
-        .as[(java.lang.Long, Seq[String], Seq[Int])]
-        .map { case (id, t0, fl) =>
-          val t = if (t0 == null) Seq.empty[String] else t0
-          val covered = new Array[Boolean](t.length)
-          if (fl != null) fl.foreach { p =>
-            var i = p
-            val end = math.min(p + n - 1, t.length - 1)
-            while (i <= end) { covered(i) = true; i += 1 }
-          }
-          val kept = new StringBuilder
-          var removed = 0L
-          var i = 0
-          while (i < t.length) {
-            if (covered(i)) removed += 1
-            else {
-              if (kept.nonEmpty) kept.append(' ')
-              kept.append(t(i))
-            }
-            i += 1
-          }
-          (id, t.length.toLong, removed, kept.toString)
+    // posexplode: pos = 0-based window start, aligned with the gram array
+    // (tokenNgrams/windowXx64Keys emit exactly one entry per start). The
+    // md5 projection runs post-explode in the same stage — gram strings
+    // never ride a shuffle.
+    val addressed = toks.filter(col("doc_id").isNotNull)
+    val w =
+      if (oracleKeys) addressed
+        .select(col("doc_id"),
+          posexplode(Decontam.tokenNgrams(col("__t"), n)).as(Seq("pos", "g")))
+        .select(col("doc_id"), col("pos"), TextOps.md5Key(col("g")).as("gkey"))
+      else addressed
+        .select(col("doc_id"), posexplode(
+          graft.functions.TokenFunctions.windowXx64Keys(col("__t"), n))
+          .as(Seq("pos", "gkey")))
+    val dupGrams = w.groupBy(col("gkey"))
+      .agg(count(lit(1)).as("__c"),
+        min(struct(col("doc_id"), col("pos"))).as("__own"))
+      .filter(col("__c") >= 2)
+      .select(col("gkey"), col("__own"))
+    val flags = w.join(dupGrams, Seq("gkey"))
+      .filter(!(col("doc_id") === col("__own.doc_id") &&
+        col("pos") === col("__own.pos")))
+      .groupBy(col("doc_id"))
+      .agg(collect_list(col("pos")).as("__flags"))
+    val out = toks.join(flags, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("__t"), col("__flags"))
+      .as[(java.lang.Long, Seq[String], Seq[Int])]
+      .map { case (id, t0, fl) =>
+        val t = if (t0 == null) Seq.empty[String] else t0
+        val covered = new Array[Boolean](t.length)
+        if (fl != null) fl.foreach { p =>
+          var i = p
+          val end = math.min(p + n - 1, t.length - 1)
+          while (i <= end) { covered(i) = true; i += 1 }
         }
-        .toDF("doc_id", "n_tokens", "n_removed", "text_clean")
-      if (!materialize) out
-      else {
-        val cached = out.persist(StorageLevel.MEMORY_AND_DISK)
-        try { cached.count(); cached } // materialized: tokenize cache can go
-        catch { case e: Throwable => cached.unpersist(false); throw e }
+        val kept = new StringBuilder
+        var removed = 0L
+        var i = 0
+        while (i < t.length) {
+          if (covered(i)) removed += 1
+          else {
+            if (kept.nonEmpty) kept.append(' ')
+            kept.append(t(i))
+          }
+          i += 1
+        }
+        (id, t.length.toLong, removed, kept.toString)
       }
-    } finally {
-      if (materialize) toks.unpersist(false)
-    }
+      .toDF("doc_id", "n_tokens", "n_removed", "text_clean")
+    if (materialize) materialized(toks)(out) else out
   }
 
   /** SimHash 64-bit signature of token features. */
@@ -482,7 +440,14 @@ object Dedup {
     * quadratic past ~1e9 docs). Hot buckets are capped like minhash's
     * (skew guard, mirrors the reference's max-candidates cap in
     * /root/reference/src/processors/db_postprocess.rs:81).
-    * Returns (doc_a, doc_b, hamming), exact-Hamming verified. */
+    * Returns (doc_a, doc_b, hamming), exact-Hamming verified.
+    *
+    * Lazy by design, unlike the other pair producers: nothing is persisted.
+    * d06 reads the result twice (a union over doc_a and doc_b), but AQE
+    * plans the second branch's banded shuffle as a ReusedExchange of the
+    * first (OpsSpec pins this), so the shuffle already runs once. A
+    * materialized variant (persisted signatures, join-verify, a cached
+    * result) measured about 25 % slower on d06 at sf0.1, local[4]. */
   def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = 256): DataFrame = {
     import spark.implicits._
@@ -507,16 +472,10 @@ object Dedup {
     banded
       .groupByKey(r => (r._1, r._2))
       .flatMapGroups { (_: (Int, Long), it: Iterator[(Int, Long, Long, Long)]) =>
-        val rows = it.take(maxBucket + 1).map(r => (r._3, r._4)).toArray
-        if (rows.length > maxBucket) Iterator.empty // degenerate bucket: skip
-        else {
-          val sorted = rows.sortBy(_._1)
-          for {
-            i <- sorted.indices.iterator
-            j <- (i + 1) until sorted.length
-            h = java.lang.Long.bitCount(sorted(i)._2 ^ sorted(j)._2)
-            if h <= maxHamming
-          } yield (sorted(i)._1, sorted(j)._1, h)
+        bucketPairs(it.map(r => (r._3, r._4)), maxBucket)(_._1).flatMap {
+          case ((a, sa), (b, sb)) =>
+            val h = java.lang.Long.bitCount(sa ^ sb)
+            if (h <= maxHamming) Some((a, b, h)) else None
         }
       }
       .toDF("doc_a", "doc_b", "hamming")
@@ -564,11 +523,8 @@ object Dedup {
   /** Token-3-gram Jaccard near-dups via rare-shingle inverted-index blocking:
     * only shingles with document frequency <= maxDf generate candidates (the
     * common-shingle tail would explode quadratically), then exact Jaccard on
-    * the pair. Returns (doc_a, doc_b, jaccard_pct), MATERIALIZED (persisted
-    * MEMORY_AND_DISK, already computed) with the per-doc gram-set cache
-    * released before returning; caller may `unpersist()` the result.
-    * `materialize = false` is explain/audit-only — executing that plan
-    * builds an ownerless gram-set cache (see minhashPairs). */
+    * the pair. Returns (doc_a, doc_b, jaccard_pct), materialized with the
+    * per-doc gram-set cache released — see [[materialized]]. */
   def ngramJaccardPairs(spark: SparkSession, docs: DataFrame,
       n: Int = 3, threshold: Double = 0.5, maxDf: Int = 32,
       materialize: Boolean = true): DataFrame = {
@@ -618,13 +574,7 @@ object Dedup {
       .toDF("doc_a", "doc_b", "jaccard_pct")
       // round, not floor — same IEEE boundary note as minhashPairs
       .filter(col("jaccard_pct") >= math.round(threshold * 100).toInt)
-    if (!materialize) out // plan-only: nothing executed, nothing cached yet
-    else {
-      val cached = out.persist(StorageLevel.MEMORY_AND_DISK)
-      cached.count() // materialize so the gram-set cache can be released now
-      gsets.unpersist()
-      cached
-    }
+    if (materialize) materialized(gsets)(out) else out
   }
 
   /** Incremental-crawl dedup: the rows of `batch` whose `keyCol` does NOT
@@ -733,12 +683,12 @@ object Dedup {
     * the logical tree stays O(1)-sized per round (see reRoot below — without
     * truncation the tree grows 4^k-fold and dies at ~7 rounds).
     *
-    * The result is materialized and persisted (the loop must execute to
-    * converge) — callers release it like the pair sets above. `nodes` is
-    * every id that must appear in the output (singletons label themselves);
-    * edges touching ids absent from `nodes` are ignored. Non-convergence
-    * within `maxIter` throws rather than returning a half-merged clustering
-    * (default 50 covers paths beyond 2^25 nodes long).
+    * The result is always materialized (the loop must execute to converge)
+    * — see [[materialized]]; callers release it like the pair sets above.
+    * `nodes` is every id that must appear in the output (singletons label
+    * themselves); edges touching ids absent from `nodes` are ignored.
+    * Non-convergence within `maxIter` throws rather than returning a
+    * half-merged clustering (default 50 covers paths beyond 2^25 nodes long).
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       aCol: String = "doc_a", bCol: String = "doc_b",
@@ -753,11 +703,11 @@ object Dedup {
     // lookup canonicalization) traverses it as a tree: at ~7 rounds the
     // ComponentsSpec path graph dies in generateTreeString. The Row
     // round-trip costs one (long,long) decode/encode pass per round —
-    // noise next to the round's two shuffles. EVERY persist this method
-    // takes (edges, seed, per-round, and the result itself until it is
-    // handed to the caller) is taken inside the try and released in the
-    // finally, so a failure anywhere — analysis of a bad idCol, a mid-loop
-    // job error, the non-convergence throw, even the result's own
+    // noise next to the round's two shuffles. EVERY loop persist (edges,
+    // seed, per-round) is taken inside the try and released in the
+    // finally, and the result's own cache is released by [[materialized]]
+    // if its count throws, so a failure anywhere — analysis of a bad idCol,
+    // a mid-loop job error, the non-convergence throw, the result's
     // materialization — cannot strand corpus-sized caches.
     def reRoot(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema)
@@ -769,8 +719,6 @@ object Dedup {
     var cached: DataFrame = null
     var prop: DataFrame = null
     var jump: DataFrame = null
-    var handedOff = false
-    var result: DataFrame = null
     try {
       edges = {
         val e = pairs.select(col(aCol).cast("long").as("u"),
@@ -817,19 +765,15 @@ object Dedup {
       }
       require(converged,
         s"connectedComponents did not converge within $maxIter rounds")
-      result = labels
+      // the loop caches go in the finally below, after this count
+      materialized()(labels
         .select(col("node").as(idCol), col("lbl").as("component"),
-          (col("node") === col("lbl")).cast("int").as("is_keeper"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      result.count() // materialize so every loop cache can be released now
-      handedOff = true
-      result
+          (col("node") === col("lbl")).cast("int").as("is_keeper")))
     } finally {
       if (prop != null) prop.unpersist(false)
       if (jump != null) jump.unpersist(false)
       if (cached != null) cached.unpersist(false)
       if (edges != null) edges.unpersist(false)
-      if (!handedOff && result != null) result.unpersist(false)
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Corpus-curation sampling operators: per-domain quotas (cap hot hosts —
   * the CCNet/RefinedWeb-style "at most K documents per domain" gate) and
@@ -126,30 +127,6 @@ object Sampling {
       .groupBy(col("doc_id"), col("bkt"))
       .agg(count(lit(1)).as("c"))
 
-  /** Shared lifecycle for the two hashed-unigram kernels: optionally persist
-    * the per-(doc,bucket) relation while `body` builds the result over it,
-    * then (materialize=true) cache+execute the result so the token pass can
-    * be released before returning — unpersisting the result again if the
-    * execution itself throws, so no cache outlives an exception. With
-    * materialize=false the UNEXECUTED plan is returned (explain/audit or
-    * lazy composition only — executing it re-runs the tokenize pass per
-    * branch, and nothing is cached). Callers of a materialized result own
-    * the returned cache and must unpersist it when done. */
-  private def withBucketRelation(counts: DataFrame, materialize: Boolean)(
-      body: DataFrame => DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val handle = if (materialize) counts.persist(lvl) else counts
-    try {
-      val out = body(handle)
-      if (!materialize) out
-      else {
-        val cached = out.persist(lvl)
-        try { cached.count(); cached }
-        catch { case t: Throwable => cached.unpersist(); throw t }
-      }
-    } finally if (materialize) handle.unpersist()
-  }
-
   /** One row per source doc: left-join the per-doc scores back onto the full
     * id set, coalescing each score column to 0 (token-free docs score 0 — an
     * empty sum). Shared tail of [[dsirWeights]] and [[unigramNll]]. */
@@ -191,20 +168,21 @@ object Sampling {
     * cardinality = `buckets`, so those aggregates broadcast), and the
     * final per-doc sum joins the bucket table back as a broadcast. No
     * corpus self-join, no Window, no driver-side token data.
-    * `materialize = true` (default) persists the shared per-(doc,bucket)
-    * relation for the duration of the computation and releases it before
-    * returning the cached result — the CALLER owns that cache and must
-    * unpersist it; `materialize = false` returns the unexecuted plan (the
-    * tokenize pass appears in multiple branches — explain/audit or lazy
-    * composition only). */
+    * Materialized with the shared per-(doc,bucket) relation released — see
+    * [[materialized]]; the lazy plan takes no persist (the tokenize pass
+    * runs once per branch). */
   def dsirWeights(raw: DataFrame, target: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       buckets: Int = 256,
       materialize: Boolean = true): DataFrame = {
     require(buckets >= 2 && buckets <= (1 << 20),
       s"buckets must be in [2, 2^20], got $buckets")
-    withBucketRelation(bucketCounts(raw, textCol, idCol, buckets),
-        materialize) { handle =>
+    val counts = bucketCounts(raw, textCol, idCol, buckets)
+    val handle =
+      if (materialize) counts.persist(StorageLevel.MEMORY_AND_DISK) else counts
+    // a def: analysing `target` may throw, and the helper still releases
+    // `handle` then
+    def out: DataFrame = {
       // model estimates: bucket-keyed aggregates (<= `buckets` rows each)
       val rc = handle.groupBy(col("bkt")).agg(sum(col("c")).as("cr"))
       val tc = bucketCounts(target, textCol, idCol, buckets)
@@ -227,6 +205,7 @@ object Sampling {
           sum(col("c") * col("lr_micros")).as("weight_micros"))
       allDocsLeft(raw, w, idCol, Seq("n_grams", "weight_micros"))
     }
+    if (materialize) materialized(handle)(out) else out
   }
 
   /** Gumbel-top-k resampling over importance weights — the selection step
@@ -290,8 +269,11 @@ object Sampling {
       materialize: Boolean = true): DataFrame = {
     require(buckets >= 2 && buckets <= (1 << 20),
       s"buckets must be in [2, 2^20], got $buckets")
-    withBucketRelation(bucketCounts(corpus, textCol, idCol, buckets),
-        materialize) { handle =>
+    val counts = bucketCounts(corpus, textCol, idCol, buckets)
+    val handle =
+      if (materialize) counts.persist(StorageLevel.MEMORY_AND_DISK) else counts
+    // a def, as in dsirWeights: analysing `lm` may throw
+    def out: DataFrame = {
       // when lm eq corpus, reuse the (possibly persisted) corpus relation
       val lmCounts =
         if (lm eq corpus) handle else bucketCounts(lm, textCol, idCol, buckets)
@@ -320,5 +302,6 @@ object Sampling {
             .cast("long").as("nll_micros_per_tok"))
       allDocsLeft(corpus, perDoc, idCol, Seq("n_grams", "nll_micros_per_tok"))
     }
+    if (materialize) materialized(handle)(out) else out
   }
 }

@@ -369,14 +369,8 @@ object Similarity {
     * construction (LSH misses some borderline pairs) — measured against the
     * exact product in OpsSpec. `bits <= 0` (the default) scales the signature
     * width with the corpus count ([[autoBits]]) so bucket occupancy stays
-    * bounded as the corpus grows.
-    *
-    * Returns the MATERIALIZED pair set (persisted MEMORY_AND_DISK, already
-    * computed); the corpus-side cache used during candidate generation is
-    * released before returning, so repeated invocations in a long session
-    * don't pin the corpus. Caller may `unpersist()` the (small) result.
-    * `materialize = false` is explain/audit-only — executing that plan
-    * builds an ownerless corpus cache (see Dedup.minhashPairs). */
+    * bounded as the corpus grows. Returns the pair set materialized with
+    * the corpus-side cache released — see [[materialized]]. */
   def nearDupPairsLsh(emb: DataFrame, threshold: Double, dim: Int,
       bits: Int = 0, nTables: Int = 6, seed: Long = 42L,
       maxBucket: Int = 1024, materialize: Boolean = true): DataFrame = {
@@ -397,15 +391,7 @@ object Similarity {
     val candidates = banded
       .groupByKey(r => (r.getInt(0), r.getLong(1)))
       .flatMapGroups { (_: (Int, Long), it: Iterator[org.apache.spark.sql.Row]) =>
-        val ids = it.map(_.getLong(2)).take(maxBucket + 1).toArray
-        if (ids.length > maxBucket) Iterator.empty // degenerate bucket: skip
-        else {
-          java.util.Arrays.sort(ids)
-          for {
-            i <- ids.indices.iterator
-            j <- (i + 1) until ids.length
-          } yield (ids(i), ids(j))
-        }
+        bucketPairs(it.map(_.getLong(2)), maxBucket)(identity)
       }
       .toDF("id_a", "id_b")
       .distinct()
@@ -415,13 +401,7 @@ object Similarity {
       .join(va, "id_a").join(vb, "id_b")
       .filter(cosine(col("emb_a"), col("emb_b")) >= threshold)
       .select(col("id_a"), col("id_b"))
-    if (!materialize) out // plan-only: nothing executed, nothing cached yet
-    else {
-      val cached = out.persist(StorageLevel.MEMORY_AND_DISK)
-      cached.count() // materialize so the corpus cache can be released now
-      vecs.unpersist()
-      cached
-    }
+    if (materialize) materialized(vecs)(out) else out
   }
 
   /** Exact near-duplicate pairs by embedding cosine >= threshold, upper
@@ -444,16 +424,12 @@ object Similarity {
     * (Chernoff), so the broadcast budget holds without the global sort a
     * row_number-exact split would cost. Zero-norm vectors have DEFINED
     * similarity 0.0 (never NaN). The (vec_id, embedding, nrm) projection is
-    * persisted so the B union branches scan the corpus once, then released
-    * after the (small) pair set is materialized — the returned DF is
-    * persisted and already computed; caller may `unpersist()` it. */
+    * persisted so the B union branches scan the corpus once; the pair set
+    * is materialized with that cache released — see [[materialized]]. */
   def nearDupPairs(emb: DataFrame, threshold: Double,
       maxBroadcast: Int = 1 << 20): DataFrame = {
     val (union, nd) = nearDupPairsPlan(emb, threshold, maxBroadcast)
-    val out = union.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize so the corpus-projection cache can be released
-    nd.unpersist()
-    out
+    materialized(nd)(union)
   }
 
   /** The unmaterialized (pairUnion, cachedProjection) pair behind

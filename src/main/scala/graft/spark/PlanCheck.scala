@@ -89,6 +89,14 @@ object PlanCheck {
         materialize = false)
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
     check("d05_minhash (lazy plan)", d05, Seq("InMemoryTableScan"))
+    // d15: the LSH near-dup path must read the embedding projection from the
+    // persisted relation too (banding and both verify sides, one corpus
+    // pass) — lazy plan, and a fixed bits so not even autoBits' count runs
+    val d15 = graft.ops.Similarity.nearDupPairsLsh(
+        spark.read.parquet(s"$sfDir/embeddings.parquet"), 0.45, dim = 64,
+        bits = 8, materialize = false)
+      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+    check("d15_neardup_lsh (lazy plan)", d15, Seq("InMemoryTableScan"))
     spark.catalog.clearCache() // drop plan-only persist markers registered above
 
     // d16/d19: the segment-dedup winner and the per-source quota must be
@@ -176,7 +184,7 @@ object PlanCheck {
     // d23: packing must be the two-phase scan over the sorted RDD (the
     // object handoff prints as SerializeFromObject over Scan[obj]) — a
     // `Window` here would mean the global single-task cumsum crept back in.
-    // NOTE: unlike d04/d05 there is no lazy plan mode — the operator is
+    // NOTE: unlike d04/d05/d15 there is no lazy plan mode — the operator is
     // eager by nature (phase 1 collects per-partition sums), so planOf runs
     // its two narrow passes over (id, count) pairs at this audit's sf. That
     // is the documented cost of auditing it, not an execute-to-audit bug.

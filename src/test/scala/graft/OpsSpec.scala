@@ -755,4 +755,63 @@ class OpsSpec extends AnyFunSuite {
     val got = plan.select("doc_id").as[Long].collect().sorted
     assert(got sameElements Array(11L, 13L))
   }
+
+  test("bucketPairs: a bucket of exactly maxBucket ids yields all C(n,2) ascending pairs, one more yields none") {
+    val cap = 6
+    val ids = Seq(5L, 0L, 3L, 1L, 4L, 2L)
+    val all = for (i <- 0L until 6L; j <- (i + 1) until 6L) yield (i, j)
+    assert(graft.ops.bucketPairs(ids.iterator, cap)(identity).toSeq == all)
+    assert(graft.ops.bucketPairs((ids :+ 6L).iterator, cap)(identity).isEmpty)
+    // the payload rides with its id; a hot bucket is read only to cap + 1
+    val rows = graft.ops.bucketPairs(Iterator((7L, "b"), (2L, "a")), cap)(_._1)
+    assert(rows.toSeq == Seq(((2L, "a"), (7L, "b"))))
+    val hot = Iterator.range(0, 100).map(_.toLong)
+    assert(graft.ops.bucketPairs(hot, cap)(identity).isEmpty)
+    assert(hot.size == 100 - (cap + 1))
+  }
+
+  test("materializing operators release every cache when execution throws") {
+    def boom(): Nothing = throw new IllegalStateException("planted row failure")
+    val badText = udf((id: Long, t: String) => if (id == 3L) boom() else t)
+    // repartitioned: over a bare local relation the optimizer would run the
+    // UDF while planning the first persist, before any cache exists
+    val bad = docs.repartition(2)
+      .select(col("doc_id"), badText(col("doc_id"), col("text")).as("text"))
+    val badVec = udf((id: Long, e: Seq[Float]) => if (id == 40L) boom() else e.toArray)
+    val badEmb = embeddings.repartition(2).select(col("vec_id"),
+      badVec(col("vec_id"), col("embedding")).as("embedding"))
+    val cases: Seq[(String, () => Any)] = Seq(
+      "minhashPairs" -> (() => Dedup.minhashPairs(spark, bad)),
+      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(spark, bad)),
+      "dupWindowStats" -> (() => Dedup.dupWindowStats(bad, n = 3)),
+      "removeDupWindows" -> (() => Dedup.removeDupWindows(bad, n = 3)),
+      "dsirWeights" -> (() => ops.Sampling.dsirWeights(bad, bad)),
+      "unigramNll" -> (() => ops.Sampling.unigramNll(bad, bad)),
+      "nearDupPairsLsh" -> (() =>
+        Similarity.nearDupPairsLsh(badEmb, 0.9, dim = 16, bits = 8)),
+      "nearDupPairs" -> (() => Similarity.nearDupPairs(badEmb, 0.9)))
+    // a failed count can leave a persist marker without a cached RDD, so
+    // check both: no cache entry and no new persistent RDD
+    spark.catalog.clearCache() // earlier tests leave their results cached
+    for ((name, run) <- cases) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[Exception](run())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("planted row failure")),
+        s"$name: unexpected error $e")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cache entry")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$name leaked cached RDDs $leaked")
+    }
+  }
+
+  test("simhashPairs stays lazy: the d06 union reuses its banded exchange") {
+    val pairs = Dedup.simhashPairs(spark, docs, maxHamming = 3)
+    val perDoc = pairs.select(col("doc_a").as("doc_id"))
+      .union(pairs.select(col("doc_b").as("doc_id")))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_neardups"))
+    perDoc.collect()
+    val plan = perDoc.queryExecution.executedPlan.toString
+    assert(plan.contains("ReusedExchange"), plan)
+  }
 }
