@@ -1,6 +1,6 @@
 package graft.html
 
-import java.nio.charset.{Charset => JCharset}
+import java.nio.charset.{Charset => JCharset, StandardCharsets}
 
 /** DOM-walk block discovery: consumes tokenizer events, emits candidate text
   * blocks with boilerpipe-scoring inputs. The analogue of the reference's
@@ -13,7 +13,10 @@ object BlockBuilder {
 
   /** One candidate block, pre-classification. `cellRuns` is non-empty only
     * for captured data tables: per-cell (beginByte, endByte) for the span
-    * table. */
+    * table. `words` and `fingerprint` are taken from the emitted chars in
+    * the same pass that collapses them, so the classifier never re-walks
+    * `text`; tables carry 0 for both (neither the word gate nor the
+    * duplicate pass reads a table). */
   final case class RawBlock(
       tag: String,
       kind: String, // title|paragraph|list_item|table
@@ -24,13 +27,10 @@ object BlockBuilder {
       chars: Int,        // non-whitespace visible chars
       anchorChars: Int,  // non-whitespace chars inside <a>
       dropped: Boolean,  // discovered inside a structurally-dropped subtree
-      cellRuns: Array[(Long, Long)]
+      cellRuns: Array[(Long, Long)],
+      words: Int,        // whitespace-delimited runs, each CJK char one word
+      fingerprint: Long  // 64-bit FNV-1a over the chars of `text`
   )
-
-  // subtrees dropped wholesale (mask-then-detect, reference
-  // /root/reference/src/oarocr/structure.rs:1981-1990)
-  private val dropTags = Set("nav", "aside", "header", "footer", "form",
-    "button", "select", "iframe", "object", "menu", "dialog")
 
   // class/id substrings that mark boilerplate containers (Readability-style
   // negative indicators)
@@ -39,13 +39,12 @@ object BlockBuilder {
     "breadcrumb|promo|advert|ads?|social|share|related|comments?|widget|" +
     "pagination|masthead)(?:$|[\\s_-])")
 
-  private val blockTags = Set("p", "h1", "h2", "h3", "h4", "h5", "h6", "li",
-    "pre", "blockquote", "figcaption", "dt", "dd", "td", "th", "caption",
-    "math")
-
-  private val containerTags = Set("div", "section", "article", "main", "body",
-    "html", "ul", "ol", "dl", "table", "thead", "tbody", "tfoot", "tr",
-    "center", "figure", "details", "summary", "address", "fieldset")
+  // what an open element started, recorded on its stack entry: at most one
+  // of a drop subtree, a block or an anchor
+  private final val StartedNone = 0
+  private final val StartedDrop = 1
+  private final val StartedBlock = 2
+  private final val StartedAnchor = 3
 
   @inline private def titleLevel(tag: String): Int =
     if (tag.length == 2 && tag.charAt(0) == 'h' &&
@@ -56,8 +55,17 @@ object BlockBuilder {
     val out = Vector.newBuilder[RawBlock]
 
     final class Sink extends Tokenizer.Sink {
-      // element stack: (name, startedDrop, startedBlock, startedAnchor)
-      private val stack = new scala.collection.mutable.ArrayBuffer[(String, Boolean, Boolean, Boolean)](64)
+      // element stack: tag id and what the element started (a Started* value)
+      private var stackTag = new Array[Int](64)
+      private var stackStarted = new Array[Int](64)
+      private var depth = 0
+      private def push(tag: Int, started: Int): Unit = {
+        if (depth == stackTag.length) {
+          stackTag = java.util.Arrays.copyOf(stackTag, depth * 2)
+          stackStarted = java.util.Arrays.copyOf(stackStarted, depth * 2)
+        }
+        stackTag(depth) = tag; stackStarted(depth) = started; depth += 1
+      }
       private var dropDepth = 0
       private var anchorDepth = 0
 
@@ -113,24 +121,24 @@ object BlockBuilder {
         // emit a block with the invalid span [-1, -1)
         if (buf.nonEmpty && blkBegin >= 0) {
           out += RawBlock(blkTag, blkKind, blkLevel, buf.result(), blkBegin, blkEnd,
-            blkChars, blkAnchor, blkDropped, Array.empty)
+            blkChars, blkAnchor, blkDropped, Array.empty, buf.words, buf.fingerprint)
         }
         buf.reset()
         blkBegin = -1L; blkEnd = -1L; blkChars = 0; blkAnchor = 0
       }
 
-      private def startBlock(tag: String): Unit = {
+      private def startBlock(tag: Int): Unit = {
         flushBlock()
-        blkTag = tag
-        blkLevel = titleLevel(tag)
+        blkTag = Tags.names(tag)
+        blkLevel = titleLevel(blkTag)
         blkKind =
           if (blkLevel > 0) "title"
-          else if (tag == "li" || tag == "dt" || tag == "dd") "list_item"
-          else if (tag == "pre") "preformatted"
-          else if (tag == "figcaption") "caption"   // rendered *text* (structure.rs:337-343)
-          else if (tag == "math") "formula"         // rendered $$text$$ (structure.rs:310-316)
+          else if (tag == Tags.Li || tag == Tags.Dt || tag == Tags.Dd) "list_item"
+          else if (tag == Tags.Pre) "preformatted"
+          else if (tag == Tags.Figcaption) "caption" // rendered *text* (structure.rs:337-343)
+          else if (tag == Tags.MathTag) "formula"    // rendered $$text$$ (structure.rs:310-316)
           else "paragraph"
-        buf.verbatim = tag == "pre"
+        buf.verbatim = tag == Tags.Pre
         blkDropped = dropDepth > 0
       }
 
@@ -159,53 +167,51 @@ object BlockBuilder {
           // valid [begin, end) range
           out += RawBlock("table", "table", 0, htmlText, tblBegin,
             math.max(tblBegin, endByte),
-            nonWs, 0, tblDroppedCtx, tblCellRuns.toArray)
+            nonWs, 0, tblDroppedCtx, tblCellRuns.toArray, words = 0, fingerprint = 0L)
         }
         tblDepth = 0; tblNested = 0; tblRows = Vector.empty; tblRow = Vector.empty
         tblCellRuns = Vector.empty; tblBegin = -1L
       }
 
-      override def startTag(name: String, ab: Int, ae: Int, selfClosing: Boolean): Unit = {
+      override def startTag(tag: Int, ab: Int, ae: Int, selfClosing: Boolean): Unit = {
+        val flags = Tags.flags(tag)
         if (tblDepth > 0) {
-          name match {
-            // self-closing: no stack entry will ever pop it — counting it
-            // would make the capture's own </table> decrement tblNested
-            // instead of finishing, losing the rest of the document
-            case "table" if !selfClosing => tblNested += 1
-            case "tr" if tblNested == 0 => flushTableRow()
-            case "td" | "th" if tblNested == 0 =>
-              flushTableCell()
-              val attrs = Attrs.parse(html, ab, ae)
-              tblCellSpan = (Attrs.intAttr(attrs, "rowspan", 1),
-                Attrs.intAttr(attrs, "colspan", 1), name == "th")
-              tblCellBuf = new CollapseBuf(32)
-            // line/block boundaries inside a cell separate words the same
-            // way they do in normal flow ('123 Main St<br>Springfield' must
-            // not fuse to 'StSpringfield'); inside a NESTED table (whose
-            // text flattens into the enclosing cell, below) the nested
-            // tr/td boundaries separate the same way
-            case _ if tblCellBuf != null &&
-              (name == "br" || name == "hr" ||
-                name == "tr" || name == "td" || name == "th" ||
-                blockTags.contains(name) || containerTags.contains(name)) =>
-              tblCellBuf.wsHint()
-            case _ => ()
+          // self-closing: no stack entry will ever pop it — counting it
+          // would make the capture's own </table> decrement tblNested
+          // instead of finishing, losing the rest of the document
+          if (tag == Tags.Table && !selfClosing) tblNested += 1
+          else if (tag == Tags.Tr && tblNested == 0) flushTableRow()
+          else if ((tag == Tags.Td || tag == Tags.Th) && tblNested == 0) {
+            flushTableCell()
+            val attrs = Attrs.parse(html, ab, ae)
+            tblCellSpan = (Attrs.intAttr(attrs, "rowspan", 1),
+              Attrs.intAttr(attrs, "colspan", 1), tag == Tags.Th)
+            tblCellBuf = new CollapseBuf(32)
           }
-          if (!selfClosing) stack += ((name, false, false, false))
+          // line/block boundaries inside a cell separate words the same
+          // way they do in normal flow ('123 Main St<br>Springfield' must
+          // not fuse to 'StSpringfield'); inside a NESTED table (whose
+          // text flattens into the enclosing cell, below) the nested
+          // tr/td boundaries separate the same way
+          else if (tblCellBuf != null &&
+            (tag == Tags.Br || tag == Tags.Hr || tag == Tags.Tr ||
+              tag == Tags.Td || tag == Tags.Th ||
+              (flags & (Tags.Block | Tags.Container)) != 0))
+            tblCellBuf.wsHint()
+          if (!selfClosing) push(tag, StartedNone)
           return
         }
 
-        var startedDrop = false
-        var startedBlock = false
-        var startedAnchor = false
+        var started = StartedNone
 
-        if (dropTags.contains(name)) {
+        if ((flags & Tags.Drop) != 0) {
           flushBlock()
-          dropDepth += 1; startedDrop = true
-        } else if ((containerTags.contains(name) || blockTags.contains(name)) && hasDropClass(ab, ae)) {
+          dropDepth += 1; started = StartedDrop
+        } else if ((flags & (Tags.Container | Tags.Block)) != 0 && hasDropClass(ab, ae)) {
           flushBlock()
-          dropDepth += 1; startedDrop = true
+          dropDepth += 1; started = StartedDrop
         }
+        val startedDrop = started == StartedDrop
         // bare text directly inside the drop subtree (no intervening block/
         // container tag to reset the state) must accumulate as DROPPED —
         // without this it kept the enclosing block's dropped=false and
@@ -214,7 +220,7 @@ object BlockBuilder {
         if (startedDrop) blkDropped = true
 
         if (!startedDrop) {
-          if (name == "table") {
+          if (tag == Tags.Table) {
             val attrs = Attrs.parse(html, ab, ae)
             // "wired" table: explicitly marked data (border attr / ARIA role);
             // "wireless": CSS-styled data table detected structurally by the
@@ -232,14 +238,14 @@ object BlockBuilder {
               tblDepth = 1
               tblDroppedCtx = dropDepth > 0
               tblBegin = ab.toLong
-              stack += ((name, false, false, false))
+              push(tag, StartedNone)
               return
             } else {
               flushBlock() // layout table / contentless self-closing table
             }
-          } else if (name == "a") {
-            anchorDepth += 1; startedAnchor = true
-          } else if (name == "img") {
+          } else if (tag == Tags.A) {
+            anchorDepth += 1; started = StartedAnchor
+          } else if (tag == Tags.Img) {
             // figure harvesting: an <img> with non-empty alt is a standalone
             // figure element whose caption is the alt text — the domain
             // analogue of the reference's Image/Chart layout element rendered
@@ -253,12 +259,12 @@ object BlockBuilder {
               if (nonWs > 0) {
                 flushBlock()
                 out += RawBlock("img", "figure", 0, cb.result(), ab.toLong,
-                  ae.toLong, nonWs, 0, dropDepth > 0, Array.empty)
+                  ae.toLong, nonWs, 0, dropDepth > 0, Array.empty, cb.words, cb.fingerprint)
               }
             }
-          } else if (blockTags.contains(name)) {
-            startBlock(name); startedBlock = true
-          } else if (containerTags.contains(name)) {
+          } else if ((flags & Tags.Block) != 0) {
+            startBlock(tag); started = StartedBlock
+          } else if ((flags & Tags.Container) != 0) {
             if (blkKind == "preformatted") {
               // block content inside <pre> is invalid HTML that browsers
               // render as part of the pre: keep verbatim mode and the
@@ -266,17 +272,17 @@ object BlockBuilder {
               flushBlock()
             } else {
               flushBlock()
-              blkTag = name; blkKind = "paragraph"; blkLevel = 0
+              blkTag = Tags.names(tag); blkKind = "paragraph"; blkLevel = 0
               buf.verbatim = false
               blkDropped = dropDepth > 0
             }
-          } else if (name == "br" || name == "hr") {
+          } else if (tag == Tags.Br || tag == Tags.Hr) {
             buf.wsHint()
-            if (name == "hr") flushBlock()
+            if (tag == Tags.Hr) flushBlock()
           }
           // other inline tags: text flows through
         }
-        if (!selfClosing) stack += ((name, startedDrop, startedBlock, startedAnchor))
+        if (!selfClosing) push(tag, started)
         else {
           // a self-closing element CONTAINS nothing, and with no stack entry
           // its depth increments would never be undone — real crawled HTML
@@ -285,20 +291,21 @@ object BlockBuilder {
           // a leaked anchorDepth counts every later char as link text and a
           // leaked dropDepth drops the entire rest of the document
           if (startedDrop) { dropDepth -= 1; blkDropped = dropDepth > 0 }
-          if (startedAnchor) anchorDepth = math.max(0, anchorDepth - 1)
+          if (started == StartedAnchor) anchorDepth = math.max(0, anchorDepth - 1)
         }
       }
 
-      override def endTag(name: String): Unit = {
+      override def endTag(tag: Int): Unit = {
         // pop to nearest matching open element; ignore stray end tags
-        var i = stack.length - 1
-        while (i >= 0 && stack(i)._1 != name) i -= 1
+        var i = depth - 1
+        while (i >= 0 && stackTag(i) != tag) i -= 1
         if (i < 0) return
         // unwind everything above (implicitly closed malformed elements)
-        var j = stack.length - 1
-        while (j >= i) {
-          val (nm, sd, sb, sa) = stack(j)
-          if (sd) {
+        while (depth > i) {
+          depth -= 1
+          val nm = stackTag(depth)
+          val started = stackStarted(depth)
+          if (started == StartedDrop) {
             // the drop subtree's own bare text flushes AS dropped here —
             // buffered drop text must not fuse (undropped) with whatever
             // follows the closing tag
@@ -306,29 +313,24 @@ object BlockBuilder {
             dropDepth -= 1
             blkDropped = dropDepth > 0
           }
-          if (sa) anchorDepth = math.max(0, anchorDepth - 1)
+          if (started == StartedAnchor) anchorDepth = math.max(0, anchorDepth - 1)
           if (tblDepth > 0) {
-            nm match {
-              case "table" =>
-                // finish the capture whenever the captured table's element is
-                // popped — even implicitly by a stray end tag below it
-                if (tblNested > 0) tblNested -= 1
-                else finishTable(endOfCurrentTag())
-              case "tr" if tblNested == 0 => flushTableRow()
-              case "td" | "th" if tblNested == 0 => flushTableCell()
-              case _ => ()
-            }
-          } else if (sb) {
+            if (nm == Tags.Table) {
+              // finish the capture whenever the captured table's element is
+              // popped — even implicitly by a stray end tag below it
+              if (tblNested > 0) tblNested -= 1
+              else finishTable(endOfCurrentTag())
+            } else if (nm == Tags.Tr && tblNested == 0) flushTableRow()
+            else if ((nm == Tags.Td || nm == Tags.Th) && tblNested == 0) flushTableCell()
+          } else if (started == StartedBlock) {
             flushBlock()
             blkTag = "body"; blkKind = "paragraph"; blkLevel = 0
             buf.verbatim = false
             blkDropped = dropDepth > 0
-          } else if (containerTags.contains(nm)) {
+          } else if ((Tags.flags(nm) & Tags.Container) != 0) {
             flushBlock()
             blkDropped = dropDepth > 0
           }
-          stack.remove(j)
-          j -= 1
         }
       }
 
@@ -389,8 +391,6 @@ object BlockBuilder {
     * signature of page-layout tables. Scan is capped at 64 KB; a table bigger
     * than that without resolving is treated as layout (safe default).
     */
-  private val probeBlockTags = Set("div", "p", "ul", "ol", "dl", "section",
-    "article", "h1", "h2", "h3", "h4", "h5", "h6")
   private[html] def probeDataTable(html: Array[Byte], from: Int): Boolean = {
     val limit = math.min(html.length, from + 64 * 1024)
     var i = from
@@ -414,10 +414,8 @@ object BlockBuilder {
         while (j < limit && ((html(j) >= 'a' && html(j) <= 'z') ||
           (html(j) >= 'A' && html(j) <= 'Z') || (html(j) >= '0' && html(j) <= '9'))) j += 1
         if (j > ns) {
-          val sb = new java.lang.StringBuilder(j - ns)
-          var k = ns
-          while (k < j) { sb.append(lower(html(k))); k += 1 }
-          val name = sb.toString
+          val tag = Tags.lookup(html, ns, j) // -1: a name the probe ignores
+          val rawText = !closing && (tag == Tags.Script || tag == Tags.Style)
           // quote-aware end of THIS tag: markup inside quoted attribute
           // values (onclick="show('<div>')") must not be parsed as tags by
           // the probe — the real tokenizer honors quotes, so a probe that
@@ -432,15 +430,16 @@ object BlockBuilder {
             else if (d == '>') tagEnd = k2
             k2 += 1
           }
-          if (name == "table") {
+          if (tag == Tags.Table) {
             // the probed table's own close: verdict on what was seen; an
             // OPENING table first means a nested table — the page-layout
             // signature, never a data table (so no depth tracking needed:
             // the scan ends at the first table tag either way)
             if (closing) return th >= 2 && tr >= 2
             return false
-          } else if (!closing && (name == "script" || name == "style")) {
+          } else if (rawText) {
             // raw-text element: skip to its close tag (case-insensitive)
+            val name = Tags.names(tag)
             var k = j
             var done = false
             while (!done && k + name.length + 2 < limit) {
@@ -457,13 +456,13 @@ object BlockBuilder {
             }
             i = if (done) k else limit
           } else if (!closing) {
-            if (name == "th") th += 1
-            else if (name == "tr") tr += 1
-            else if (probeBlockTags.contains(name)) return false
+            if (tag == Tags.Th) th += 1
+            else if (tag == Tags.Tr) tr += 1
+            else if ((Tags.flags(tag) & Tags.ProbeBlock) != 0) return false
           }
           // resume past the tag's quote-aware '>' (script/style set their
           // own raw-text skip target above; don't walk it back)
-          if (name != "script" && name != "style") i = math.max(i, tagEnd)
+          if (tag != Tags.Script && tag != Tags.Style) i = math.max(i, tagEnd)
         }
         }
       }
@@ -472,17 +471,37 @@ object BlockBuilder {
     false // unterminated / oversized: layout (safe default)
   }
 
-  @inline private[html] def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\u00a0' || Character.isWhitespace(c)
+  /** `Character.isWhitespace` on 0..127: 0x09-0x0D and 0x1C-0x20. */
+  private val AsciiWs: Array[Boolean] = Array.tabulate(128)(c =>
+    (c >= 0x09 && c <= 0x0D) || (c >= 0x1C && c <= 0x20))
 
-  /** Whitespace-collapsing accumulator with fused entity decoding \u2014 the hot
-    * path writes each visible char exactly once (no intermediate entity-decoded
-    * or pre-collapse strings; those copies dominated allocation in profiling).
-    * Collapse semantics identical to `collapse`: leading/trailing ws dropped,
-    * runs fold to one space. */
+  /** Collapsible whitespace: Java whitespace plus NBSP. */
+  @inline private def isWs(c: Char): Boolean =
+    if (c < 128) AsciiWs(c) else c == '\u00a0' || Character.isWhitespace(c)
+
+  private final val FpSeed = 0xcbf29ce484222325L
+  private final val FpPrime = 0x100000001b3L
+
+  /** Whitespace-collapsing accumulator with fused entity decoding — the hot
+    * path writes each visible char exactly once into a growable char array
+    * (no intermediate entity-decoded or pre-collapse strings; those copies
+    * dominated allocation in profiling). Leading/trailing ws dropped, runs
+    * fold to one space.
+    *
+    * The same pass keeps, over the chars emitted since the last `reset`:
+    *   - `words`: whitespace-delimited runs (Java whitespace), each CJK char
+    *     one word — the reference's CJK-aware segmentation
+    *     (reference src/oarocr/ocr.rs:988-995);
+    *   - `fingerprint`: 64-bit FNV-1a over the UTF-16 chars, for the
+    *     classifier's duplicate pass. */
   private[html] final class CollapseBuf(cap: Int) {
-    private val buf = new java.lang.StringBuilder(cap)
+    private var buf = new Array[Char](math.max(cap, 16))
+    private var len = 0
     private var pendingSpace = false
+    private var inWord = false
+    private var nWords = 0
+    private var fp = FpSeed
+    private var nonWs = 0 // non-ws chars put since construction
     /** verbatim mode (<pre>): whitespace preserved exactly — the reference
       * keeps special-content blocks raw
       * (/root/reference/src/domain/structure.rs:310-316). */
@@ -491,72 +510,177 @@ object BlockBuilder {
     // which outlives a mid-block flush (an <hr> or nested container inside
     // <pre> must not flip the rest of the pre to collapsed whitespace);
     // every blkTag (re)assignment site sets it explicitly
-    def reset(): Unit = { buf.setLength(0); pendingSpace = false }
-    @inline def put(c: Char): Unit =
-      if (verbatim) buf.append(c)
-      else if (isWs(c)) { if (buf.length() > 0) pendingSpace = true }
-      else {
-        if (pendingSpace) { buf.append(' '); pendingSpace = false }
-        buf.append(c)
-      }
+    def reset(): Unit = {
+      len = 0; pendingSpace = false; inWord = false; nWords = 0; fp = FpSeed
+    }
     /** a soft word-break (e.g. <br>): collapses like source whitespace */
-    def wsHint(): Unit = if (buf.length() > 0) pendingSpace = true
-    def nonEmpty: Boolean = buf.length() > 0
-    def result(): String = buf.toString
-    /** ASCII fast path: UTF-8, US-ASCII and windows-1252 are all
-      * ASCII-transparent, so runs of bytes < 0x80 append without an
-      * intermediate decoded String (the dominant case on web text). The
-      * first high byte or '&' falls back to charset decode + putRun for the
-      * remainder of the run. Returns non-ws chars appended. */
+    def wsHint(): Unit = if (len > 0) pendingSpace = true
+    def nonEmpty: Boolean = len > 0
+    def result(): String = new String(buf, 0, len)
+    def words: Int = nWords
+    def fingerprint: Long = fp
+
+    /** Room for `n` more chars plus a pending space: one check per run. A
+      * run never emits more chars than it has bytes or chars, since every
+      * entity is longer than its replacement. */
+    private def ensure(n: Int): Unit =
+      if (len + n + 1 > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + n + 1))
+
+    /** Emit one char (capacity already ensured). */
+    private def put(c: Char): Unit = {
+      val ws = isWs(c)
+      if (!ws) nonWs += 1
+      if (verbatim) {
+        buf(len) = c; len += 1; fp = (fp ^ c) * FpPrime
+        if (c >= 0x3040 && graft.score.Classifier.isCjk(c)) { nWords += 1; inWord = false }
+        // NBSP is kept here but is not Java whitespace: it is part of a word
+        else if (if (c < 128) ws else Character.isWhitespace(c)) inWord = false
+        else if (!inWord) { nWords += 1; inWord = true }
+      } else if (ws) { if (len > 0) pendingSpace = true }
+      else {
+        if (pendingSpace) {
+          buf(len) = ' '; len += 1; fp = (fp ^ ' ') * FpPrime
+          pendingSpace = false; inWord = false
+        }
+        buf(len) = c; len += 1; fp = (fp ^ c) * FpPrime
+        if (c >= 0x3040 && graft.score.Classifier.isCjk(c)) { nWords += 1; inWord = false }
+        else if (!inWord) { nWords += 1; inWord = true }
+      }
+    }
+
+    /** Appends a run of raw bytes; returns the non-ws chars appended.
+      *
+      * UTF-8, US-ASCII and windows-1252 are all ASCII-transparent, so ASCII
+      * bytes append directly with one table lookup each (the dominant case on
+      * web text). Entities whose body is ASCII, and, for UTF-8, well-formed
+      * multi-byte sequences, decode in place. Anything else (a malformed or
+      * non-UTF-8 high byte, a high byte inside an entity's window) decodes
+      * the remainder of the run once and takes the String path, so the
+      * result always equals `putRun(Charset.decode(...))` of the run. */
     def putRunBytes(html: Array[Byte], begin: Int, end: Int,
         cs: java.nio.charset.Charset): Int = {
       if (!Charset.asciiTransparent(cs))
         return putRun(Charset.decode(html, begin, end, cs))
-      var nonWs = 0
-      var i = begin
+      ensure(end - begin)
+      val before = nonWs
+      val utf8 = cs eq StandardCharsets.UTF_8
+      var i = putAscii(html, begin, end)
       while (i < end) {
-        val b = html(i)
-        if (b < 0 || b == '&') {
-          // high byte (multi-byte charset territory) or entity: decode the
-          // remainder once and reuse the string path
-          return nonWs + putRun(Charset.decode(html, i, end, cs))
-        }
-        val c = b.toChar
-        put(c)
-        if (!isWs(c)) nonWs += 1
-        i += 1
+        val next =
+          if (html(i) == '&') putEntity(html, i, end)
+          else if (utf8) putUtf8(html, i, end)
+          else -1
+        if (next < 0) {
+          putRun(Charset.decode(html, i, end, cs))
+          i = end
+        } else i = putAscii(html, next, end)
       }
-      nonWs
+      nonWs - before
+    }
+
+    /** Appends ASCII bytes from `begin` up to the first '&', high byte or
+      * `end`; returns where it stopped. The loop state lives in locals. */
+    private def putAscii(html: Array[Byte], begin: Int, end: Int): Int = {
+      val a = buf
+      var l = len
+      var pend = pendingSpace
+      var inW = inWord
+      var w = nWords
+      var h = fp
+      var n = nonWs
+      var i = begin
+      var b: Byte = 0
+      if (verbatim) {
+        while (i < end && { b = html(i); b >= 0 && b != '&' }) {
+          val c = b.toChar
+          a(l) = c; l += 1; h = (h ^ c) * FpPrime
+          if (AsciiWs(b)) inW = false
+          else { n += 1; if (!inW) { w += 1; inW = true } }
+          i += 1
+        }
+      } else {
+        while (i < end && { b = html(i); b >= 0 && b != '&' }) {
+          if (AsciiWs(b)) { if (l > 0) pend = true }
+          else {
+            if (pend) { a(l) = ' '; l += 1; h = (h ^ ' ') * FpPrime; pend = false; inW = false }
+            val c = b.toChar
+            a(l) = c; l += 1; h = (h ^ c) * FpPrime
+            n += 1
+            if (!inW) { w += 1; inW = true }
+          }
+          i += 1
+        }
+      }
+      len = l; pendingSpace = pend; inWord = inW; nWords = w; fp = h; nonWs = n
+      i
+    }
+
+    /** The entity or literal '&' at `amp`, decided as `Entities.matchAt`
+      * decides it on the decoded run; returns the index after it, or -1 when
+      * a high byte inside the window leaves that to the String path. */
+    private def putEntity(html: Array[Byte], amp: Int, end: Int): Int = {
+      val limit = math.min(end, amp + Entities.MaxLen + 2)
+      var k = amp + 1
+      while (k < limit && html(k) != ';') {
+        if (html(k) < 0) return -1
+        k += 1
+      }
+      val rep =
+        if (k < limit) Entities.replacement(new String(html, amp + 1, k - amp - 1, StandardCharsets.ISO_8859_1))
+        else null
+      if (rep == null) { put('&'); amp + 1 }
+      else {
+        var j = 0
+        while (j < rep.length) { put(rep.charAt(j)); j += 1 }
+        k + 1
+      }
+    }
+
+    /** The well-formed UTF-8 sequence at `i`; returns the index after it,
+      * or -1 when the bytes there are not one (the decoder's replacement
+      * rules then apply, on the String path). */
+    private def putUtf8(html: Array[Byte], i: Int, end: Int): Int = {
+      @inline def cont(k: Int): Int =
+        if (k < end && (html(k) & 0xc0) == 0x80) html(k) & 0x3f else -1
+      val b0 = html(i) & 0xff
+      if (b0 >= 0xc2 && b0 <= 0xdf) {
+        val c1 = cont(i + 1)
+        if (c1 < 0) -1 else { put(((b0 & 0x1f) << 6 | c1).toChar); i + 2 }
+      } else if (b0 >= 0xe0 && b0 <= 0xef) {
+        val c1 = cont(i + 1); val c2 = cont(i + 2)
+        val cp = (b0 & 0x0f) << 12 | c1 << 6 | c2
+        if (c1 < 0 || c2 < 0 || cp < 0x800 || (cp >= 0xd800 && cp <= 0xdfff)) -1
+        else { put(cp.toChar); i + 3 }
+      } else if (b0 >= 0xf0 && b0 <= 0xf4) {
+        val c1 = cont(i + 1); val c2 = cont(i + 2); val c3 = cont(i + 3)
+        val cp = (b0 & 0x07) << 18 | c1 << 12 | c2 << 6 | c3
+        if (c1 < 0 || c2 < 0 || c3 < 0 || cp < 0x10000 || cp > 0x10ffff) -1
+        else { put(Character.highSurrogate(cp)); put(Character.lowSurrogate(cp)); i + 4 }
+      } else -1
     }
 
     /** Append a decoded-charset run, decoding entities inline; returns the
       * number of non-whitespace chars appended (anchor/char accounting). */
     def putRun(s: String): Int = {
-      var nonWs = 0
-      var i = 0
       val n = s.length
+      ensure(n)
+      val before = nonWs
+      var i = 0
       while (i < n) {
         val c = s.charAt(i)
-        if (c == '&') {
-          val m = Entities.matchAt(s, i)
-          if (m != null) {
-            val rep = m._1
-            var k = 0
-            while (k < rep.length) {
-              val rc = rep.charAt(k)
-              put(rc)
-              if (!isWs(rc)) nonWs += 1
-              k += 1
-            }
-            i += m._2
-          } else { put(c); nonWs += 1; i += 1 }
+        val m = if (c == '&') Entities.matchAt(s, i) else null
+        if (m != null) {
+          val rep = m._1
+          var k = 0
+          while (k < rep.length) { put(rep.charAt(k)); k += 1 }
+          i += m._2
         } else {
           put(c)
-          if (!isWs(c)) nonWs += 1
           i += 1
         }
       }
-      nonWs
+      nonWs - before
     }
   }
 

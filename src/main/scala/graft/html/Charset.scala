@@ -48,18 +48,33 @@ object Charset {
     // honor charset= ONLY inside a <meta ...> tag (the HTML meta prescan):
     // the bare substring search let a URL query string, comment, or code
     // sample in the first 2 KB ('<a href="/x?charset=big5">') hijack the
-    // page decoding and mojibake every non-ASCII run
-    var at = head.indexOf(key)
-    while (at >= 0 && {
-      val lt = head.lastIndexOf('<', at)
-      val inMeta = lt >= 0 && head.regionMatches(lt, "<meta", 0, 5) &&
-        lt + 5 < head.length &&
-        (Character.isWhitespace(head.charAt(lt + 5)) || head.charAt(lt + 5) == '/') && {
-          val gt = head.indexOf('>', lt)
-          gt < 0 || gt > at
+    // page decoding and mojibake every non-ASCII run. A meta tag ends at its
+    // first '>' outside quotes (content="x>y; charset=..." is one tag), and
+    // <!-- --> regions are skipped: a commented-out meta declares nothing.
+    var at = -1
+    var lt = head.indexOf('<')
+    while (at < 0 && lt >= 0) {
+      var next = lt + 1
+      if (head.startsWith("<!--", lt)) {
+        // the comment's own dashes may close it: <!--> and <!---> end there
+        val close = head.indexOf("-->", lt + 2)
+        next = if (close < 0) head.length else close + 3
+      } else if (head.startsWith("<meta", lt) && lt + 5 < head.length &&
+          (Character.isWhitespace(head.charAt(lt + 5)) || head.charAt(lt + 5) == '/')) {
+        var gt = lt + 5
+        var quote = 0.toChar
+        while (gt < head.length && (quote != 0 || head.charAt(gt) != '>')) {
+          val c = head.charAt(gt)
+          if (quote != 0) { if (c == quote) quote = 0 }
+          else if (c == '"' || c == '\'') quote = c
+          gt += 1
         }
-      !inMeta
-    }) at = head.indexOf(key, at + 1)
+        val k = head.indexOf(key, lt)
+        if (k >= 0 && k < gt) at = k
+        next = gt
+      }
+      lt = head.indexOf('<', next)
+    }
     if (at >= 0) {
       var s = at + key.length
       while (s < head.length && (head.charAt(s) == '"' || head.charAt(s) == '\'' || head.charAt(s) == ' ')) s += 1

@@ -31,7 +31,6 @@ final case class Page(
   *
   * @param idx         document-order index (depth-first), stable through shuffles
   * @param tag         lower-cased element name that opened the block
-  * @param path        '/'-joined ancestor tag path (diagnostic)
   * @param kind        semantic class: title|paragraph|list_item|table_cell|
   *                    table|pdf_fragment|other
   * @param level       title level 1..6 when kind==title else 0
@@ -44,7 +43,6 @@ final case class Page(
 final case class Block(
     idx: Int,
     tag: String,
-    path: String,
     kind: String,
     level: Int,
     chars: Int,

@@ -44,27 +44,24 @@ object Classifier {
   val DupMinChars = 40
 
   def classify(raw: Vector[RawBlock], profile: Profile = Article): Vector[Block] = {
-    val scored = classifyScores(raw, profile)
     // overlap-removal analogue (/root/reference/src/domain/structure.rs:1013-1046
     // via SURVEY §2.6): the same long text appearing twice in the tree
     // (duplicated desktop/mobile markup, reflowed clones) keeps only its
     // first occurrence. Tables are exempt (cell spans are positional).
-    val seen = scala.collection.mutable.HashSet.empty[String]
-    scored.map { b =>
-      if (b.keep && b.kind != "table" && b.chars >= DupMinChars && !seen.add(b.text))
-        b.copy(keep = false)
-      else b
+    // Texts are looked up by the fingerprint BlockBuilder took while
+    // emitting them; a hit is confirmed with String.equals, so a
+    // fingerprint collision never drops a block.
+    val seen = scala.collection.mutable.LongMap.empty[List[String]]
+    def firstOccurrence(b: RawBlock): Boolean = {
+      val prior = seen.getOrElse(b.fingerprint, Nil)
+      !prior.contains(b.text) && { seen.update(b.fingerprint, b.text :: prior); true }
     }
-  }
-
-  private def classifyScores(raw: Vector[RawBlock], profile: Profile): Vector[Block] =
     raw.zipWithIndex.map { case (b, i) =>
       val linkDensity =
         if (b.chars == 0) 0.0 else b.anchorChars.toDouble / b.chars
       val lines = math.max(1.0, math.ceil(b.chars / LineWidth))
       val textDensity = b.chars / lines
-      val words = countWords(b.text)
-      val keep =
+      val gated =
         if (b.dropped) false
         else if (b.chars == 0) false
         else b.kind match {
@@ -73,30 +70,16 @@ object Classifier {
           case "title" => b.chars >= 2 && linkDensity < profile.titleMaxLinkDensity
           case "figure" | "formula" => true // harvested alt/math text IS content; no length gate
           case "caption" => linkDensity <= profile.maxLinkDensity // captions are short by nature: no word minimum
-          case _       => linkDensity <= profile.maxLinkDensity && words >= profile.minContentWords
+          case _       => linkDensity <= profile.maxLinkDensity && b.words >= profile.minContentWords
         }
+      val keep = gated &&
+        (b.kind == "table" || b.chars < DupMinChars || firstOccurrence(b))
       Block(
-        idx = i, tag = b.tag, path = b.tag, kind = b.kind, level = b.level,
+        idx = i, tag = b.tag, kind = b.kind, level = b.level,
         chars = b.chars, anchorChars = b.anchorChars,
         textDensity = textDensity, linkDensity = linkDensity,
         keep = keep, text = b.text)
     }
-
-  /** Word count: whitespace-delimited runs; each CJK codepoint counts as one
-    * word (the reference's CJK-aware segmentation,
-    * /root/reference/src/oarocr/ocr.rs:988-995). */
-  def countWords(s: String): Int = {
-    var n = 0
-    var inWord = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (isCjk(c)) { n += 1; inWord = false }
-      else if (Character.isWhitespace(c)) inWord = false
-      else if (!inWord) { n += 1; inWord = true }
-      i += 1
-    }
-    n
   }
 
   /** CJK ranges per the reference (/root/reference/src/oarocr/ocr.rs:988-995). */

@@ -85,7 +85,8 @@ object ExtractMain {
     * the driver reads the final map once after the write action. */
   final class UnitStatsAcc
       extends org.apache.spark.util.AccumulatorV2[(Int, Array[Long]), Map[Int, Array[Long]]] {
-    private val m = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+    private val m = scala.collection.mutable.LongMap.empty[Array[Long]]
+    private def counters(unit: Long): Array[Long] = m.getOrElseUpdate(unit, new Array[Long](5))
     override def isZero: Boolean = m.isEmpty
     override def copy(): UnitStatsAcc = {
       val c = new UnitStatsAcc
@@ -94,21 +95,24 @@ object ExtractMain {
     }
     override def reset(): Unit = m.clear()
     override def add(v: (Int, Array[Long])): Unit = {
-      val arr = m.getOrElseUpdate(v._1, new Array[Long](5))
+      val arr = counters(v._1)
       var i = 0
       while (i < 5) { arr(i) += v._2(i); i += 1 }
     }
+    /** One output row, counted in place. */
+    def tally(unit: Int, ok: Boolean, bytes: Long, chars: Int): Unit = {
+      val arr = counters(unit)
+      arr(0) += 1
+      if (ok) arr(1) += 1 else arr(2) += 1
+      arr(3) += bytes
+      arr(4) += chars
+    }
     override def merge(other: org.apache.spark.util.AccumulatorV2[(Int, Array[Long]), Map[Int, Array[Long]]]): Unit =
       other match {
-        case o: UnitStatsAcc =>
-          for ((k, v) <- o.m) {
-            val arr = m.getOrElseUpdate(k, new Array[Long](5))
-            var i = 0
-            while (i < 5) { arr(i) += v(i); i += 1 }
-          }
+        case o: UnitStatsAcc => for ((k, v) <- o.m) add((k.toInt, v))
         case _ => throw new UnsupportedOperationException(s"cannot merge ${other.getClass}")
       }
-    override def value: Map[Int, Array[Long]] = m.toMap
+    override def value: Map[Int, Array[Long]] = m.iterator.map { case (k, v) => k.toInt -> v }.toMap
   }
 
   /** Exact per-unit lineage recomputed from the written scratch output (one
@@ -158,14 +162,19 @@ object ExtractMain {
       if (committed.isEmpty) pages // fresh run: no filter at all
       else pages.filter(unitOf.isin(pending: _*)).as[Page]
     val extracted = ExtractJob.run(slice, a.salt, a.sizeSort)
-    // lineage counters ride INSIDE the write job via a per-unit accumulator
-    // on a pass-through row map — one pass over the output total, no
-    // second scan of scratch (result-stage accumulator updates are applied
-    // once per successful partition; speculation is off). Exactly-once is
-    // AUDITED after the write: acc row total vs the footer-metadata count of
-    // what was written, with readbackStats as the exact fallback on mismatch.
+    // lineage counters ride INSIDE the write job: an always-true filter
+    // whose non-deterministic UDF tallies the four scalar columns the
+    // lineage needs into a per-unit accumulator — one pass over the output
+    // total, no row decode/re-encode and no second scan of scratch
+    // (result-stage accumulator updates are applied once per successful
+    // partition; speculation is off). Exactly-once is AUDITED after the
+    // write: acc row total vs the footer-metadata count of what was written,
+    // with readbackStats as the exact fallback on mismatch.
     val acc = new UnitStatsAcc
     spark.sparkContext.register(acc, "unit-lineage")
+    val tally = udf { (unit: Int, ok: Boolean, bytes: Long, chars: Int) =>
+      acc.tally(unit, ok, bytes, chars); true
+    }.asNondeterministic()
     val out = extracted.toDF()
       // the SAME unitOf val as the resume filter above — a re-typed copy
       // here could silently diverge under a one-sided edit, writing rows
@@ -173,25 +182,17 @@ object ExtractMain {
       .withColumn("unit", unitOf)
       .withColumn("crawl_date", to_date(col("warc_ts")))
     val schema = out.schema
-    val (ui, ei, bi, ti) = (schema.fieldIndex("unit"), schema.fieldIndex("error"),
-      schema.fieldIndex("htmlBytes"), schema.fieldIndex("text"))
-    out.mapPartitions { it =>
-      it.map { r =>
-        val err = r.getString(ei)
-        val text = r.getString(ti)
-        val ok = err == null || err.isEmpty
-        acc.add((r.getInt(ui), Array(
-          1L,
-          if (ok) 1L else 0L,
-          if (ok) 0L else 1L,
-          r.getLong(bi),
-          // code points, matching SQL length() semantics
-          if (text == null) 0L else text.codePointCount(0, text.length).toLong)))
-        r
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    // a row the UDF is not called on (null input) is still written, and,
+    // uncounted, trips the audit below
+    out.filter(coalesce(tally(col("unit"),
+        col("error").isNull || col("error") === "",
+        col("htmlBytes"),
+        // code points, as readbackStats counts them
+        coalesce(length(col("text")), lit(0))), lit(true)))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("unit")
+      // every page text is unique: a dictionary on `text` always falls back
+      .option("parquet.enable.dictionary#text", "false")
       .parquet(scratch)
     // exactly-once audit: accumulator updates apply once per successful
     // result-stage partition, but a stage RETRY (fetch failure on a real

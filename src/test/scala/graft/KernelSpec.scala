@@ -336,6 +336,21 @@ class KernelSpec extends AnyFunSuite {
     assert(d3.declared && d3.charset == UTF_8, d3.toString)
   }
 
+  test("charset: the meta prescan honors quotes and skips comments") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    // a quoted '>' does not end the meta tag
+    val quoted = "<html><head><meta content=\"x>y; charset=windows-1252\"></head>".getBytes(UTF_8)
+    val d = Charset.sniff(quoted)
+    assert(d.declared && d.charset.name == "windows-1252", d.toString)
+    // a commented-out meta declares nothing; a later real one still counts
+    val commented = "<html><head><!-- <meta charset=big5> --><title>t</title></head>".getBytes(UTF_8)
+    val d2 = Charset.sniff(commented)
+    assert(d2.charset == UTF_8 && !d2.declared, d2.toString)
+    val after = "<!-- <meta charset=big5> --><!--><meta charset=\"windows-1252\">".getBytes(UTF_8)
+    val d3 = Charset.sniff(after)
+    assert(d3.declared && d3.charset.name == "windows-1252", d3.toString)
+  }
+
   test("tables: nested-table text flattens into the enclosing cell") {
     val html = "<table border='1'><tr><td>outer<table><tr><td>inner one</td>" +
       "<td>inner two</td></tr></table></td><td>plain</td></tr></table>"
@@ -504,9 +519,69 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("classifier: cjk word counting") {
-    assert(Classifier.countWords("中文词") == 3)
-    assert(Classifier.countWords("two words") == 2)
-    assert(Classifier.countWords("mix 中文 ok") == 4)
+    // the word count BlockBuilder takes while emitting each block's text
+    def words(text: String) = blocksOf(s"<p>$text</p>").map(_.words)
+    assert(words("中文词") == Vector(3))
+    assert(words("two words") == Vector(2))
+    assert(words("mix 中文 ok") == Vector(4))
+    assert(words("  spaced\n\tout  ") == Vector(2))
+  }
+
+  test("duplicate pass: a fingerprint hit is confirmed by equals") {
+    val long = "a paragraph long enough for the duplicate content pass"
+    def raw(text: String, fp: Long) = BlockBuilder.RawBlock("p", "paragraph", 0, text,
+      0L, 1L, text.count(!_.isWhitespace), 0, dropped = false, Array.empty,
+      words = 9, fingerprint = fp)
+    val other = long.reverse
+    // same text: the repeat is dropped; a colliding fingerprint over a
+    // different text keeps both
+    assert(Classifier.classify(Vector(raw(long, 7L), raw(long, 7L))).map(_.keep) == Vector(true, false))
+    assert(Classifier.classify(Vector(raw(long, 7L), raw(other, 7L))).map(_.keep) == Vector(true, true))
+    // and the fingerprints BlockBuilder takes agree exactly when texts do
+    val bs = blocksOf(s"<p>$long</p><div>$long</div><p>$other</p>")
+    assert(bs(0).fingerprint == bs(1).fingerprint && bs(0).fingerprint != bs(2).fingerprint)
+  }
+
+  test("tag table: flags match the kernel's tag sets; case, digits and unknown names tokenize") {
+    val sets = Map(
+      Tags.Void -> Set("area", "base", "br", "col", "embed", "hr", "img", "input",
+        "link", "meta", "param", "source", "track", "wbr"),
+      Tags.RawText -> Set("script", "style", "template", "textarea", "title", "noscript", "svg"),
+      Tags.Drop -> Set("nav", "aside", "header", "footer", "form",
+        "button", "select", "iframe", "object", "menu", "dialog"),
+      Tags.Block -> Set("p", "h1", "h2", "h3", "h4", "h5", "h6", "li",
+        "pre", "blockquote", "figcaption", "dt", "dd", "td", "th", "caption", "math"),
+      Tags.Container -> Set("div", "section", "article", "main", "body",
+        "html", "ul", "ol", "dl", "table", "thead", "tbody", "tfoot", "tr",
+        "center", "figure", "details", "summary", "address", "fieldset"),
+      Tags.ProbeBlock -> Set("div", "p", "ul", "ol", "dl", "section",
+        "article", "h1", "h2", "h3", "h4", "h5", "h6"))
+    def idOf(name: String) = Tags.lookup(name.getBytes(StandardCharsets.US_ASCII), 0, name.length)
+    for ((flag, names) <- sets; name <- names ++ Tags.names) {
+      for (n <- Seq(name, name.toUpperCase)) {
+        val id = idOf(n)
+        assert(id >= 0 && Tags.names(id) == name, n)
+        assert(((Tags.flags(id) & flag) != 0) == names(name), s"$n flag $flag")
+      }
+    }
+    assert(idOf("h9") < 0 && idOf("x-foo") < 0 && idOf("divv") < 0 && idOf("") < 0)
+    // mixed case nests and closes like lower case; h9 and unknown names are
+    // inline and close against their own start tags
+    val bs = blocksOf("<DiV><H1>Title Words</h1><P>para <foo>inner</FOO> words" +
+      "<h9>nine</H9> tail</p>bare text</DIV><h9><p>in h9</p></h9>")
+    assert(bs.map(b => (b.tag, b.kind, b.level, b.text)) == Vector(
+      ("h1", "title", 1, "Title Words"),
+      ("p", "paragraph", 0, "para inner wordsnine tail"),
+      ("body", "paragraph", 0, "bare text"),
+      ("p", "paragraph", 0, "in h9")))
+    // the wireless-table probe resolves names through the same table:
+    // unknown and mixed-case names inside a data table are inline
+    val probed = "<TABLE><tr><TH><x-cell>Name</x-cell></TH><th>Value</th></tr>" +
+      "<tr><td><h9>1</h9></td><td>2</td></tr><tr><td>3</td><td>4</td></tr></TABLE>"
+    assert(blocksOf(probed).map(_.kind) == Vector("table"))
+    val layout = "<table><tr><th>a</th><th>b</th></tr><tr><td><DIV>x</DIV></td></tr>" +
+      "<tr><td>y</td></tr></table>"
+    assert(!blocksOf(layout).exists(_.kind == "table"))
   }
 
   test("table with cells but no text keeps a valid [begin,end) span") {

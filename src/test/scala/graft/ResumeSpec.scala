@@ -85,6 +85,53 @@ class ResumeSpec extends AnyFunSuite {
     assert(ExtractMain.run(spark, crashArgs.copy(failAfterGroups = -1)) == 0)
   }
 
+  test("in-job lineage tally equals a readback of the committed data") {
+    // the happy path: a clean single-pass run's per-unit manifests must be
+    // exactly what an aggregation over its committed data gives, with an
+    // error row (bytes counted, no text) and non-BMP text (code points)
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-tally").toString
+    val ts = new java.sql.Timestamp(0L)
+    val extra = Seq(
+      graft.model.Page("https://probe.example/truncated-pdf", ts,
+        "%PDF-1.4\n1 0 obj\n<< /Type /Catalog".getBytes("US-ASCII"), "", "en"),
+      graft.model.Page("https://probe.example/non-bmp", ts,
+        "<p>emoji \uD83D\uDE00 and math \uD835\uDC00 in a paragraph of words</p>".getBytes("UTF-8"), "", "en"))
+    val pages = (0L until 120L).map(i => graft.fixtures.FixtureGen.fixture(i).page) ++ extra
+    val in = dir + "/in"
+    spark.createDataset(pages).repartition(3).write.parquet(in)
+    val out = dir + "/out"
+    val units = 8
+    val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobCount.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try assert(ExtractMain.run(spark, ExtractMain.Args(in = in, out = out, units = units)) == units)
+    finally {
+      var last = -1
+      var spins = 0
+      while (jobCount.get() != last && spins < 20) {
+        last = jobCount.get(); Thread.sleep(250); spins += 1
+      }
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    // the happy path takes exactly this budget; a readbackStats fallback
+    // (the audit found the tally short or long) would add jobs
+    assert(jobCount.get() <= 4, s"expected a single-pass run, saw ${jobCount.get()} jobs")
+    val truth = ExtractMain.readbackStats(spark, out + "/data")
+    val manifests = TableIO.readManifests(out).map(m =>
+      m.unitId -> ((m.rows, m.pagesOk, m.pagesErr, m.bytesIn, m.textChars))).toMap
+    assert(manifests.keySet == (0 until units).toSet)
+    for (u <- 0 until units)
+      assert(manifests(u) == truth.getOrElse(u, (0L, 0L, 0L, 0L, 0L)), s"unit $u")
+    val totals = manifests.values.toSeq
+    assert(totals.map(_._1).sum == pages.length)
+    assert(totals.map(_._3).sum == 1, "the truncated PDF is the one error row")
+  }
+
   test("zero-row input commits empty manifests cleanly (audit must not crash on empty scratch)") {
     // a fresh run over an empty input writes only _SUCCESS to scratch; the
     // exactly-once audit's scratch count must use the explicit schema (no
