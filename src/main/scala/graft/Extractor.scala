@@ -1,7 +1,8 @@
 package graft
 
-import graft.model.{ExtractedPage, Page, Span}
+import graft.model.{Block, ExtractedPage, Page, Span}
 import graft.html.{BlockBuilder, Charset}
+import graft.html.BlockBuilder.RawBlock
 import graft.score.Classifier
 import graft.assemble.Assembler
 import graft.pdf.PdfParser
@@ -38,25 +39,36 @@ object Extractor {
     * so the larger cap buys coverage without an adversarial-cost cliff. */
   val MaxPdfBytes: Int = 4 * MaxHtmlBytes
 
-  /** Sniff + normalize for the byte-level pipeline: UTF-16 pages (BOM or
-    * parity-confirmed) are transcoded to UTF-8; for those pages span offsets
-    * index the normalized stream (the recorded charset decision makes wire
-    * offsets recoverable — see Charset.normalize). The third element is the
-    * decision label surfaced on ExtractedPage.charset: the wire charset name
-    * lower-cased, with "->utf-8" appended when the page was transcoded. */
-  private def pipelineInput(html: Array[Byte]): (Array[Byte], java.nio.charset.Charset, String) = {
-    val dec = Charset.sniff(html)
-    val (buf, cs) = Charset.normalize(html, dec)
+  /** The front half every surface shares, run on a non-PDF payload: the
+    * MaxHtmlBytes clamp, charset sniff + normalize, BlockBuilder.build and
+    * classify. UTF-16 pages (BOM or parity-confirmed) are transcoded to
+    * UTF-8; for those pages span offsets index the normalized stream (the
+    * recorded charset decision makes wire offsets recoverable — see
+    * Charset.normalize). `charset` is the decision label surfaced on
+    * ExtractedPage.charset: the wire charset name lower-cased, with
+    * "->utf-8" appended when the page was transcoded. */
+  private final case class Analysis(raws: Vector[RawBlock], blocks: Vector[Block], charset: String)
+
+  private def analyze(raw: Array[Byte]): Analysis = {
+    val clamped =
+      if (raw.length > MaxHtmlBytes) java.util.Arrays.copyOf(raw, MaxHtmlBytes)
+      else raw
+    val dec = Charset.sniff(clamped)
+    val (html, cs) = Charset.normalize(clamped, dec)
     val label =
-      if (!(buf eq html)) s"${dec.charset.name().toLowerCase}->utf-8"
+      if (!(html eq clamped)) s"${dec.charset.name().toLowerCase}->utf-8"
       else if (cs eq dec.charset) cs.name().toLowerCase
       // declared UTF-16 failed the parity confirmation: bytes pass through
       else s"utf-8(mislabeled:${dec.charset.name().toLowerCase})"
-    (buf, cs, label)
+    val raws = BlockBuilder.build(html, cs)
+    Analysis(raws, Classifier.classify(raws), label)
   }
 
+  private def payload(p: Page): Array[Byte] =
+    if (p.html == null) Array.emptyByteArray else p.html
+
   def extract(p: Page): ExtractedPage = {
-    val raw = if (p.html == null) Array.emptyByteArray else p.html
+    val raw = payload(p)
     try {
       if (PdfParser.isPdf(raw)) {
         if (raw.length > MaxPdfBytes)
@@ -69,18 +81,13 @@ object Extractor {
           nBlocks = spans.length, nKept = spans.length,
           htmlBytes = raw.length.toLong, isPdf = true, error = "", charset = "pdf")
       } else {
-        val clamped =
-          if (raw.length > MaxHtmlBytes) java.util.Arrays.copyOf(raw, MaxHtmlBytes)
-          else raw
-        val (html, cs, csLabel) = pipelineInput(clamped)
-        val raws = BlockBuilder.build(html, cs)
-        val blocks = Classifier.classify(raws)
-        val text = Assembler.render(blocks)
-        val spans = Assembler.spans(raws, blocks)
+        val a = analyze(raw)
+        val text = Assembler.render(a.blocks)
+        val spans = Assembler.spans(a.raws, a.blocks)
         ExtractedPage(p.url, p.warc_ts, p.lang, text, spans,
-          nBlocks = blocks.length, nKept = blocks.count(_.keep),
+          nBlocks = a.blocks.length, nKept = a.blocks.count(_.keep),
           htmlBytes = raw.length.toLong, isPdf = false, error = "",
-          charset = csLabel)
+          charset = a.charset)
       }
     } catch {
       case e: Throwable =>
@@ -94,55 +101,32 @@ object Extractor {
     }
   }
 
-  /** The same MaxHtmlBytes clamp extract() applies — the debug surfaces
-    * below must describe what production EMITS (and stay bounded on
-    * oversized pages), not re-parse the unclamped bytes. */
-  private def clampedHtml(p: Page): Array[Byte] = {
-    val raw = if (p.html == null) Array.emptyByteArray else p.html
-    if (!PdfParser.isPdf(raw) && raw.length > MaxHtmlBytes)
-      java.util.Arrays.copyOf(raw, MaxHtmlBytes)
-    else raw
+  /** The debug surfaces below run the same `analyze` as extract(), so they
+    * describe what production EMITS (clamped bytes included); `none` on PDF
+    * rows and on any failure. */
+  private def debugSurface[A](p: Page, none: A)(f: Analysis => A): A = {
+    val raw = payload(p)
+    try { if (PdfParser.isPdf(raw)) none else f(analyze(raw)) }
+    catch { case _: Throwable => none }
   }
 
   /** Debug surface: classified blocks of a non-PDF page (empty for PDFs /
     * failures). Used by the driver-facing x03/x06 inventory queries. */
-  def debugBlocks(p: Page): Vector[graft.model.Block] = {
-    val raw = clampedHtml(p)
-    try {
-      if (PdfParser.isPdf(raw)) Vector.empty
-      else {
-        val (html, cs, _) = pipelineInput(raw)
-        Classifier.classify(BlockBuilder.build(html, cs))
-      }
-    } catch { case _: Throwable => Vector.empty }
-  }
+  def debugBlocks(p: Page): Vector[Block] = debugSurface(p, Vector.empty[Block])(_.blocks)
 
   /** Alternate output renders (semantic HTML + JSON with span coordinates)
     * for a non-PDF page — the reference's to_html / to_json surfaces. */
-  def renders(p: Page): Option[(String, String)] = {
-    val raw = clampedHtml(p)
-    try {
-      if (PdfParser.isPdf(raw)) None
-      else {
-        val (html, cs, _) = pipelineInput(raw)
-        val raws = BlockBuilder.build(html, cs)
-        val blocks = Classifier.classify(raws)
-        Some((Assembler.renderHtml(blocks), Assembler.renderJson(blocks, Assembler.spans(raws, blocks))))
-      }
-    } catch { case _: Throwable => None }
-  }
+  def renders(p: Page): Option[(String, String)] =
+    debugSurface(p, Option.empty[(String, String)]) { a =>
+      Some((Assembler.renderHtml(a.blocks),
+        Assembler.renderJson(a.blocks, Assembler.spans(a.raws, a.blocks))))
+    }
 
   /** Debug surface: captured data tables as (blockIdx, nCells, canonicalHtml). */
-  def debugTables(p: Page): Vector[(Int, Int, String)] = {
-    val raw = clampedHtml(p)
-    try {
-      if (PdfParser.isPdf(raw)) Vector.empty
-      else {
-        val (html, cs, _) = pipelineInput(raw)
-        BlockBuilder.build(html, cs).zipWithIndex.collect {
-          case (b, i) if b.kind == "table" => (i, b.cellRuns.length, b.text)
-        }
+  def debugTables(p: Page): Vector[(Int, Int, String)] =
+    debugSurface(p, Vector.empty[(Int, Int, String)]) {
+      _.raws.zipWithIndex.collect {
+        case (b, i) if b.kind == "table" => (i, b.cellRuns.length, b.text)
       }
-    } catch { case _: Throwable => Vector.empty }
-  }
+    }
 }

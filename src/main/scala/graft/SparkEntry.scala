@@ -639,7 +639,7 @@ object SparkEntry {
     }),
     "x13_stream_extract" -> ((s, d) => {
       // the streaming surface through the driver gate: a bounded MemoryStream
-      // runs the SAME kernel via extractStream into a memory sink; results
+      // runs the SAME kernel via ExtractJob.run into a memory sink; results
       // must match the batch extraction bytes. The stream carries ROW IDS
       // only — pages are generated inside the stream map on executors, so the
       // task binary stays small (the page-valued stream shipped ~8.6 MiB of
@@ -652,7 +652,7 @@ object SparkEntry {
       stream.addData(0L until n)
       val sink = "x13_sink_" + x13Counter.incrementAndGet()
       val pages = stream.toDS().map(i => fixtures.FixtureGen.fixture(i).page)
-      val q = graft.streaming.StreamExtract.extractStream(pages)
+      val q = ExtractJob.run(pages)
         .select(col("url"), length(col("text")).as("text_len"),
           sha2(to_binary(col("text"), lit("utf-8")), 256).as("text_sha256"))
         .writeStream.format("memory").queryName(sink)
@@ -675,7 +675,7 @@ object SparkEntry {
       val sink = "x14_sink_" + x13Counter.incrementAndGet()
       val pages = stream.toDS().map(i => fixtures.FixtureGen.fixture(i).page)
       val q = graft.streaming.StreamExtract
-        .dedupStream(graft.streaming.StreamExtract.extractStream(pages))
+        .dedupStream(ExtractJob.run(pages))
         .select(col("url"), length(col("text")).as("text_len"))
         .writeStream.format("memory").queryName(sink)
         .outputMode("append").start()
@@ -1360,14 +1360,14 @@ object SparkEntry {
         |  array_to_string(k, chr(10)) AS fixed_text
         |FROM fx ORDER BY doc_id""".stripMargin,
     // Planted-truth reconstruction: media ids are 0..2n-1 (n = documents
-    // rows, doc_id dense 0..n-1), every header field the same integer
-    // arithmetic the witness builder packed into the container bytes, and
-    // the fixed 64-byte body pins total sizes per format.
+    // rows), generated as a series exactly like the engine's range(2n) —
+    // never rebuilt from doc_id, which need not be dense — every header
+    // field the same integer arithmetic the witness builder packed into the
+    // container bytes, and the fixed 64-byte body pins total sizes per
+    // format.
     "m03_media_witness" ->
       """WITH ids AS (
-        |  SELECT doc_id * 2 AS media_id FROM documents
-        |  UNION ALL
-        |  SELECT doc_id * 2 + 1 FROM documents)
+        |  SELECT unnest(range(2 * (SELECT count(*) FROM documents))) AS media_id)
         |SELECT media_id,
         |  CASE media_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
         |    ELSE 'wav' END AS format,

@@ -27,6 +27,11 @@ import org.apache.spark.sql.functions._
   */
 object WebFilters {
 
+  /** DNS names are case-insensitive and may arrive as FQDNs with a root
+    * dot; UT1 lists are lowercase without one. Normalize both sides the
+    * same way before any comparison. */
+  private def normHost(h: Column): Column = lower(rtrim(h, "."))
+
   /** UT1-style domain blocklist filter. A document whose `hostCol` equals a
     * blocklist host, or sits on any subdomain of one, is annotated with that
     * entry's category; when several entries match (e.g. "cdn.x.com" and
@@ -39,16 +44,23 @@ object WebFilters {
     * parents); real-world hosts are < 8 labels deep.
     *
     * Output: input columns + `block_category` (null = unlisted) + `blocked`
-    * (0/1 int — int not boolean so every oracle engine hashes it alike). */
-  /** DNS names are case-insensitive and may arrive as FQDNs with a root
-    * dot; UT1 lists are lowercase without one. Normalize both sides the
-    * same way before any comparison. */
-  private def normHost(h: Column): Column = lower(rtrim(h, "."))
-
+    * (0/1 int — int not boolean so every oracle engine hashes it alike).
+    * Those two names and the `_bl_` prefix are reserved: an input carrying
+    * one is rejected. */
   def blocklistFilter(df: DataFrame, blocklist: DataFrame,
       hostCol: String = "host", levels: Int = 4,
       blHostCol: String = "host", blCatCol: String = "category"): DataFrame = {
     require(levels >= 1 && levels <= 8, s"levels must be in [1,8], got $levels")
+    // the output columns and the join scratch columns are appended by name:
+    // an input column of the same name (case-insensitive, like Spark's
+    // resolver) would be shadowed or make the joins ambiguous
+    val reserved = df.columns.filter { c =>
+      val l = c.toLowerCase
+      l == "block_category" || l == "blocked" || l.startsWith("_bl_")
+    }
+    require(reserved.isEmpty,
+      s"blocklistFilter input already has reserved column(s) ${reserved.mkString(", ")}: " +
+        "block_category, blocked and _bl_* are its output and scratch names")
     val bl = blocklist
       .select(normHost(col(blHostCol).cast("string")).as("bl_host"),
         col(blCatCol).cast("string").as("bl_cat"))

@@ -308,10 +308,14 @@ object PdfParser {
       // footnotes, dense tables) has real lines closer than 10, which a
       // flat tolerance would merge and interleave by x. Scale the tolerance
       // down with the glyph height (same-line fragments sit within a
-      // fraction of their own height), capped at the reference's 10.
-      val tol = math.min(SameLineYTol,
-        0.8 * math.min(if (anchorH > 0) anchorH else tb.box.h, tb.box.h))
-      if (anchor.isNaN || math.abs(tb.box.cy - anchor) < math.max(tol, 0.01)) {
+      // fraction of their own height), capped at the reference's 10. With
+      // no usable height on either side (h=0 producers) there is nothing to
+      // scale by: keep the reference's flat tolerance.
+      val tol =
+        if (!(anchorH > 0) && !(tb.box.h > 0)) SameLineYTol
+        else math.max(0.01, math.min(SameLineYTol,
+          0.8 * math.min(if (anchorH > 0) anchorH else tb.box.h, tb.box.h)))
+      if (anchor.isNaN || math.abs(tb.box.cy - anchor) < tol) {
         if (anchor.isNaN) { anchor = tb.box.cy; anchorH = tb.box.h }
         cur += tb
       } else {

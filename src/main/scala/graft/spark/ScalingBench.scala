@@ -90,43 +90,6 @@ object ScalingBench {
     best.toMap
   }
 
-  /** A/B the intra-partition size sort (reference aspect-ratio sort
-    * analogue): same corpus, same session shape, plain vs sizeSort vs
-    * bucketed, interleaved min-of-iters.
-    * runMain graft.spark.SizeSortBench <corpusDir> [cores] [iters] */
-  def sizeSortMain(args: Array[String]): Unit = {
-    val dir = args(0)
-    val cores = args.drop(1).headOption.flatMap(_.toIntOption).getOrElse(8)
-    val iters = args.drop(2).headOption.flatMap(_.toIntOption).getOrElse(3)
-    val spark = session(cores)
-    import spark.implicits._
-    import org.apache.spark.sql.Dataset
-    import graft.model.ExtractedPage
-    def pagesDs = spark.read
-      .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
-      .parquet(dir).as[Page]
-    def time(mk: => Dataset[ExtractedPage]): Double = {
-      val t0 = System.nanoTime()
-      val row = mk.agg(count(lit(1)),
-        sum(when(col("error") =!= "", 1L).otherwise(0L))).collect()(0)
-      require(row.getLong(1) == 0L)
-      (System.nanoTime() - t0) / 1e9
-    }
-    val modes = Seq(
-      "plain" -> (() => ExtractJob.run(pagesDs)),
-      "sizeSort" -> (() => ExtractJob.run(pagesDs, sizeSort = true)),
-      "bucketed" -> (() => ExtractJob.runBucketed(pagesDs)))
-    time(ExtractJob.run(pagesDs)); time(ExtractJob.run(pagesDs)) // warmup
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    for (_ <- 0 until iters; (name, mk) <- modes) {
-      val s = time(mk())
-      if (!best.contains(name) || s < best(name)) best(name) = s
-    }
-    println("{\"bench\":\"size-sort\",\"cores\":" + cores + "," +
-      modes.map { case (n, _) => f""""$n":${best(n)}%.2f""" }.mkString(",") + "}")
-    spark.stop()
-  }
-
   def main(args: Array[String]): Unit = {
     val n = args.headOption.flatMap(_.toLongOption).getOrElse(50000L)
     val iters = args.drop(1).headOption.flatMap(_.toIntOption).getOrElse(3)
@@ -157,9 +120,4 @@ object ScalingBench {
       s""""levels":[{${runJson(r(2))}},{${runJson(r(8))}},{${runJson(r(32))}}],""" +
       f""""efficiency_2_to_8":${eff(r(2), r(8))}%.3f,"efficiency_8_to_32":${eff(r(8), r(32))}%.3f}""")
   }
-}
-
-/** Entry for the size-sort A/B (see ScalingBench.sizeSortMain). */
-object SizeSortBench {
-  def main(args: Array[String]): Unit = ScalingBench.sizeSortMain(args)
 }

@@ -4,12 +4,15 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.model.{ExtractedPage, Page}
+import graft.spark.ExtractJob
 
 /** Structured Streaming surface — the analogue of the reference's always-on
   * HTTP server mode (/root/reference/src/bin/server/server.rs:97-178): pages
   * arrive continuously, each is extracted by the same per-row kernel, results
   * stream to the output table. The batch and streaming paths share the exact
-  * same Extractor, so correctness properties (byte identity, graceful
+  * same transform — `ExtractJob.run` at its defaults (no salt, no size sort:
+  * both would be a shuffle or a sort per micro-batch, and micro-batches are
+  * already bounded) — so correctness properties (byte identity, graceful
   * degradation) carry over verbatim.
   *
   * Scale notes: the map is narrow (no state, no shuffle), so micro-batch
@@ -19,14 +22,6 @@ import graft.model.{ExtractedPage, Page}
   * bottleneck.
   */
 object StreamExtract {
-
-  /** Streaming-safe transform: identical semantics to ExtractJob.run but with
-    * no repartition (salting is a batch concern; streaming micro-batches are
-    * already bounded). Works on both batch and streaming Datasets. */
-  def extractStream(pages: Dataset[Page]): Dataset[ExtractedPage] = {
-    import pages.sparkSession.implicits._
-    pages.mapPartitions(_.map(graft.Extractor.extract))
-  }
 
   /** Watermarked per-interval ingest metrics: pages, bytes, errors per
     * 1-minute event-time window per lang. */
@@ -112,7 +107,7 @@ object StreamExtract {
     import spark.implicits._
     val pageSchema = implicitly[org.apache.spark.sql.Encoder[Page]].schema
     val pages = spark.readStream.schema(pageSchema).parquet(inDir).as[Page]
-    val q = extractStream(pages)
+    val q = ExtractJob.run(pages)
       .drop("spans") // parquet sink demo keeps scalar columns
       .writeStream
       .option("checkpointLocation", ckpt)

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.spark.ExtractJob
 
-/** Batching strategies must be result-transparent: size-sorted and
-  * histogram-bucketed runs produce exactly the rows of the plain run. */
+/** Batching strategies must be result-transparent: salted and size-sorted
+  * runs produce exactly the rows of the plain run. */
 class BatchingSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -28,26 +28,6 @@ class BatchingSpec extends AnyFunSuite {
   test("sizeSort run equals plain run") {
     assert(resultMap(ExtractJob.run(pages, salt = 4, sizeSort = true)) ==
       resultMap(ExtractJob.run(pages, salt = 4)))
-  }
-
-  test("histogram-bucketed run equals plain run, bounded partition budgets") {
-    import org.apache.spark.sql.functions._
-    val bucketed = ExtractJob.runBucketed(pages, targetBytesPerPartition = 4L << 20)
-    assert(resultMap(bucketed) == resultMap(ExtractJob.run(pages)))
-    // the giant-page class (>=2 MB rows at rowId%200==3) must not share a
-    // partition budget with the small-page classes: partition count grows
-    // beyond the default parallelism floor
-    assert(bucketed.rdd.getNumPartitions >= 2)
-    // every physical partition holds ONE size class — the byte-budget
-    // guarantee (hash-slot probing maps dense indices to exact partitions)
-    val maxClassesPerPartition = ExtractJob
-      .runBucketed(pages, targetBytesPerPartition = 4L << 20).toDF()
-      .select(spark_partition_id().as("pid"),
-        ceil(log2(greatest(col("htmlBytes"), lit(2L)))).cast("int").as("cls"))
-      .groupBy("pid").agg(countDistinct("cls").as("n"))
-      .agg(max("n")).collect()(0).getLong(0)
-    assert(maxClassesPerPartition == 1L,
-      s"a partition mixes $maxClassesPerPartition size classes")
   }
 
   test("skew salt spreads rows across ALL salt partitions (no murmur3-collided empties)") {

@@ -151,6 +151,22 @@ class KernelSpec extends AnyFunSuite {
     assert(sortAndJoin(Vector(c1, c2), container)._1 == "中文后续")
   }
 
+  test("sort-and-join: zero-height boxes fall back to the flat same-line tolerance") {
+    import graft.geom.Box
+    import graft.pdf.PdfParser.{TextBox, sortAndJoin}
+    // h=0 producers: 0.5 px of cy jitter is one visual line. The right-hand
+    // fragment sits higher, so a per-fragment line split would read it first
+    val right = TextBox(Box(40, 100, 70, 100), "right", 0, 1)
+    val left = TextBox(Box(0, 100.5, 30, 100.5), "left", 1, 2)
+    val (txt, used) = sortAndJoin(Vector(right, left), Box(0, 100, 70, 100.5))
+    assert(txt == "left right")
+    assert(used.map(_.text) == Vector("left", "right"))
+    // a line further away than the flat tolerance is still its own line
+    val below = TextBox(Box(0, 120, 70, 120), "below", 2, 3)
+    assert(sortAndJoin(Vector(right, left, below), Box(0, 100, 200, 120))._1
+      .endsWith("\nbelow"))
+  }
+
   test("RTL lines read right-to-left; duplicate long text suppressed once") {
     import graft.geom.Box
     import graft.pdf.PdfParser.{TextBox, sortAndJoin}
@@ -651,6 +667,50 @@ class KernelSpec extends AnyFunSuite {
   private def extractHtml(html: String): graft.model.ExtractedPage =
     Extractor.extract(Page("u", new java.sql.Timestamp(0L),
       html.getBytes(StandardCharsets.UTF_8), "", "en"))
+
+  test("debug surfaces describe what extract emits: fixtures, null html, oversize page") {
+    import graft.pdf.{PdfParser, RealPdf}
+    val ts = new java.sql.Timestamp(0L)
+    val fixtures = (0L until 200L).map(i => graft.fixtures.FixtureGen.fixture(i).page)
+    val pdfs = fixtures.filter(p => PdfParser.isPdf(p.html))
+    assert(pdfs.exists(p => RealPdf.isReal(p.html)) && pdfs.exists(p => !RealPdf.isReal(p.html)),
+      "both PDF row classes must be present")
+    // past the clamp sits a paragraph the clamped bytes never reach
+    def padded(pad: Int) = Page("u-pad", ts,
+      ("<p>head words before the padding run</p><p>" + " " * pad +
+        "tail words past the clamp</p>").getBytes(StandardCharsets.UTF_8), "", "en")
+    val oversize = padded(Extractor.MaxHtmlBytes)
+    assert(oversize.html.length > Extractor.MaxHtmlBytes)
+    val pages = fixtures :+ Page("u-null", ts, null, "", "en") :+ oversize
+    var tables = 0
+    for (p <- pages) {
+      val x = Extractor.extract(p)
+      assert(x.error == "", s"${p.url}: ${x.error}")
+      val blocks = Extractor.debugBlocks(p)
+      val tbls = Extractor.debugTables(p)
+      assert(Extractor.renders(p).isEmpty == x.isPdf, p.url)
+      if (x.isPdf) assert(blocks.isEmpty && tbls.isEmpty, p.url)
+      else {
+        assert(blocks.length == x.nBlocks, p.url)
+        assert(blocks.count(_.keep) == x.nKept, p.url)
+        tbls.foreach { case (i, _, _) => assert(blocks(i).kind == "table", s"${p.url} block $i") }
+        tables += tbls.length
+      }
+    }
+    assert(tables > 0, "no fixture row exercised debugTables")
+    // the oversize page: every surface describes the clamped bytes
+    val clamped = oversize.copy(
+      html = java.util.Arrays.copyOf(oversize.html, Extractor.MaxHtmlBytes))
+    assert(Extractor.debugBlocks(padded(8)).exists(_.text.contains("tail words")))
+    assert(Extractor.debugBlocks(oversize) == Extractor.debugBlocks(clamped))
+    assert(!Extractor.debugBlocks(oversize).exists(_.text.contains("tail words")))
+    assert(Extractor.renders(oversize) == Extractor.renders(clamped))
+    assert(Extractor.debugTables(oversize) == Extractor.debugTables(clamped))
+    val (xo, xc) = (Extractor.extract(oversize), Extractor.extract(clamped))
+    assert(xo.text == xc.text && !xo.text.contains("tail words"), xo.text)
+    assert(xo.nBlocks == xc.nBlocks && xo.charset == xc.charset)
+    assert(xo.htmlBytes == oversize.html.length.toLong)
+  }
 
   test("unquoted attribute value ending in '/' is NOT self-closing (WHATWG)") {
     // <a href=http://x.com/> must keep its anchor OPEN until </a>; the old

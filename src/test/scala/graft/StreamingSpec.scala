@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.fixtures.FixtureGen
+import graft.spark.ExtractJob
 import graft.streaming.StreamExtract
 
 /** The streaming path must produce byte-identical results to the batch path —
@@ -25,7 +26,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val fixtures = FixtureGen.corpus(120).toVector
     val stream = MemoryStream[graft.model.Page]
-    val q = StreamExtract.extractStream(stream.toDS())
+    val q = ExtractJob.run(stream.toDS())
       .writeStream.format("memory").queryName("stream_out")
       .outputMode("append").start()
 
@@ -52,7 +53,7 @@ class StreamingSpec extends AnyFunSuite {
     // repeats: same html under different urls => identical extracted text
     val dupes = base.take(10).map(p => p.copy(url = p.url + "#mirror"))
     val stream = MemoryStream[graft.model.Page]
-    val q = StreamExtract.dedupStream(StreamExtract.extractStream(stream.toDS()))
+    val q = StreamExtract.dedupStream(ExtractJob.run(stream.toDS()))
       .writeStream.format("memory").queryName("dedup_out")
       .outputMode("append").start()
     stream.addData(base)
@@ -77,7 +78,7 @@ class StreamingSpec extends AnyFunSuite {
       graft.model.Page("probe://e3", ts,
         "<nav><a href='/'>x</a></nav>".getBytes, "", "en"))
     val stream = MemoryStream[graft.model.Page]
-    val q = StreamExtract.dedupStream(StreamExtract.extractStream(stream.toDS()))
+    val q = StreamExtract.dedupStream(ExtractJob.run(stream.toDS()))
       .writeStream.format("memory").queryName("dedup_err_out")
       .outputMode("append").start()
     stream.addData(broken)
@@ -93,7 +94,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val fixtures = FixtureGen.corpus(100).toVector
     val stream = MemoryStream[graft.model.Page]
-    val q = StreamExtract.ingestMetrics(StreamExtract.extractStream(stream.toDS()))
+    val q = StreamExtract.ingestMetrics(ExtractJob.run(stream.toDS()))
       .writeStream.format("memory").queryName("metrics_out")
       .outputMode("complete").start()
     stream.addData(fixtures.map(_.page))

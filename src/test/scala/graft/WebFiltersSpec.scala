@@ -104,6 +104,25 @@ class WebFiltersSpec extends AnyFunSuite {
     }
   }
 
+  test("blocklist: an input already carrying an output or scratch column fails fast") {
+    import spark.implicits._
+    for (taken <- Seq("block_category", "Blocked", "_bl_cat_0", "_bl_host_1")) {
+      val e = intercept[IllegalArgumentException] {
+        WebFilters.blocklistFilter(
+          Seq((0L, "bad.example.com", 1)).toDF("doc_id", "host", taken),
+          bl.toDF("host", "category"))
+      }
+      assert(e.getMessage.contains(taken), e.getMessage)
+    }
+    // a near-miss name is an ordinary input column and passes through
+    val out = WebFilters.blocklistFilter(
+        Seq((0L, "bad.example.com", 7)).toDF("doc_id", "host", "bl_cat"),
+        bl.toDF("host", "category"))
+      .select("bl_cat", "block_category", "blocked").collect()
+    assert(out.map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq ==
+      Seq((7, "adult", 1)))
+  }
+
   private def fix(rows: Seq[(Long, String)]): Map[Long, (Long, Long, Int, String)] = {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
