@@ -6,8 +6,9 @@ import java.util.Locale
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.sql.Column
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: Unicode NFC normalization (UAX #15) of a
@@ -52,6 +53,59 @@ object NfcNormalize {
     val str = s.toString
     if (Normalizer.isNormalized(str, Normalizer.Form.NFC)) s
     else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFC))
+  }
+}
+
+/** Native Catalyst expression: the code-point count of a string column, the
+  * figure `length()` gives, counted a word at a time. A code point is a
+  * UTF-8 byte that is not a continuation byte (10xxxxxx), so the count is
+  * `numBytes` minus the continuation bytes, 8 bytes per step. On the valid
+  * UTF-8 that Spark encodes from Java Strings (an unpaired surrogate becomes
+  * `?`) it equals `UTF8String.numChars`, which decodes each lead byte's
+  * length instead. Codegen'd via a single static call, like [[NfcNormalize]].
+  * Null in → null out.
+  */
+case class CodePoints(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"graft_code_points requires string, got $t")
+  }
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_code_points"
+
+  override def nullSafeEval(input: Any): Any =
+    CodePoints.count(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.CodePoints$$.MODULE$$.count($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): CodePoints =
+    copy(child = newChild)
+}
+
+object CodePoints {
+  private final val HighBits = 0x8080808080808080L
+
+  /** Shared by interpreted eval and generated code. */
+  def count(s: UTF8String): Int = {
+    val base = s.getBaseObject
+    val n = s.numBytes
+    var off = s.getBaseOffset
+    val end = off + n
+    var continuation = 0
+    while (off + 8 <= end) {
+      val w = Platform.getLong(base, off)
+      // bit 7 of a byte set and bit 6 (shifted up into bit 7) clear
+      continuation += java.lang.Long.bitCount(w & ~(w << 1) & HighBits)
+      off += 8
+    }
+    while (off < end) {
+      if ((Platform.getByte(base, off) & 0xc0) == 0x80) continuation += 1
+      off += 1
+    }
+    n - continuation
   }
 }
 
@@ -337,6 +391,7 @@ object TextFunctions {
   import org.apache.spark.sql.graft.Shims
   /** Column-level entry points used by ops.TextOps. */
   def nfc(c: Column): Column = Shims.column(NfcNormalize(Shims.expression(c)))
+  def codePoints(c: Column): Column = Shims.column(CodePoints(Shims.expression(c)))
   def canonUrl(c: Column): Column = Shims.column(CanonUrl(Shims.expression(c)))
   def langIdFeatures(c: Column): Column =
     Shims.column(LangIdFeatures(Shims.expression(c)))

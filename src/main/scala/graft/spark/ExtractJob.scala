@@ -24,9 +24,6 @@ import graft.Extractor
   */
 object ExtractJob {
 
-  /** Number of url buckets used for output partitioning + resume lineage. */
-  val UrlBuckets = 64
-
   def run(pages: Dataset[Page], salt: Int = 0, sizeSort: Boolean = false): Dataset[ExtractedPage] = {
     val spark = pages.sparkSession
     import spark.implicits._
@@ -53,15 +50,6 @@ object ExtractJob {
     // — ExtractMain's UnitStatsAcc (audited, surfaced in lineage) is the
     // one metrics channel
     batched.mapPartitions(_.map(Extractor.extract))
-  }
-
-  /** Output projection for writing: drops nothing we need, keeps columns
-    * primitive; partition layout per the north rule (crawl date + url
-    * bucket). */
-  def toOutput(extracted: Dataset[ExtractedPage]) = {
-    extracted
-      .withColumn("crawl_date", to_date(col("warc_ts")))
-      .withColumn("url_bucket", pmod(xxhash64(col("url")), lit(UrlBuckets)).cast("int"))
   }
 }
 

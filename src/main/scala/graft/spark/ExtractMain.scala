@@ -1,7 +1,24 @@
 package graft.spark
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import java.nio.file.Paths
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.functions.TextFunctions
 import graft.model.Page
 
 /** The spark-submit entry point (north rule: the same job runs unchanged at N
@@ -17,11 +34,17 @@ import graft.model.Page
   * Execution model (scale design for 10^12 rows):
   *   - the input is split into `units` deterministic url-hash buckets
   *     (pmod(xxhash64(url), units)) — the commit/resume granularity;
-  *   - ONE extraction job per run writes every pending unit to scratch
+  *   - ONE Spark job per run: it writes every pending unit to scratch
   *     parquet partitioned by unit (the input is scanned once per run — no
   *     per-group re-scan, no bucketed-input assumption), then units are
   *     published `groupSize` at a time via TableIO.commitUnit (data rename
-  *     before manifest, both atomic) together with their lineage counters;
+  *     before manifest, both atomic) together with their lineage counters.
+  *     Nothing else starts a job on the happy path: parquet input is read
+  *     with the `Page` schema and checked against one footer on the driver
+  *     (no inference job), and the lineage is audited against the write's
+  *     own committed row count (no footer-count job);
+  *   - the scratch write goes through [[LocalFs]], which sets file modes
+  *     without forking a `chmod` per file and directory;
   *   - on restart, committed units are skipped (the anti-join of pending
   *     against lineage — here a set difference because the manifest set is
   *     tiny and driver-side; at 10^12 scale with millions of units it becomes
@@ -65,6 +88,16 @@ object ExtractMain {
     a
   }
 
+  /** The five `Page` columns, as the `Page` encoder reads them. */
+  private lazy val PageSchema = Encoders.product[Page].schema
+
+  /** Pages of the input. Parquet input is read with the `Page` schema, so no
+    * schema-inference job runs. The check inference and `.as[Page]` gave is
+    * made on the driver from one data file's footer, before any job: when
+    * the file's columns differ from the `Page` schema, the input is read
+    * with the file's own schema and the analyzer rejects what `.as[Page]`
+    * cannot take (a missing column, `html` stored as a string), naming the
+    * column. A directory without data files fails here too. */
   def pagesFor(spark: SparkSession, in: String): Dataset[Page] = {
     import spark.implicits._
     if (in.startsWith("fixture:")) {
@@ -72,10 +105,26 @@ object ExtractMain {
       spark.range(n).as[Long]
         .mapPartitions(_.map(i => graft.fixtures.FixtureGen.fixture(i).page))
     } else {
-      spark.read.parquet(in)
-        .select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang"))
-        .as[Page]
+      val read = spark.read.schema(PageSchema).parquet(in)
+      val file = read.inputFiles.headOption.getOrElse(throw new IllegalArgumentException(
+        s"no parquet data file under $in to check the Page columns against"))
+      val fileSchema = footerSchema(spark, file)
+      val typed =
+        if (PageSchema.forall(f => fileSchema.exists(g => g.name == f.name && g.dataType == f.dataType))) read
+        else spark.read.schema(fileSchema).parquet(in)
+      typed.select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as[Page]
     }
+  }
+
+  /** The Spark schema that inference reads from a parquet file's footer,
+    * read on the driver. */
+  private def footerSchema(spark: SparkSession, file: String): StructType = {
+    val path = new Path(new java.net.URI(file))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(path, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   final class InjectedFailure(msg: String) extends RuntimeException(msg)
@@ -128,13 +177,52 @@ object ExtractMain {
         sum(when(col("error") === "", 1L).otherwise(0L)).as("ok"),
         sum(when(col("error") =!= "", 1L).otherwise(0L)).as("err"),
         sum(col("htmlBytes")).as("bytes"),
-        // length() counts code points on UTF8String, matching the
-        // accumulator's codePointCount
+        // length() counts code points on UTF8String: the ground truth for
+        // the tally's word-wide CodePoints count
         sum(length(col("text")).cast("long")).as("chars"))
       .collect()
       .map(r => r.getAs[Int]("unit") ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
       .toMap
+
+  /** How long the audit waits for the write's row count: the event that
+    * carries it is delivered on the listener bus after the write returns.
+    * A count that does not arrive in time takes the readback fallback. */
+  private val WrittenRowsWaitMs = 10000L
+
+  /** `numOutputRows` of the `InsertIntoHadoopFsRelationCommand` that writes
+    * `dir`, taken from the session's query-execution events. The metric
+    * sums the row counts of the committed write tasks, so it does not depend
+    * on the accumulator it audits. Register before the write; unregister
+    * after `rows` has returned. */
+  private final class WrittenRows(dir: String) extends QueryExecutionListener {
+    private val target = Paths.get(dir).toAbsolutePath.normalize.toString
+    private val count = Promise[Long]()
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      qe.executedPlan.collectFirst { case w: DataWritingCommandExec => w.cmd }.foreach {
+        case c: InsertIntoHadoopFsRelationCommand if c.outputPath.toUri.getPath == target =>
+          count.trySuccess(c.metrics("numOutputRows").value)
+        case _ =>
+      }
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    /** The count, or None if no matching event arrived within `waitMs`. */
+    def rows(waitMs: Long): Option[Long] =
+      try Some(Await.result(count.future, waitMs.millis))
+      catch { case _: TimeoutException => None }
+  }
+
+  /** The exactly-once audit: the accumulated per-unit counters when their
+    * row total equals the independently `written` row count, else an exact
+    * readback of scratch. Accumulator updates apply once per successful
+    * result-stage partition, but a stage RETRY (fetch failure on a real
+    * cluster) or a plan change inserting a shuffle between the tally and the
+    * write would silently inflate rows/ok/err/bytes/chars; a missing count
+    * (no write event within the wait) falls back too. */
+  private[graft] def audited(spark: SparkSession, scratch: String,
+      acc: Map[Int, Array[Long]], written: Option[Long]): Map[Int, (Long, Long, Long, Long, Long)] =
+    if (written.contains(acc.valuesIterator.map(_(0)).sum))
+      acc.map { case (u, c) => u -> ((c(0), c(1), c(2), c(3), c(4))) }
+    else readbackStats(spark, scratch)
 
   /** Run (or resume) the job; returns the number of units committed by THIS
     * invocation. Separated from main() so tests drive it in-process. */
@@ -168,8 +256,8 @@ object ExtractMain {
     // total, no row decode/re-encode and no second scan of scratch
     // (result-stage accumulator updates are applied once per successful
     // partition; speculation is off). Exactly-once is AUDITED after the
-    // write: acc row total vs the footer-metadata count of what was written,
-    // with readbackStats as the exact fallback on mismatch.
+    // write: acc row total vs the row count of the write itself, with
+    // readbackStats as the exact fallback on mismatch (see audited).
     val acc = new UnitStatsAcc
     spark.sparkContext.register(acc, "unit-lineage")
     val tally = udf { (unit: Int, ok: Boolean, bytes: Long, chars: Int) =>
@@ -181,35 +269,28 @@ object ExtractMain {
       // into units the run never commits
       .withColumn("unit", unitOf)
       .withColumn("crawl_date", to_date(col("warc_ts")))
-    val schema = out.schema
-    // a row the UDF is not called on (null input) is still written, and,
-    // uncounted, trips the audit below
-    out.filter(coalesce(tally(col("unit"),
-        col("error").isNull || col("error") === "",
-        col("htmlBytes"),
-        // code points, as readbackStats counts them
-        coalesce(length(col("text")), lit(0))), lit(true)))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("unit")
-      // every page text is unique: a dictionary on `text` always falls back
-      .option("parquet.enable.dictionary#text", "false")
-      .parquet(scratch)
-    // exactly-once audit: accumulator updates apply once per successful
-    // result-stage partition, but a stage RETRY (fetch failure on a real
-    // cluster) or a future plan change inserting a shuffle between the map
-    // and the write would silently inflate rows/ok/err/bytes/chars. The
-    // written row count is free from parquet footers; on mismatch fall back
-    // to an exact readback aggregation over scratch (the pre-r4 path).
-    val accStats = acc.value
-    val accRows = accStats.valuesIterator.map(_(0)).sum
-    // explicit schema: a zero-row write leaves only _SUCCESS in scratch and
-    // schema INFERENCE would throw (partition columns come from dir names,
-    // of which there are none) — the audit must not crash an empty-input run
-    val written = spark.read.schema(schema).parquet(scratch).count() // parquet footers: metadata-only
-    val stats: Map[Int, (Long, Long, Long, Long, Long)] =
-      if (accRows == written)
-        accStats.map { case (u, c) => u -> ((c(0), c(1), c(2), c(3), c(4))) }
-      else readbackStats(spark, scratch)
+    val written = new WrittenRows(scratch)
+    spark.listenerManager.register(written)
+    // the listener stays registered until its event arrives: it is
+    // delivered on the listener bus after the write returns
+    val writtenRows = try {
+      // a row the UDF is not called on (null input) is still written, and,
+      // uncounted, trips the audit below
+      out.filter(coalesce(tally(col("unit"),
+          col("error").isNull || col("error") === "",
+          col("htmlBytes"),
+          // code points, as readbackStats counts them
+          coalesce(TextFunctions.codePoints(col("text")), lit(0))), lit(true)))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("unit")
+        // every page text is unique: a dictionary on `text` always falls back
+        .option("parquet.enable.dictionary#text", "false")
+        // scratch is local by construction (TableIO is java.nio)
+        .options(LocalFs.writerOptions)
+        .parquet(scratch)
+      written.rows(WrittenRowsWaitMs)
+    } finally spark.listenerManager.unregister(written)
+    val stats = audited(spark, scratch, acc.value, writtenRows)
     // publish in groups: a crash between group commits leaves a resumable
     // prefix (the --fail-after-groups injection point, ResumeSpec)
     var done = 0

@@ -34,31 +34,13 @@ class ResumeSpec extends AnyFunSuite {
     val units = 16
 
     val cleanArgs = ExtractMain.Args(in = in, out = clean, units = units, groupSize = 4)
-    // single-pass contract: ONE extraction+write DATA job per run — lineage
-    // counters ride the write job in an accumulator, so there is no second
-    // stats scan of the output (nor the old per-group input re-scans). The
-    // exactly-once audit adds metadata-only jobs (parquet footer count +
-    // schema read of scratch), so the budget is 4, not 2 — still zero
-    // re-scans of row data on the happy path.
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(ExtractMain.run(spark, cleanArgs) == units)
-    } finally {
-      // listener events post asynchronously; wait for the count to settle
-      var last = -1
-      var spins = 0
-      while (jobCount.get() != last && spins < 20) {
-        last = jobCount.get(); Thread.sleep(250); spins += 1
-      }
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobCount.get() <= 4, s"expected a single-pass run (<=4 Spark jobs incl. metadata audit), saw ${jobCount.get()}")
+    // single-pass contract: ONE extraction+write job per run — lineage
+    // counters ride the write job in an accumulator, and the exactly-once
+    // audit reads the write's own row count, so there is no stats scan of
+    // the output, no footer-count job and no per-group input re-scan.
+    val (n, jobs) = SparkJobs.counted(spark)(ExtractMain.run(spark, cleanArgs))
+    assert(n.get == units)
+    assert(jobs == 1, s"expected a single-pass run (1 Spark job), saw $jobs")
     assert(TableIO.committedUnits(clean) == (0 until units).toSet)
 
     val crashArgs = ExtractMain.Args(in = in, out = crashy, units = units,
@@ -102,25 +84,13 @@ class ResumeSpec extends AnyFunSuite {
     spark.createDataset(pages).repartition(3).write.parquet(in)
     val out = dir + "/out"
     val units = 8
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try assert(ExtractMain.run(spark, ExtractMain.Args(in = in, out = out, units = units)) == units)
-    finally {
-      var last = -1
-      var spins = 0
-      while (jobCount.get() != last && spins < 20) {
-        last = jobCount.get(); Thread.sleep(250); spins += 1
-      }
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    // the happy path takes exactly this budget; a readbackStats fallback
-    // (the audit found the tally short or long) would add jobs
-    assert(jobCount.get() <= 4, s"expected a single-pass run, saw ${jobCount.get()} jobs")
+    val (n, jobs) = SparkJobs.counted(spark)(
+      ExtractMain.run(spark, ExtractMain.Args(in = in, out = out, units = units)))
+    assert(n.get == units)
+    // the happy path is the write alone: no schema-inference job for the
+    // parquet input, no audit job; a readbackStats fallback (the audit found
+    // the tally short or long) would add jobs
+    assert(jobs == 1, s"expected a single-pass run (1 Spark job), saw $jobs")
     val truth = ExtractMain.readbackStats(spark, out + "/data")
     val manifests = TableIO.readManifests(out).map(m =>
       m.unitId -> ((m.rows, m.pagesOk, m.pagesErr, m.bytesIn, m.textChars))).toMap
@@ -134,8 +104,8 @@ class ResumeSpec extends AnyFunSuite {
 
   test("zero-row input commits empty manifests cleanly (audit must not crash on empty scratch)") {
     // a fresh run over an empty input writes only _SUCCESS to scratch; the
-    // exactly-once audit's scratch count must use the explicit schema (no
-    // parquet files to infer from) and the run must commit all units at 0
+    // exactly-once audit (0 written, 0 tallied) must not read scratch, and
+    // the run must commit all units at 0
     val out = Files.createTempDirectory("graft-empty").toString
     val args = ExtractMain.Args(in = "fixture:0", out = out, units = 4, groupSize = 2)
     assert(ExtractMain.run(spark, args) == 4)
@@ -144,6 +114,36 @@ class ResumeSpec extends AnyFunSuite {
     assert(ms.map(_.rows).sum == 0)
     // idempotent second run: nothing pending
     assert(ExtractMain.run(spark, args) == 0)
+  }
+
+  test("audit: a written count that differs from the tally commits readbackStats") {
+    // the decision run() makes after its write, driven with a tally that a
+    // retried stage inflated (unit 1 counted twice) and with a missing count
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-audit").toString
+    TableIO.init(out)
+    val runId = "audit01"
+    val scratch = TableIO.scratchDir(out, runId)
+    Seq(("u://1", 0, "", 100L, "hello"), ("u://2", 0, "Boom: x", 50L, ""),
+      ("u://3", 1, "", 10L, "ab\uD83D\uDE00"), ("u://4", 2, "", 40L, "xyz"))
+      .toDF("url", "unit", "error", "htmlBytes", "text")
+      .write.partitionBy("unit").parquet(scratch)
+    val truth = ExtractMain.readbackStats(spark, scratch)
+    val inflated = Map(0 -> Array(2L, 1L, 1L, 150L, 5L), 1 -> Array(2L, 2L, 0L, 20L, 6L),
+      2 -> Array(1L, 1L, 0L, 40L, 3L))
+    val stats = ExtractMain.audited(spark, scratch, inflated, Some(4L))
+    assert(stats == truth)
+    assert(ExtractMain.audited(spark, scratch, inflated, None) == truth)
+    // a matching count trusts the tally as it is
+    assert(ExtractMain.audited(spark, scratch, inflated, Some(5L))(1) == ((2L, 2L, 0L, 20L, 6L)))
+    for (u <- 0 until 3) {
+      val (rows, ok, err, bytes, chars) = stats(u)
+      TableIO.commitUnit(out, runId, TableIO.UnitManifest(u, runId, rows, ok, err, bytes, chars, 0L))
+    }
+    val manifests = TableIO.readManifests(out).map(m =>
+      m.unitId -> ((m.rows, m.pagesOk, m.pagesErr, m.bytesIn, m.textChars))).toMap
+    assert(manifests == ExtractMain.readbackStats(spark, out + "/data"))
+    assert(manifests(1) == ((1L, 1L, 0L, 10L, 3L)))
   }
 
   test("manifest json round-trips") {
