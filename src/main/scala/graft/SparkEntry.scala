@@ -283,10 +283,10 @@ object SparkEntry {
         .select(col("doc_id"), coalesce(col("n_neardups"), lit(0L)).as("n_neardups"))
     }),
     "d08_lang_id" -> ((s, d) =>
-      // native one-pass graft_lang_id scan; the regex langIdDF stays as
-      // the documented oracle-shaped reference form (TextExprSpec pins
-      // bit-equality, this DuckDB oracle gates the swap; the row kernel
-      // TextOps.langId stays for typed/stream paths)
+      // native one-pass graft_lang_id scan; the regex form
+      // (ReferenceForms.langIdDF, test tree) is the oracle-shaped reference
+      // (TextExprSpec pins bit-equality, this DuckDB oracle gates the swap;
+      // the row kernel TextOps.langId stays for typed/stream paths)
       TextOps.langIdFast(docs(s, d), col("text")).orderBy("doc_id")),
     "d09_fingerprint" -> ((s, d) => {
       import s.implicits._

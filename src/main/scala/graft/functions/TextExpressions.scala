@@ -275,7 +275,7 @@ object CanonUrl {
 
 /** Native Catalyst expression: one-pass language-ID features —
   * `struct(n_latin INT, n_cjk INT, lang STRING)` — replacing the ~12
-  * interpreted regex passes of the oracle-shaped `TextOps.langIdDF` form
+  * interpreted regex passes of the oracle-shaped `ReferenceForms.langIdDF` form
   * (6 char-class counts, a pad-and-double `regexp_replace`, 4 stopword
   * alternation counts, a diacritic count) with one code-point scan plus one
   * token scan, at BIT-IDENTICAL results (TextExprSpec pins the equivalence

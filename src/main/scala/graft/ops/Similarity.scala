@@ -22,8 +22,7 @@ import org.apache.spark.storage.StorageLevel
 object Similarity {
 
   /** sum(a[i]*b[i]) as double, left fold in index order — higher-order-
-    * function form, kept for mixed-type operands (e.g. float emb × double
-    * hyperplane literals in signatureExpr). */
+    * function form, kept for mixed-type operands. */
   def dot(a: Column, b: Column): Column =
     aggregate(
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
@@ -110,7 +109,8 @@ object Similarity {
   }
 
   /** Deterministic pseudo-gaussian hyperplanes (sum of 4 xorshift draws),
-    * shared by the literal-expression and broadcast signature paths. */
+    * shared by the broadcast signature path and its literal-expression
+    * reference form (`ReferenceForms.signatureExpr`, test tree). */
   private[graft] def planesFor(dim: Int, bits: Int, seed: Long): Array[Array[Double]] =
     Array.tabulate(bits, dim) { (b, d) =>
       var x = seed + b * 1341L + d * 7919L + 1
@@ -124,36 +124,18 @@ object Similarity {
       s / 2.0
     }
 
-  /** Random-hyperplane LSH signature as a Catalyst column: rows sharing a
-    * signature land in one bucket.
-    *
-    * NOTE: inlines `bits * dim` plane coefficients as plan LITERALS — fine at
-    * test dims, but at production dims (768+) x 24 bits x several tables that
-    * is ~100k literals in one expression tree: plan bloat and codegen
-    * fallback (64KB method limit). The production paths ([[lshTopK]],
-    * [[nearDupPairsLsh]]) therefore compute signatures via
-    * [[withSignatures]] — a typed map over a BROADCAST plane matrix,
-    * bit-identical to this expression (OpsSpec asserts equality at dim 16
-    * and dim 768). Kept as the readable reference form and for SQL callers. */
-  def signatureExpr(emb: Column, dim: Int, bits: Int, seed: Long): Column = {
-    val planes = planesFor(dim, bits, seed)
-    (0 until bits).map { b =>
-      val proj = aggregate(
-        zip_with(emb, lit(planes(b)), (x, p) => x.cast("double") * p),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   /** (vec_id, embedding) -> (vec_id, embedding, buckets ARRAY<LONG>) with one
     * random-hyperplane signature per seed, computed in a typed narrow map
-    * over a broadcast plane matrix — constant plan size at any dim/bits
-    * (the scale-safe form of [[signatureExpr]]; same double multiply-add in
-    * index order, so signatures are bit-identical — INCLUDING ragged rows: a
-    * null or wrong-length embedding null-poisons the expression's zip_with
-    * projection, so every bit is 0 there; this path emits signature 0 for
-    * exactly those rows instead of folding the available dims, keeping the
-    * two forms interchangeable at any input shape). */
+    * over a broadcast plane matrix — constant plan size at any dim/bits.
+    * A Catalyst-literal form would inline `bits * dim` plane coefficients
+    * per table: at production dims (768+) x 24 bits that is plan bloat and
+    * codegen fallback (64KB method limit). The literal form stays in the
+    * test tree as `ReferenceForms.signatureExpr`, and OpsSpec asserts the two
+    * are bit-identical at dim 16 and dim 768 (same double multiply-add in
+    * index order) — INCLUDING ragged rows: a null or wrong-length embedding
+    * null-poisons the expression's zip_with projection, so every bit is 0
+    * there; this path emits signature 0 for exactly those rows instead of
+    * folding the available dims. */
   def withSignatures(emb: DataFrame, dim: Int, bits: Int, seeds: Seq[Long]): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
@@ -164,7 +146,7 @@ object Similarity {
         val tables = bc.value
         it.map { case (id, e) =>
           val sigs = new Array[Long](tables.length)
-          // ragged guard: sigs stay 0, matching signatureExpr's null semantics
+          // ragged guard: sigs stay 0, matching the literal form's null semantics
           if (e != null && e.length == dim) {
             var t = 0
             while (t < tables.length) {
@@ -210,7 +192,7 @@ object Similarity {
       k: Int = 10, bits: Int = 0, seed: Long = 42L): DataFrame = {
     val nBits = if (bits > 0) bits else autoBits(emb.count())
     // broadcast-plane signatures: constant plan size at any dim (see
-    // withSignatures; bit-identical to the signatureExpr literal form).
+    // withSignatures; bit-identical to the literal-expression form).
     // The query side signs its OWN tiny isin-filtered scan: signatures are
     // row-local, and filtering bucketed instead would sit the isin above a
     // typed mapPartitions — no pushdown, so the full-corpus signature pass
@@ -383,7 +365,7 @@ object Similarity {
     val vecs = emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // one broadcast-plane pass computes ALL table signatures (constant plan
-    // size at any dim — the literal signatureExpr form would inline
+    // size at any dim — a literal-expression form would inline
     // nTables x bits x dim coefficients here)
     val banded = withSignatures(vecs, dim, nBits, (0 until nTables).map(t => seed + t * 1000003L))
       .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))

@@ -28,18 +28,11 @@ object TextOps {
     * Implemented by the native codegen'd [[graft.functions.AsciiTokens]]
     * byte-scan — `transform(regexp_extract_all(...), lower)` is an
     * interpreted higher-order function and was the dominant cost of every
-    * window/gram pass; [[asciiTokensViaRegexp]] keeps the SQL-shaped form as
-    * the reference the equivalence spec pins the native scan against (and
-    * documents exactly what the DuckDB oracles recompute). */
+    * window/gram pass; the SQL-shaped form (what the DuckDB oracles
+    * recompute) lives in the test tree as `ReferenceForms.asciiTokensViaRegexp`,
+    * the reference TokenExprSpec pins the native scan against. */
   def asciiTokens(text: Column): Column =
     graft.functions.TokenFunctions.asciiTokens(coalesce(text, lit("")))
-
-  /** Reference (slow) form of [[asciiTokens]] — oracle-shaped SQL; used only
-    * by the native/reference equivalence spec. */
-  private[graft] def asciiTokensViaRegexp(text: Column): Column =
-    transform(
-      regexp_extract_all(coalesce(text, lit("")), lit("[A-Za-z0-9]+"), lit(0)),
-      x => lower(x))
 
   /** `size(asciiTokens(text))` as one allocation-free native scan. */
   def asciiTokenCount(text: Column): Column =
@@ -135,19 +128,14 @@ object TextOps {
       col("doc_id").cast("long").as("doc_id"),
       graft.functions.TextFunctions.canonUrl(url).as("url_canon"))
 
-  /** Column-expression language ID — the same script-range/stopword heuristic
-    * as [[langId]] but as integer-exact codegen'd Catalyst expressions, so a
-    * third-party SQL engine can reproduce the decision bit-for-bit (every
-    * count is an integer; the language string is a pure CASE over them).
-    * Examines the first 4000 characters like the row kernel. Returns
-    * (doc_id, n_latin, n_cjk, detected_lang). */
-  /** Production/bench twin of [[langIdDF]]: the same
-    * (doc_id, n_latin, n_cjk, detected_lang) output from ONE native
-    * codegen'd scan (`graft_lang_id`) instead of ~12 interpreted regex
-    * passes — the signatureExpr precedent: the regex form below stays as
-    * the documented oracle-shaped reference, TextExprSpec pins
-    * bit-equality on adversarial + seeded-fuzz vectors, and the d08
-    * DuckDB oracle (which mirrors the regex form) gates the swap. */
+  /** Column language ID — the same script-range/stopword heuristic as
+    * [[langId]], examining the first 4000 characters like the row kernel,
+    * as (doc_id, n_latin, n_cjk, detected_lang) from ONE native codegen'd
+    * scan (`graft_lang_id`). Its oracle-shaped regex twin,
+    * `ReferenceForms.langIdDF` in the test tree, is integer-exact SQL a
+    * third-party engine reproduces bit-for-bit: TextExprSpec pins
+    * bit-equality on adversarial + seeded-fuzz vectors, and the d08 DuckDB
+    * oracle (which mirrors the regex form) gates the native scan. */
   def langIdFast(df: DataFrame, text: Column): DataFrame = {
     val f = graft.functions.TextFunctions.langIdFeatures(text)
     df.select(
@@ -155,52 +143,6 @@ object TextOps {
       coalesce(f.getField("n_latin"), lit(0)).as("n_latin"),
       coalesce(f.getField("n_cjk"), lit(0)).as("n_cjk"),
       coalesce(f.getField("lang"), lit("und")).as("detected_lang"))
-  }
-
-  def langIdDF(df: DataFrame, text: Column): DataFrame = {
-    val s = substring(text, 1, 4000)
-    def cnt(c: Column, pattern: String): Column =
-      coalesce(regexp_count(c, lit(pattern)), lit(0))
-    val cjk = cnt(s, "[\\x{4E00}-\\x{9FFF}]")
-    val kana = cnt(s, "[\\x{3040}-\\x{30FF}]")
-    val hangul = cnt(s, "[\\x{AC00}-\\x{D7AF}]")
-    val arab = cnt(s, "[\\x{0600}-\\x{06FF}]")
-    val cyr = cnt(s, "[\\x{0400}-\\x{04FF}]")
-    val latin = cnt(s, "[A-Za-z\\x{00C0}-\\x{017F}]")
-    val total = cjk + kana + hangul + arab + cyr + latin
-    // stopword counting matches the row kernel EXACTLY: the kernel counts
-    // literal " word " occurrences on a space-padded lowered string (so
-    // "the," adjacent to punctuation does NOT count, and adjacent words may
-    // share a delimiter space). Regex form: pad, then DOUBLE every space so
-    // non-overlapping "[ ]word[ ]" matches can't steal a shared delimiter —
-    // plain RE2-safe patterns, so the DuckDB oracle twin stays expressible
-    // (no lookahead).
-    val padded = regexp_replace(concat(lit(" "), lower(s), lit(" ")), " ", "  ")
-    def stops(ws: String*): Column = cnt(padded, "[ ](?:" + ws.mkString("|") + ")[ ]")
-    // diacritics counted on the LOWERED text like the kernel, so uppercase
-    // umlauts contribute too
-    val wEn = stops("the", "and", "of", "to", "is")
-    val wDe = stops("der", "und", "die", "das", "ist") + cnt(lower(s), "[äöüß]")
-    val wFr = stops("le", "la", "les", "et", "est")
-    val wEs = stops("el", "los", "las", "y", "es")
-    val latinLang =
-      when(greatest(wEn, wDe, wFr, wEs) === 0, lit("en"))
-        .when(wEn >= wDe && wEn >= wFr && wEn >= wEs, lit("en"))
-        .when(wDe >= wFr && wDe >= wEs, lit("de"))
-        .when(wFr >= wEs, lit("fr"))
-        .otherwise(lit("es"))
-    df.select(
-      col("doc_id").cast("long").as("doc_id"),
-      latin.as("n_latin"),
-      cjk.as("n_cjk"),
-      when(total === 0, lit("und"))
-        .when(kana * 5 >= total, lit("ja"))
-        .when(hangul * 2 >= total, lit("ko"))
-        .when(cjk * 2 >= total, lit("zh"))
-        .when(arab * 2 >= total, lit("ar"))
-        .when(cyr * 2 >= total, lit("ru"))
-        .when(latin * 2 >= total, latinLang)
-        .otherwise(lit("und")).as("detected_lang"))
   }
 
   // --- imperative kernels (row-level) ---------------------------------------

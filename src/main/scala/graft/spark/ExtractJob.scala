@@ -53,8 +53,8 @@ object ExtractJob {
   }
 }
 
-/** Smoke main: fixture corpus through the full Spark pipeline on local[*];
-  * prints extraction stats. `runMain graft.spark.ExtractDemo [nRows]`. */
+/** Smoke main: fixture corpus through the full Spark pipeline on local[8];
+  * prints extraction stats. `runMain graft.spark.ExtractDemo [nRows | --probe]`. */
 object ExtractDemo {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.flatMap(_.toIntOption).getOrElse(1000)
@@ -136,7 +136,7 @@ object ExtractDemo {
         .mapPartitions(_.map(i => graft.fixtures.FixtureGen.fixture(i).page))
 
     val t0 = System.nanoTime()
-    val out = ExtractJob.run(pages, salt = 16, sizeSort = args.contains("--sort"))
+    val out = ExtractJob.run(pages, salt = 16)
     val agg = out.agg(
       count(lit(1)).as("rows"),
       sum(when(col("error") =!= "", 1).otherwise(0)).as("errors"),

@@ -28,7 +28,7 @@ import graft.model.Page
   * spark-submit --class graft.spark.ExtractMain graft.jar \
   *   --in  <parquet dir of Page rows | fixture:<nRows>> \
   *   --out <output table root> \
-  *   [--units 64] [--group-size 8] [--salt 0] [--size-sort] [--fail-after-groups -1]
+  *   [--units 64] [--salt 0] [--fail-after-units -1]
   * }}}
   *
   * Execution model (scale design for 10^12 rows):
@@ -36,9 +36,9 @@ import graft.model.Page
   *     (pmod(xxhash64(url), units)) — the commit/resume granularity;
   *   - ONE Spark job per run: it writes every pending unit to scratch
   *     parquet partitioned by unit (the input is scanned once per run — no
-  *     per-group re-scan, no bucketed-input assumption), then units are
-  *     published `groupSize` at a time via TableIO.commitUnit (data rename
-  *     before manifest, both atomic) together with their lineage counters.
+  *     bucketed-input assumption), then each unit is published on its own
+  *     via TableIO.commitUnit (data rename before manifest, both atomic)
+  *     with its lineage counters, and the emptied scratch dir is removed.
   *     Nothing else starts a job on the happy path: parquet input is read
   *     with the `Page` schema and checked against one footer on the driver
   *     (no inference job), and the lineage is audited against the write's
@@ -53,7 +53,7 @@ import graft.model.Page
   *     skew salt inside ExtractJob.run, and the scratch write partitions by a
   *     column computed in the same stage as the extraction.
   *
-  * `--fail-after-groups k` injects a crash after k committed groups — the
+  * `--fail-after-units k` injects a crash after k committed units — the
   * resume test drives it (ResumeSpec).
   */
 object ExtractMain {
@@ -62,10 +62,8 @@ object ExtractMain {
       in: String = "",
       out: String = "",
       units: Int = 64,
-      groupSize: Int = 8,
       salt: Int = 0,
-      sizeSort: Boolean = false,
-      failAfterGroups: Int = -1,
+      failAfterUnits: Int = -1,
       master: Option[String] = None)
 
   def parseArgs(argv: Array[String]): Args = {
@@ -76,10 +74,8 @@ object ExtractMain {
         case "--in" => a = a.copy(in = argv(i + 1)); i += 2
         case "--out" => a = a.copy(out = argv(i + 1)); i += 2
         case "--units" => a = a.copy(units = argv(i + 1).toInt); i += 2
-        case "--group-size" => a = a.copy(groupSize = argv(i + 1).toInt); i += 2
         case "--salt" => a = a.copy(salt = argv(i + 1).toInt); i += 2
-        case "--size-sort" => a = a.copy(sizeSort = true); i += 1
-        case "--fail-after-groups" => a = a.copy(failAfterGroups = argv(i + 1).toInt); i += 2
+        case "--fail-after-units" => a = a.copy(failAfterUnits = argv(i + 1).toInt); i += 2
         case "--master" => a = a.copy(master = Some(argv(i + 1))); i += 2
         case other => throw new IllegalArgumentException(s"unknown arg $other")
       }
@@ -164,14 +160,21 @@ object ExtractMain {
     override def value: Map[Int, Array[Long]] = m.iterator.map { case (k, v) => k.toInt -> v }.toMap
   }
 
+  /** The four written columns the lineage counts, plus the `unit` partition
+    * column. */
+  private val ReadbackSchema =
+    StructType.fromDDL("unit INT, error STRING, htmlBytes BIGINT, text STRING")
+
   /** Exact per-unit lineage recomputed from the written scratch output (one
     * aggregation scan) — the fallback when the in-flight accumulator
     * disagrees with the written row count (a stage retry applied a partition
     * twice, or a plan change moved the counting map out of the result
-    * stage). Slower but ground truth: it aggregates what is ON DISK. */
+    * stage). Slower but ground truth: it aggregates what is ON DISK. The
+    * explicit schema skips inference, which would throw on a scratch without
+    * data files (a zero-row write whose count event came late). */
   private[graft] def readbackStats(spark: SparkSession,
       scratch: String): Map[Int, (Long, Long, Long, Long, Long)] =
-    spark.read.parquet(scratch)
+    spark.read.schema(ReadbackSchema).parquet(scratch)
       .groupBy("unit")
       .agg(count(lit(1)).as("rows"),
         sum(when(col("error") === "", 1L).otherwise(0L)).as("ok"),
@@ -238,18 +241,15 @@ object ExtractMain {
     val pages = pagesFor(spark, a.in)
     val scratch = TableIO.scratchDir(a.out, runId)
     // ONE extraction job writes ALL pending units (scratch partitioned by
-    // unit), then manifests publish group-by-group. The per-group version of
-    // this loop re-filtered the complete input once per group — units/
-    // groupSize full scans unless the input table was physically bucketed by
-    // xxhash64(url)%units. Now the input is scanned exactly once per run
-    // regardless of bucketing (ResumeSpec asserts the job count).
+    // unit), so the input is scanned exactly once per run whether or not it
+    // is bucketed by unit (ResumeSpec asserts the job count).
     // unit id is a pure function of url: deterministic across runs and
     // parallelism levels — the resume key
     val unitOf = pmod(xxhash64(col("url")), lit(a.units.toLong)).cast("int")
     val slice =
       if (committed.isEmpty) pages // fresh run: no filter at all
       else pages.filter(unitOf.isin(pending: _*)).as[Page]
-    val extracted = ExtractJob.run(slice, a.salt, a.sizeSort)
+    val extracted = ExtractJob.run(slice, a.salt)
     // lineage counters ride INSIDE the write job: an always-true filter
     // whose non-deterministic UDF tallies the four scalar columns the
     // lineage needs into a per-unit accumulator — one pass over the output
@@ -287,27 +287,24 @@ object ExtractMain {
         .option("parquet.enable.dictionary#text", "false")
         // scratch is local by construction (TableIO is java.nio)
         .options(LocalFs.writerOptions)
+        // no _SUCCESS marker: each unit's manifest is the commit record, and
+        // without it the scratch dir is empty once every unit is published
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .parquet(scratch)
       written.rows(WrittenRowsWaitMs)
     } finally spark.listenerManager.unregister(written)
     val stats = audited(spark, scratch, acc.value, writtenRows)
-    // publish in groups: a crash between group commits leaves a resumable
-    // prefix (the --fail-after-groups injection point, ResumeSpec)
-    var done = 0
-    var groups = 0
-    pending.grouped(a.groupSize).foreach { group =>
-      if (a.failAfterGroups >= 0 && groups >= a.failAfterGroups)
-        throw new InjectedFailure(s"injected crash after $groups groups")
-      val now = System.currentTimeMillis()
-      for (u <- group) {
-        val (rows, ok, err, bytes, chars) = stats.getOrElse(u, (0L, 0L, 0L, 0L, 0L))
-        TableIO.commitUnit(a.out, runId,
-          TableIO.UnitManifest(u, runId, rows, ok, err, bytes, chars, now))
-        done += 1
-      }
-      groups += 1
+    // publish unit by unit: a crash between commits leaves a resumable
+    // prefix (the --fail-after-units injection point, ResumeSpec)
+    for ((u, done) <- pending.zipWithIndex) {
+      if (done == a.failAfterUnits)
+        throw new InjectedFailure(s"injected crash after $done units")
+      val (rows, ok, err, bytes, chars) = stats.getOrElse(u, (0L, 0L, 0L, 0L, 0L))
+      TableIO.commitUnit(a.out, runId,
+        TableIO.UnitManifest(u, runId, rows, ok, err, bytes, chars, System.currentTimeMillis()))
     }
-    done
+    TableIO.removeScratch(a.out, runId)
+    pending.length
   }
 
   def main(argv: Array[String]): Unit = {

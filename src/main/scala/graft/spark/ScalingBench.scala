@@ -15,7 +15,7 @@ import graft.model.Page
   * would see. Prints one JSON line with pages/s, MB/s and the efficiency
   * quotient (T_n/T_4n)/(4n/n).
   *
-  * `runMain graft.spark.ScalingBench [nPages] [iters]`
+  * `runMain graft.spark.ScalingBench [nPages] [iters] [corpusDir]`
   */
 object ScalingBench {
 
@@ -94,13 +94,10 @@ object ScalingBench {
     val n = args.headOption.flatMap(_.toLongOption).getOrElse(50000L)
     val iters = args.drop(1).headOption.flatMap(_.toIntOption).getOrElse(3)
 
-    // optional fixed corpus dir (arg 3): reused if already materialized, so
-    // MultiJvmBench can share the same input
+    // optional fixed corpus dir (arg 3): reused if already materialized
     val dir = args.drop(2).headOption
       .getOrElse(java.nio.file.Files.createTempDirectory("graft-bench-corpus").toString)
     if (!new java.io.File(dir, "_SUCCESS").exists()) materialize(n, dir)
-    // corpus-prep mode for MultiJvmBench (which measures in child JVMs)
-    if (args.contains("--materialize-only")) return
 
     // global JIT warmup (high parallelism), discarded
     val w = session(32)

@@ -14,9 +14,10 @@ import scala.jdk.CollectionConverters._
   * {{{
   *   <root>/data/unit=<id>/part-….parquet  -- committed data for one url bucket
   *   <root>/_manifests/unit-<id>.json    -- commit record + lineage counters
-  *   <root>/data/.run-<runId>/...        -- uncommitted scratch (crash debris
-  *                                          is ignored by readers and culled
-  *                                          by the next run)
+  *   <root>/data/.run-<runId>/...        -- a live run's uncommitted scratch
+  *                                          (a successful run removes it;
+  *                                          crash debris is ignored by readers
+  *                                          and culled by a later run)
   * }}}
   *
   * A unit is VISIBLE iff its manifest file exists; data-dir renames happen
@@ -94,6 +95,13 @@ object TableIO {
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
     true
   }
+
+  /** Remove a run's scratch dir once every unit has been moved out of it.
+    * Non-recursive: a scratch that still holds anything is left in place for
+    * [[cullScratch]]. True iff the directory was removed. */
+  def removeScratch(root: String, runId: String): Boolean =
+    try Files.deleteIfExists(Paths.get(scratchDir(root, runId)))
+    catch { case _: java.nio.file.DirectoryNotEmptyException => false }
 
   /** Remove scratch debris left by previous CRASHED runs. A scratch dir is
     * only culled once it has been untouched for `graceMs` (default 6 h):

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Similarity, TextOps}
+import graft.ops.{Dedup, ReferenceForms, Similarity, TextOps}
 
 /** Planted-truth tests for the training-data operators: exact/near dup
   * detection must find the planted pairs and nothing across distinct docs;
@@ -534,7 +534,7 @@ class OpsSpec extends AnyFunSuite {
     }
     val df = rows.toDF("vec_id", "embedding")
     val bits = Similarity.autoBits(df.count())
-    val occ = df.select(Similarity.signatureExpr(col("embedding"), 16, bits, 42L).as("b"))
+    val occ = df.select(ReferenceForms.signatureExpr(col("embedding"), 16, bits, 42L).as("b"))
       .groupBy("b").count().agg(max("count")).collect()(0).getLong(0)
     assert(occ <= 64L * 8, s"max bucket occupancy $occ with bits=$bits")
   }
@@ -549,7 +549,7 @@ class OpsSpec extends AnyFunSuite {
       val df = rows.toDF("vec_id", "embedding")
       val bits = 24
       val viaExpr = df
-        .select(col("vec_id"), Similarity.signatureExpr(col("embedding"), dim, bits, 42L).as("b"))
+        .select(col("vec_id"), ReferenceForms.signatureExpr(col("embedding"), dim, bits, 42L).as("b"))
         .collect().map(r0 => r0.getLong(0) -> r0.getLong(1)).toMap
       val viaBroadcast = Similarity.withSignatures(df, dim, bits, Seq(42L))
         .select(col("vec_id"), col("buckets").getItem(0).as("b"))
@@ -561,7 +561,7 @@ class OpsSpec extends AnyFunSuite {
         .select(col("vec_id"), col("buckets")).collect()
         .map(r0 => r0.getLong(0) -> r0.getSeq[Long](1)).toMap
       val viaExpr2 = df
-        .select(col("vec_id"), Similarity.signatureExpr(col("embedding"), dim, bits, seeds(1)).as("b"))
+        .select(col("vec_id"), ReferenceForms.signatureExpr(col("embedding"), dim, bits, seeds(1)).as("b"))
         .collect().map(r0 => r0.getLong(0) -> r0.getLong(1)).toMap
       assert(multi.forall { case (id, sigs) => sigs(0) == viaExpr(id) && sigs(1) == viaExpr2(id) })
     }
@@ -580,7 +580,7 @@ class OpsSpec extends AnyFunSuite {
       (4L, Array.empty[Float]))
     val df = rows.toDF("vec_id", "embedding")
     val viaExpr = df
-      .select(col("vec_id"), Similarity.signatureExpr(col("embedding"), dim, 24, 42L).as("b"))
+      .select(col("vec_id"), ReferenceForms.signatureExpr(col("embedding"), dim, 24, 42L).as("b"))
       .collect().map(r0 => r0.getLong(0) -> (if (r0.isNullAt(1)) 0L else r0.getLong(1))).toMap
     val viaBroadcast = Similarity.withSignatures(df, dim, 24, Seq(42L))
       .select(col("vec_id"), col("buckets").getItem(0).as("b"))
@@ -664,7 +664,7 @@ class OpsSpec extends AnyFunSuite {
       // adjacent stopwords share a delimiter space; overlap-safe counting
       "is is is el la word words")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val colLang = TextOps.langIdDF(df, col("text")).collect()
+    val colLang = ReferenceForms.langIdDF(df, col("text")).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("detected_lang"))).toMap
     for ((t, i) <- texts.zipWithIndex)
       assert(colLang(i.toLong) == TextOps.langId(t),

@@ -1,10 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.spark.{ExtractMain, TableIO}
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+import scala.jdk.CollectionConverters._
 
 /** North-rule resumability gate: a killed run resumes from the last committed
   * snapshot and converges to byte-identical table contents vs a clean run. */
@@ -26,31 +28,50 @@ class ResumeSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
   }
 
-  test("crash after 2 groups, resume completes; contents identical to clean run") {
+  private def names(dir: Path): Set[String] = {
+    val st = Files.list(dir)
+    try st.iterator().asScala.map(_.getFileName.toString).toSet finally st.close()
+  }
+
+  /** The entries of `<root>/data`: committed `unit=*` dirs and any scratch. */
+  private def dataEntries(root: String): Set[String] = names(Paths.get(root, "data"))
+
+  private def unitDirs(units: Int): Set[String] = (0 until units).map(u => s"unit=$u").toSet
+
+  /** Committed rows, `unit` column included, and per-unit manifest counters
+    * (runId and commit time aside). */
+  private def snapshot(root: String): (DataFrame, Map[Int, (Long, Long, Long, Long, Long)]) = {
+    val rows = spark.read.option("basePath", Paths.get(root, "data").toString)
+      .parquet(TableIO.committedDataPaths(root): _*)
+    val manifests = TableIO.readManifests(root).map(m =>
+      m.unitId -> ((m.rows, m.pagesOk, m.pagesErr, m.bytesIn, m.textChars))).toMap
+    (rows, manifests)
+  }
+
+  test("crash after 8 units, resume completes; contents identical to clean run") {
     spark.sparkContext.setLogLevel("WARN")
     val clean = Files.createTempDirectory("graft-clean").toString
     val crashy = Files.createTempDirectory("graft-crashy").toString
     val in = "fixture:300"
     val units = 16
 
-    val cleanArgs = ExtractMain.Args(in = in, out = clean, units = units, groupSize = 4)
+    val cleanArgs = ExtractMain.Args(in = in, out = clean, units = units)
     // single-pass contract: ONE extraction+write job per run — lineage
     // counters ride the write job in an accumulator, and the exactly-once
     // audit reads the write's own row count, so there is no stats scan of
-    // the output, no footer-count job and no per-group input re-scan.
+    // the output and no footer-count job.
     val (n, jobs) = SparkJobs.counted(spark)(ExtractMain.run(spark, cleanArgs))
     assert(n.get == units)
     assert(jobs == 1, s"expected a single-pass run (1 Spark job), saw $jobs")
     assert(TableIO.committedUnits(clean) == (0 until units).toSet)
 
-    val crashArgs = ExtractMain.Args(in = in, out = crashy, units = units,
-      groupSize = 4, failAfterGroups = 2)
+    val crashArgs = ExtractMain.Args(in = in, out = crashy, units = units, failAfterUnits = 8)
     intercept[ExtractMain.InjectedFailure] { ExtractMain.run(spark, crashArgs) }
     val afterCrash = TableIO.committedUnits(crashy)
     assert(afterCrash.size == 8, s"expected 8 committed units, got ${afterCrash.size}")
 
     // resume: only the pending units run; previously committed are skipped
-    val resumed = ExtractMain.run(spark, crashArgs.copy(failAfterGroups = -1))
+    val resumed = ExtractMain.run(spark, crashArgs.copy(failAfterUnits = -1))
     assert(resumed == units - 8)
     assert(TableIO.committedUnits(crashy) == (0 until units).toSet)
 
@@ -64,7 +85,75 @@ class ResumeSpec extends AnyFunSuite {
     assert(ms.map(_.bytesIn).sum > 0)
 
     // idempotent: nothing pending on a third invocation
-    assert(ExtractMain.run(spark, crashArgs.copy(failAfterGroups = -1)) == 0)
+    assert(ExtractMain.run(spark, crashArgs.copy(failAfterUnits = -1)) == 0)
+  }
+
+  test("resume converges from each crash point of the publish loop") {
+    val in = "fixture:300"
+    val units = 16
+    val clean = Files.createTempDirectory("graft-kill-clean").toString
+    assert(ExtractMain.run(spark, ExtractMain.Args(in = in, out = clean, units = units)) == units)
+    // a successful run leaves only committed units: its scratch is removed
+    assert(dataEntries(clean) == unitDirs(units))
+    val (cleanRows, cleanManifests) = snapshot(clean)
+    assert(cleanRows.count() == 300)
+
+    val k = 5 // units committed before the crash; unit k is the next to publish
+    def moveScratchUnit(out: String, runId: String): Unit =
+      Files.move(Paths.get(TableIO.scratchDir(out, runId), s"unit=$k"),
+        Paths.get(out, "data", s"unit=$k"), StandardCopyOption.ATOMIC_MOVE)
+    // each kill point as the debris it leaves on top of a --fail-after-units
+    // k crash, which stops before unit k's data rename
+    val killPoints: Seq[(String, (String, String) => Unit)] = Seq(
+      ("before the data rename", (_: String, _: String) => ()),
+      ("between the data rename and the manifest", moveScratchUnit _),
+      ("between the manifest write and its move", { (out: String, runId: String) =>
+        moveScratchUnit(out, runId)
+        Files.writeString(Paths.get(out, "_manifests", s".tmp-unit-$k-$runId.json"),
+          TableIO.renderManifest(TableIO.UnitManifest(k, runId, 1, 1, 0, 1, 1, 0L)))
+      }))
+    for ((point, debris) <- killPoints) {
+      val out = Files.createTempDirectory("graft-kill").toString
+      val args = ExtractMain.Args(in = in, out = out, units = units, failAfterUnits = k)
+      intercept[ExtractMain.InjectedFailure] { ExtractMain.run(spark, args) }
+      assert(TableIO.committedUnits(out) == (0 until k).toSet, point)
+      val scratch = dataEntries(out).filter(_.startsWith(".run-"))
+      assert(scratch.size == 1, s"$point: scratch dirs $scratch")
+      val runId = scratch.head.stripPrefix(".run-")
+      assert(!Files.exists(Paths.get(out, "data", s"unit=$k")), point)
+      assert(Files.isDirectory(Paths.get(TableIO.scratchDir(out, runId), s"unit=$k")), point)
+      debris(out, runId)
+
+      assert(ExtractMain.run(spark, args.copy(failAfterUnits = -1)) == units - k, point)
+      val (rows, manifests) = snapshot(out)
+      assert(manifests == cleanManifests, point)
+      assert(rows.exceptAll(cleanRows).isEmpty && cleanRows.exceptAll(rows).isEmpty, point)
+      val tmp = Files.walk(Paths.get(out)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith(".tmp-")).toList
+      assert(tmp.isEmpty, s"$point: $tmp")
+      // the resume removed its own scratch; the crashed run's is left for
+      // cullScratch, which waits out its grace period
+      assert(dataEntries(out) == unitDirs(units) + s".run-$runId", point)
+    }
+  }
+
+  test("removeScratch removes only an empty scratch dir; cullScratch takes the rest") {
+    val out = Files.createTempDirectory("graft-scratch").toString
+    TableIO.init(out)
+    val empty = Files.createDirectories(Paths.get(TableIO.scratchDir(out, "empty01")))
+    assert(TableIO.removeScratch(out, "empty01"))
+    assert(!Files.exists(empty))
+    assert(!TableIO.removeScratch(out, "missing1"))
+    val stray = Paths.get(TableIO.scratchDir(out, "stray001"), "unit=3", "part-0.parquet")
+    Files.createDirectories(stray.getParent)
+    Files.writeString(stray, "x")
+    assert(!TableIO.removeScratch(out, "stray001"))
+    assert(Files.exists(stray), "a scratch that is not empty is not deleted recursively")
+    // once past the grace period, the next run's cull removes it
+    val old = FileTime.fromMillis(System.currentTimeMillis() - 7L * 3600 * 1000)
+    for (p <- Seq(stray, stray.getParent, stray.getParent.getParent)) Files.setLastModifiedTime(p, old)
+    TableIO.cullScratch(out)
+    assert(dataEntries(out).isEmpty)
   }
 
   test("in-job lineage tally equals a readback of the committed data") {
@@ -103,13 +192,15 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("zero-row input commits empty manifests cleanly (audit must not crash on empty scratch)") {
-    // a fresh run over an empty input writes only _SUCCESS to scratch; the
-    // exactly-once audit (0 written, 0 tallied) must not read scratch, and
-    // the run must commit all units at 0
+    // a fresh run over an empty input writes no file to scratch (no
+    // _SUCCESS marker); the exactly-once audit (0 written, 0 tallied) must
+    // not read scratch, the run must commit all units at 0, and the empty
+    // scratch dir is removed
     val out = Files.createTempDirectory("graft-empty").toString
-    val args = ExtractMain.Args(in = "fixture:0", out = out, units = 4, groupSize = 2)
+    val args = ExtractMain.Args(in = "fixture:0", out = out, units = 4)
     assert(ExtractMain.run(spark, args) == 4)
     assert(TableIO.committedUnits(out) == (0 until 4).toSet)
+    assert(dataEntries(out) == unitDirs(4))
     val ms = TableIO.readManifests(out)
     assert(ms.map(_.rows).sum == 0)
     // idempotent second run: nothing pending
@@ -144,6 +235,15 @@ class ResumeSpec extends AnyFunSuite {
       m.unitId -> ((m.rows, m.pagesOk, m.pagesErr, m.bytesIn, m.textChars))).toMap
     assert(manifests == ExtractMain.readbackStats(spark, out + "/data"))
     assert(manifests(1) == ((1L, 1L, 0L, 10L, 3L)))
+  }
+
+  test("audit fallback over a scratch without data files finds no units") {
+    // a zero-row write whose count event missed the wait: the readback must
+    // not need a data file to infer a schema from
+    val out = Files.createTempDirectory("graft-audit-empty").toString
+    TableIO.init(out)
+    val scratch = Files.createDirectories(Paths.get(TableIO.scratchDir(out, "empty01"))).toString
+    assert(ExtractMain.audited(spark, scratch, Map.empty, None) == Map.empty)
   }
 
   test("manifest json round-trips") {

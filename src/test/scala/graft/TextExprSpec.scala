@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.functions.{CanonUrl, NfcNormalize}
-import graft.ops.TextOps
+import graft.ops.{ReferenceForms, TextOps}
 
 /** Planted-truth tests for the native text expressions (graft_nfc,
   * graft_canon_url): pure-function vectors on the companions, then the same
@@ -161,7 +161,7 @@ class TextExprSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val df = rows.toDF("doc_id", "text")
     val fast = TextOps.langIdFast(df, col("text")).orderBy("doc_id").collect()
-    val ref = TextOps.langIdDF(df, col("text")).orderBy("doc_id").collect()
+    val ref = ReferenceForms.langIdDF(df, col("text")).orderBy("doc_id").collect()
     assert(fast.length == ref.length)
     fast.zip(ref).foreach { case (f, r) =>
       if (f != r) fail(s"fast=$f ref=$r for doc ${f.getLong(0)}: '${

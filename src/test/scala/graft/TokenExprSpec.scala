@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{AsciiTokenCount, AsciiTokens, TokenFunctions, WindowXx64Keys}
-import graft.ops.TextOps
+import graft.ops.{ReferenceForms, TextOps}
 
 /** The native tokenizer/window-key expressions: pure-function vectors on the
   * companions, then DataFrame equivalence against the oracle-shaped regexp
@@ -74,13 +74,13 @@ class TokenExprSpec extends AnyFunSuite {
     val df = vectors.toDF("t")
     val both = df.select(
       TextOps.asciiTokens(col("t")).as("native"),
-      TextOps.asciiTokensViaRegexp(col("t")).as("ref")).collect()
+      ReferenceForms.asciiTokensViaRegexp(col("t")).as("ref")).collect()
     for (r <- both)
       assert(r.getSeq[String](0) == r.getSeq[String](1))
     // null text: both conventions coalesce to no tokens
     val nulls = Seq[Option[String]](None).toDF("t").select(
       TextOps.asciiTokens(col("t")).as("native"),
-      TextOps.asciiTokensViaRegexp(col("t")).as("ref"),
+      ReferenceForms.asciiTokensViaRegexp(col("t")).as("ref"),
       TextOps.asciiTokenCount(col("t")).as("cnt")).collect().head
     assert(nulls.getSeq[String](0) == Seq())
     assert(nulls.getSeq[String](1) == Seq())
