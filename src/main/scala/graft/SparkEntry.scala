@@ -285,8 +285,7 @@ object SparkEntry {
     "d08_lang_id" -> ((s, d) =>
       // native one-pass graft_lang_id scan; the regex form
       // (ReferenceForms.langIdDF, test tree) is the oracle-shaped reference
-      // (TextExprSpec pins bit-equality, this DuckDB oracle gates the swap;
-      // the row kernel TextOps.langId stays for typed/stream paths)
+      // (TextExprSpec pins bit-equality, this DuckDB oracle gates the swap)
       TextOps.langIdFast(docs(s, d), col("text")).orderBy("doc_id")),
     "d09_fingerprint" -> ((s, d) => {
       import s.implicits._

@@ -190,29 +190,14 @@ object Assembler {
   }
 }
 
-/** Line-join kernels shared by the PDF branch and any geometric assembly —
-  * the reference's smart text join
-  * (/root/reference/src/oarocr/stitching.rs:603-697,731-733).
+/** The join rule of the reference's smart text join
+  * (src/oarocr/stitching.rs:603-697,731-733), applied by
+  * `PdfParser.sortAndJoin`.
   */
 object JoinRules {
-  /** Insert a space between two adjacent same-line fragments only when the
-    * previous fragment ends in ASCII alphabetic (reference `needs_space_after`,
-    * /root/reference/src/oarocr/stitching.rs:731-733); CJK and punctuation
-    * join without a space. */
   /** The single definition of the space-insertion class: a fragment boundary
-    * takes a space only after an ASCII letter (CJK/RTL/digits join bare). */
+    * takes a space only after an ASCII letter (reference `needs_space_after`,
+    * stitching.rs:731-733); CJK, RTL, digits and punctuation join bare. */
   @inline def isAsciiLetter(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-
-  @inline def needsSpaceAfter(prev: String): Boolean =
-    prev.nonEmpty && isAsciiLetter(prev.charAt(prev.length - 1))
-
-  def joinLine(fragments: Seq[String]): String = {
-    val sb = new java.lang.StringBuilder(64)
-    for (f <- fragments) {
-      if (sb.length() > 0 && isAsciiLetter(sb.charAt(sb.length() - 1))) sb.append(' ')
-      sb.append(f)
-    }
-    sb.toString
-  }
 }

@@ -141,8 +141,9 @@ object Cells {
 
 /** Enhanced reading-order sort — port of the reference's weighted-distance
   * insertion (/root/reference/src/processors/layout_sorting.rs:125-471):
-  * headers first, footers last; body text regions keep their XY-cut order and
-  * the floating elements (doc titles, vision anchors = tables/figures,
+  * headers first, footers last; body text regions keep the projection-profile
+  * order `PdfParser.textRegions` gives them (columns left to right, regions
+  * top to bottom) and the floating elements (doc titles, vision anchors = tables/figures,
   * paragraph titles) are inserted one by one next to their nearest neighbor
   * under an edge-distance metric weighted per element class.
   */
@@ -269,7 +270,7 @@ object LayoutSort {
   }
 
   /** Full enhanced order: headers (by y) ++ main ++ footers (by y), where
-    * main = XY-cut-ordered NormalText with DocTitle, then Vision, then
+    * main = the region-ordered NormalText with DocTitle, then Vision, then
     * ParaTitle blocks weighted-inserted (each class pre-sorted by y). */
   def enhancedOrder(
       headers: Vector[Sortable], footers: Vector[Sortable],
@@ -279,106 +280,5 @@ object LayoutSort {
     for (b <- floating.filter(_.label == Vision).sortBy(_.box.y1)) weightedInsert(b, sorted)
     for (b <- floating.filter(_.label == ParaTitle).sortBy(_.box.y1)) weightedInsert(b, sorted)
     headers.sortBy(_.box.y1) ++ sorted ++ footers.sortBy(_.box.y1)
-  }
-}
-
-/** Polygon kernels the reference ships for rotated/quad detection boxes
-  * (/root/reference/src/processors/geometry.rs:210-429): convex hull
-  * (Graham scan), minimum-area enclosing rectangle (rotating calipers over
-  * the hull), and Douglas-Peucker polyline simplification. The PDF branch is
-  * axis-aligned today; these are the kernels a rotated-box dialect plugs into.
-  */
-object Poly {
-
-  type Pt = (Double, Double)
-
-  @inline private def cross(o: Pt, a: Pt, b: Pt): Double =
-    (a._1 - o._1) * (b._2 - o._2) - (a._2 - o._2) * (b._1 - o._1)
-
-  /** Convex hull in counter-clockwise order (Andrew monotone chain — same
-    * result as the reference's Graham scan, fewer edge cases). Collinear
-    * points are dropped. */
-  def convexHull(points: IndexedSeq[Pt]): Vector[Pt] = {
-    val ps = points.distinct.sortBy(p => (p._1, p._2))
-    if (ps.length <= 2) return ps.toVector
-    val lower = scala.collection.mutable.ArrayBuffer.empty[Pt]
-    for (p <- ps) {
-      while (lower.length >= 2 && cross(lower(lower.length - 2), lower.last, p) <= 0)
-        lower.remove(lower.length - 1)
-      lower += p
-    }
-    val upper = scala.collection.mutable.ArrayBuffer.empty[Pt]
-    for (p <- ps.reverseIterator) {
-      while (upper.length >= 2 && cross(upper(upper.length - 2), upper.last, p) <= 0)
-        upper.remove(upper.length - 1)
-      upper += p
-    }
-    (lower.dropRight(1) ++ upper.dropRight(1)).toVector
-  }
-
-  /** Minimum-area enclosing rectangle via rotating calipers on the hull:
-    * (centerX, centerY, width, height, angleDegrees), angle in [0, 90). */
-  def minAreaRect(points: IndexedSeq[Pt]): (Double, Double, Double, Double, Double) = {
-    val hull = convexHull(points)
-    if (hull.isEmpty) return (0, 0, 0, 0, 0)
-    if (hull.length == 1) return (hull.head._1, hull.head._2, 0, 0, 0)
-    var best = (0.0, 0.0, 0.0, 0.0, 0.0)
-    var bestArea = Double.PositiveInfinity
-    val m = hull.length
-    for (i <- 0 until m) {
-      val (ax, ay) = hull(i)
-      val (bx, by) = hull((i + 1) % m)
-      val elen = math.hypot(bx - ax, by - ay)
-      if (elen > 0) {
-        val ux = (bx - ax) / elen; val uy = (by - ay) / elen // edge direction
-        val vx = -uy; val vy = ux                            // normal
-        var minU = Double.MaxValue; var maxU = Double.MinValue
-        var minV = Double.MaxValue; var maxV = Double.MinValue
-        for ((px, py) <- hull) {
-          val u = px * ux + py * uy
-          val v = px * vx + py * vy
-          minU = math.min(minU, u); maxU = math.max(maxU, u)
-          minV = math.min(minV, v); maxV = math.max(maxV, v)
-        }
-        val wdt = maxU - minU; val hgt = maxV - minV
-        val area = wdt * hgt
-        if (area < bestArea) {
-          bestArea = area
-          val cu = (minU + maxU) / 2; val cv = (minV + maxV) / 2
-          val cx = cu * ux + cv * vx; val cy = cu * uy + cv * vy
-          // fold the edge angle into [0, 90) — SWAPPING w/h when folding by
-          // the odd 90: an edge at 100° reported as (w, h, 10°) would put
-          // the wrong side along the 10° axis
-          var ang = math.toDegrees(math.atan2(uy, ux)) % 180.0
-          if (ang < 0) ang += 180.0
-          best =
-            if (ang >= 90.0) (cx, cy, hgt, wdt, ang - 90.0)
-            else (cx, cy, wdt, hgt, ang)
-        }
-      }
-    }
-    best
-  }
-
-  /** Douglas-Peucker polyline simplification with tolerance `eps`. */
-  def douglasPeucker(points: IndexedSeq[Pt], eps: Double): Vector[Pt] = {
-    if (points.length < 3) return points.toVector
-    def perpDist(p: Pt, a: Pt, b: Pt): Double = {
-      val dx = b._1 - a._1; val dy = b._2 - a._2
-      val len = math.hypot(dx, dy)
-      if (len == 0) math.hypot(p._1 - a._1, p._2 - a._2)
-      else math.abs(dy * p._1 - dx * p._2 + b._1 * a._2 - b._2 * a._1) / len
-    }
-    def rec(lo: Int, hi: Int): Vector[Pt] = {
-      var maxD = 0.0
-      var idx = -1
-      for (i <- (lo + 1) until hi) {
-        val d = perpDist(points(i), points(lo), points(hi))
-        if (d > maxD) { maxD = d; idx = i }
-      }
-      if (maxD > eps) rec(lo, idx).dropRight(1) ++ rec(idx, hi)
-      else Vector(points(lo), points(hi))
-    }
-    rec(0, points.length - 1)
   }
 }

@@ -49,24 +49,4 @@ object Entities {
       try String.valueOf(Character.toChars(Integer.parseInt(body.substring(1))))
       catch { case _: Exception => null }
     } else named.getOrElse(body, null)
-
-  /** Decode entities in `s`. Unknown entities pass through verbatim. */
-  def decode(s: String): String = {
-    var i = s.indexOf('&')
-    if (i < 0) return s
-    val sb = new java.lang.StringBuilder(s.length)
-    var last = 0
-    while (i >= 0 && i < s.length) {
-      val m = matchAt(s, i)
-      if (m != null) {
-        sb.append(s, last, i).append(m._1)
-        last = i + m._2
-        i = s.indexOf('&', last)
-      } else {
-        i = s.indexOf('&', i + 1)
-      }
-    }
-    sb.append(s, last, s.length)
-    sb.toString
-  }
 }

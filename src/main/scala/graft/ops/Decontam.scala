@@ -24,7 +24,8 @@ object Decontam {
   /** Space-joined word n-grams of a token array; fewer than n tokens →
     * empty. Implemented by the native codegen'd
     * [[graft.functions.TokenNgrams]] one-pass builder — the historical
-    * higher-order-function form ([[tokenNgramsViaHof]]) is interpreted
+    * higher-order-function form (`ReferenceForms.tokenNgramsViaHof`, test
+    * tree) is interpreted
     * (CodegenFallback) and additionally re-evaluates any computed expression
     * embedded in the lambda once PER ELEMENT, turning O(tokens) into
     * O(tokens²) per document when handed an unprojected tokenizer (measured
@@ -32,19 +33,6 @@ object Decontam {
     * exactly once, so that caller hazard is gone too. */
   def tokenNgrams(toks: Column, n: Int): Column =
     graft.functions.TokenFunctions.tokenNgrams(toks, n)
-
-  /** Reference (slow) HOF form of [[tokenNgrams]] — the SQL shape the
-    * DuckDB oracles recompute; used only by the equivalence spec. */
-  private[graft] def tokenNgramsViaHof(toks: Column, n: Int): Column = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-  }
-
-  /** Convenience single-expression form: grams straight from text. */
-  def wordNgrams(text: Column, n: Int): Column =
-    tokenNgrams(TextOps.asciiTokens(text), n)
 
   /** (doc_id, n_hits, contaminated) per corpus doc: n_hits counts gram
     * OCCURRENCES that appear anywhere in `benchmark`; contaminated = 1 iff

@@ -95,21 +95,6 @@ object Multimodal {
     out
   }
 
-  /** Frame sampling for a video-like payload: pick `k` evenly-spaced byte
-    * offsets (a real impl samples decoded frames at timestamps; offsets and
-    * batch shape are what Spark owns). Returns (frameIdx, offset, crc-ish). */
-  def sampleFrames(b: Array[Byte], k: Int): Array[(Int, Long, Long)] = {
-    if (b == null || b.isEmpty || k <= 0) return Array.empty
-    Array.tabulate(math.min(k, b.length)) { f =>
-      val off = (b.length.toLong * f) / math.min(k, b.length)
-      var h = 0xcbf29ce484222325L
-      var i = off.toInt
-      val e = math.min(b.length, off.toInt + 64)
-      while (i < e) { h = (h ^ (b(i) & 0xff)) * 0x100000001b3L; i += 1 }
-      (f, off, h)
-    }
-  }
-
   /** Typed metadata extraction over a binary column — one narrow batched map,
     * schema explicit, media bytes projected away immediately after. */
   def mediaMetaDF(spark: SparkSession, media: DataFrame,

@@ -6,10 +6,11 @@ import org.apache.spark.storage.StorageLevel
 
 /** Similarity search over an embedding column (Array[Float]).
   *
-  * All dot products run as Catalyst higher-order functions (zip_with +
-  * aggregate → whole-stage codegen, no UDF), with every element cast to
-  * DOUBLE and summed left-to-right in index order — the same fold the DuckDB
-  * oracle performs, so scores are bit-comparable.
+  * All dot products run through the native codegen'd graft_dot expression
+  * (no UDF), with every element cast to DOUBLE and summed left-to-right in
+  * index order — the same fold the DuckDB oracle performs, so scores are
+  * bit-comparable (OpsSpec pins it against the higher-order-function fold,
+  * `ReferenceForms.dot` in the test tree).
   *
   * Scale paths:
   *   - bruteForceTopK: exact; the query side is tiny and broadcast, the big
@@ -20,15 +21,6 @@ import org.apache.spark.storage.StorageLevel
   *     tests).
   */
 object Similarity {
-
-  /** sum(a[i]*b[i]) as double, left fold in index order — higher-order-
-    * function form, kept for mixed-type operands. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine over float vectors via the native codegen'd graft_dot expression
     * (same double fold, no per-pair zipped-array allocation —

@@ -128,11 +128,11 @@ object TextOps {
       col("doc_id").cast("long").as("doc_id"),
       graft.functions.TextFunctions.canonUrl(url).as("url_canon"))
 
-  /** Column language ID — the same script-range/stopword heuristic as
-    * [[langId]], examining the first 4000 characters like the row kernel,
-    * as (doc_id, n_latin, n_cjk, detected_lang) from ONE native codegen'd
-    * scan (`graft_lang_id`). Its oracle-shaped regex twin,
-    * `ReferenceForms.langIdDF` in the test tree, is integer-exact SQL a
+  /** Column language ID — a script-range/stopword heuristic over the first
+    * 4000 characters, as (doc_id, n_latin, n_cjk, detected_lang) from ONE
+    * native codegen'd scan (`graft_lang_id`). Its oracle-shaped regex twin,
+    * `ReferenceForms.langIdDF` in the test tree (itself pinned against the
+    * row form `ReferenceForms.langId`), is integer-exact SQL a
     * third-party engine reproduces bit-for-bit: TextExprSpec pins
     * bit-equality on adversarial + seeded-fuzz vectors, and the d08 DuckDB
     * oracle (which mirrors the regex form) gates the native scan. */
@@ -146,57 +146,6 @@ object TextOps {
   }
 
   // --- imperative kernels (row-level) ---------------------------------------
-
-  /** Cheap n-gram/char-class language ID heuristic (the reference's
-    * PP-LCNet-classifier analogue — a per-row classifier over cheap features,
-    * /root/reference/src/models/classification/pp_lcnet.rs:44-53).
-    * Returns ISO-ish code or "und".
-    */
-  def langId(text: String): String = {
-    if (text == null || text.isEmpty) return "und"
-    val n = math.min(text.length, 4000)
-    var cjk = 0; var arab = 0; var cyr = 0; var latin = 0; var hangul = 0; var kana = 0
-    var i = 0
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c >= 0x4E00 && c <= 0x9FFF) cjk += 1
-      else if (c >= 0x3040 && c <= 0x30FF) kana += 1
-      else if (c >= 0xAC00 && c <= 0xD7AF) hangul += 1
-      else if (c >= 0x0600 && c <= 0x06FF) arab += 1
-      else if (c >= 0x0400 && c <= 0x04FF) cyr += 1
-      else if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= 0xC0 && c <= 0x17F)) latin += 1
-      i += 1
-    }
-    val total = cjk + arab + cyr + latin + hangul + kana
-    if (total == 0) return "und"
-    if (kana * 5 >= total) "ja"
-    else if (hangul * 2 >= total) "ko"
-    else if (cjk * 2 >= total) "zh"
-    else if (arab * 2 >= total) "ar"
-    else if (cyr * 2 >= total) "ru"
-    else if (latin * 2 >= total) latinLang(text, n)
-    else "und"
-  }
-
-  /** Distinguish big latin languages by stopword/diacritic evidence
-    * (n-gram-heuristic style; deterministic). */
-  private def latinLang(text: String, n: Int): String = {
-    val t = " " + text.substring(0, n).toLowerCase + " "
-    def c(w: String): Int = {
-      var cnt = 0; var at = t.indexOf(w)
-      while (at >= 0) { cnt += 1; at = t.indexOf(w, at + 1) }
-      cnt
-    }
-    val en = c(" the ") + c(" and ") + c(" of ") + c(" to ") + c(" is ")
-    val de = c(" der ") + c(" und ") + c(" die ") + c(" das ") + c(" ist ") +
-      t.count(ch => ch == 'ä' || ch == 'ö' || ch == 'ü' || ch == 'ß')
-    val fr = c(" le ") + c(" la ") + c(" les ") + c(" et ") + c(" est ")
-    val es = c(" el ") + c(" los ") + c(" las ") + c(" y ") + c(" es ")
-    val best = math.max(math.max(en, de), math.max(fr, es))
-    if (best == 0) "en"
-    else if (best == en) "en" else if (best == de) "de"
-    else if (best == fr) "fr" else "es"
-  }
 
   /** 64-bit FNV-1a over UTF-8 — the deterministic base hash for fingerprints
     * and shingles (public-domain algorithm). */

@@ -14,9 +14,11 @@ import graft.model.Span
   * and the smart-join soft-wrap rule
   * (/root/reference/src/oarocr/stitching.rs:603-697).
   *
-  * The container libraries for real PDF decoding are not available here, so
-  * the payload is a deterministic synthetic dialect (FIXTURES.md §2) carrying
-  * exactly what the layout branch consumes — positioned element boxes:
+  * Two payload kinds reach the branch, and both become the positioned
+  * element boxes (`PdfPage`) the layout branch consumes. A real
+  * `%PDF-1.x` file goes to [[RealPdf]] (object scan, content-stream text
+  * objects, fonts and encodings). The deterministic synthetic dialect
+  * (FIXTURES.md §2) carries the boxes directly and is parsed here:
   *
   * {{{
   * %PDF-GRAFT 2\n
@@ -33,9 +35,9 @@ import graft.model.Span
   * E\n                          -- page end
   * }}}
   *
-  * The Spark-side plumbing (sniff, per-page flatten, geometric ordering,
-  * byte-offset spans, page-break join) is the real, tested part; swapping a
-  * real PDF text-object decoder in changes only `parsePayload`.
+  * `extract` dispatches on the header (`RealPdf.isReal`), then renders every
+  * page through the same ordering, table assembly, byte-offset spans and
+  * page-break join.
   */
 object PdfParser {
 
@@ -327,10 +329,7 @@ object PdfParser {
     val sb = new java.lang.StringBuilder(256)
     val used = Vector.newBuilder[TextBox]
     @inline def needsSpace(): Boolean =
-      sb.length() > 0 && sb.charAt(sb.length() - 1) != '\n' && {
-        val c = sb.charAt(sb.length() - 1)
-        (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-      }
+      sb.length() > 0 && JoinRules.isAsciiLetter(sb.charAt(sb.length() - 1))
     var prevLineRight = Double.NaN
     for (line <- lines.result()) {
       val ordered =

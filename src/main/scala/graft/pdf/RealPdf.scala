@@ -1216,9 +1216,6 @@ object RealPdf {
     }
   }
 
-  private[graft] def resyncTarget(b: Array[Byte], from: Int): Int =
-    new Resync(b).target(from)
-
   /** Scan every `N G obj ... endobj` in file order, resyncing on junk (xref
     * tables, binary garbage, truncation) by skipping to the next plausible
     * object header / trailer keyword, with a [[MaxResyncs]] cost cap. Also

@@ -31,11 +31,6 @@ object Classifier {
     * gate, shorter minimum. */
   val Listing: Profile = Profile(0.75, 1, 0.9)
 
-  /** link-density gate: blocks whose visible chars are mostly anchor text are
-    * navigation, not content (boilerpipe's canonical rule) */
-  val MaxLinkDensity = Article.maxLinkDensity
-  /** minimum words for a paragraph to count as content */
-  val MinContentWords = Article.minContentWords
   /** line width used for the text-density line-equivalent */
   val LineWidth = 80.0
 

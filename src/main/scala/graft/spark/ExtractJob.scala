@@ -56,8 +56,18 @@ object ExtractJob {
 /** Smoke main: fixture corpus through the full Spark pipeline on local[8];
   * prints extraction stats. `runMain graft.spark.ExtractDemo [nRows | --probe]`. */
 object ExtractDemo {
+  /** The fixture row count (1,000 when no argument is given), or None for
+    * `--probe`. Any other argument list throws, naming the usage. */
+  def rowsArg(args: Array[String]): Option[Int] = args match {
+    case Array() => Some(1000)
+    case Array("--probe") => None
+    case Array(a) if a.toIntOption.exists(_ > 0) => Some(a.toInt)
+    case _ => throw new IllegalArgumentException(
+      s"usage: ExtractDemo [nRows | --probe]; got '${args.mkString(" ")}'")
+  }
+
   def main(args: Array[String]): Unit = {
-    val n = args.headOption.flatMap(_.toIntOption).getOrElse(1000)
+    val rows = rowsArg(args)
     val spark = SparkSession.builder()
       .master("local[8]")
       .appName("graft-extract-demo")
@@ -71,8 +81,8 @@ object ExtractDemo {
     // distributed deterministic generation: rowIds parallelized, pages built
     // inside executors (no driver-side corpus materialization)
     val ts = new java.sql.Timestamp(0L)
-    val pages: Dataset[Page] =
-      if (args.contains("--probe")) {
+    val pages: Dataset[Page] = rows match {
+      case None =>
         // adversarial rows: empty, null html, garbage bytes, truncated PDF,
         // html-less text, deep nesting, only boilerplate
         val probes = Seq(
@@ -132,8 +142,10 @@ object ExtractDemo {
           Page("probe://huge-tag", ts, ("<p " + "x" * 100000 + ">words in a giant tag here</p>").getBytes, "", "en")
         )
         spark.createDataset(probes)
-      } else spark.range(n).as[Long]
-        .mapPartitions(_.map(i => graft.fixtures.FixtureGen.fixture(i).page))
+      case Some(n) =>
+        spark.range(n).as[Long]
+          .mapPartitions(_.map(i => graft.fixtures.FixtureGen.fixture(i).page))
+    }
 
     val t0 = System.nanoTime()
     val out = ExtractJob.run(pages, salt = 16)
@@ -154,7 +166,7 @@ object ExtractDemo {
       // actual row count, not the requested n — probe mode runs ~15 rows
       s"pages_per_sec=${agg.getLong(0) / secs}")
     // sample rows through the full encoder round-trip
-    val k = if (args.contains("--probe")) 20 else 1
+    val k = if (rows.isEmpty) 20 else 1
     for (sample <- out.orderBy(col("url")).limit(k).collect())
       println(s"sample url=${sample.url} err='${sample.error}' nKept=${sample.nKept} " +
         s"textHead=${sample.text.take(100).replace("\n", "\\n")}")

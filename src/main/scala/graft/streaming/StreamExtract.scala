@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.model.{ExtractedPage, Page}
 import graft.spark.ExtractJob
@@ -16,23 +15,9 @@ import graft.spark.ExtractJob
   * degradation) carry over verbatim.
   *
   * Scale notes: the map is narrow (no state, no shuffle), so micro-batch
-  * throughput equals batch throughput; watermarked windowed counters give the
-  * per-interval ingest metrics the reference logs per request
-  * (/root/reference/src/bin/server/server.rs:118-124) without a driver-side
-  * bottleneck.
+  * throughput equals batch throughput.
   */
 object StreamExtract {
-
-  /** Watermarked per-interval ingest metrics: pages, bytes, errors per
-    * 1-minute event-time window per lang. */
-  def ingestMetrics(extracted: Dataset[ExtractedPage]) =
-    extracted
-      .withWatermark("warc_ts", "2 minutes")
-      .groupBy(window(col("warc_ts"), "1 minute"), col("lang"))
-      .agg(
-        count(lit(1)).as("pages"),
-        sum(col("htmlBytes")).as("bytes_in"),
-        sum(when(col("error") =!= "", 1L).otherwise(0L)).as("errors"))
 
   /** Streaming exact-dedup with custom keyed state
     * (`KeyValueGroupedDataset.flatMapGroupsWithState`): the first page per

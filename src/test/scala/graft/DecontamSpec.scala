@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import graft.ops.Decontam
+import graft.ops.{Decontam, TextOps}
 
 /** Planted-truth tests for benchmark decontamination (n-gram overlap). */
 class DecontamSpec extends AnyFunSuite {
@@ -20,7 +20,8 @@ class DecontamSpec extends AnyFunSuite {
     import spark.implicits._
     val out = Seq((0L, "The quick Brown fox"), (1L, "two words"), (2L, ""))
       .toDF("doc_id", "text")
-      .select(col("doc_id"), Decontam.wordNgrams(col("text"), 3).as("g"))
+      .select(col("doc_id"),
+        Decontam.tokenNgrams(TextOps.asciiTokens(col("text")), 3).as("g"))
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getSeq[String](1)).toMap
     assert(out(0L) == Seq("the quick brown", "quick brown fox"))
     assert(out(1L).isEmpty && out(2L).isEmpty)

@@ -8,10 +8,11 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.spark.{ExtractMain, LocalFs, TableIO}
+import graft.spark.{ExtractDemo, ExtractMain, LocalFs, TableIO}
 
-/** The input check of `ExtractMain.pagesFor` and the fork-free scratch
-  * write (`LocalFs`) that `ExtractMain.run` commits from. */
+/** The input check of `ExtractMain.pagesFor`, the fork-free scratch
+  * write (`LocalFs`) that `ExtractMain.run` commits from, and the argument
+  * check of the `ExtractDemo` smoke main. */
 class ExtractMainSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -111,5 +112,16 @@ class ExtractMainSpec extends AnyFunSuite {
     assert(stockFs.mkdirs(new HPath(setgid.resolve("stock").toUri)))
     assert(mode(setgid.resolve("ours")) == mode(setgid.resolve("stock")))
     assert((mode(setgid.resolve("ours")) & 0x400) != 0, "setgid lost")
+  }
+
+  test("ExtractDemo takes one argument, a positive row count or --probe, and rejects the rest") {
+    assert(ExtractDemo.rowsArg(Array()) == Some(1000))
+    assert(ExtractDemo.rowsArg(Array("200")) == Some(200))
+    assert(ExtractDemo.rowsArg(Array("--probe")).isEmpty)
+    // main itself throws: the check runs before any SparkSession is built
+    for (bad <- Seq(Seq("--sort", "200"), Seq("200", "--sort"), Seq("abc"), Seq("0"))) {
+      val e = intercept[IllegalArgumentException](ExtractDemo.main(bad.toArray))
+      assert(e.getMessage.contains("usage: ExtractDemo [nRows | --probe]"), e.getMessage)
+    }
   }
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.html._
-import graft.assemble.{TitleLevel, JoinRules}
-import graft.geom.{Box, XYCut}
+import graft.assemble.TitleLevel
+import graft.geom.Box
 import graft.score.Classifier
 import graft.model.Page
 import graft.Extractor
@@ -17,12 +17,13 @@ class KernelSpec extends AnyFunSuite {
     BlockBuilder.build(html.getBytes(StandardCharsets.UTF_8), StandardCharsets.UTF_8)
 
   test("entities: named, numeric, unknown pass-through") {
-    assert(Entities.decode("a &amp; b") == "a & b")
-    assert(Entities.decode("&#65;&#x42;") == "AB")
-    assert(Entities.decode("&#x4E2D;") == "中")
-    assert(Entities.decode("&bogus; &amp") == "&bogus; &amp")
-    assert(Entities.decode("no entities") == "no entities")
-    assert(Entities.decode("&quot;q&quot;") == "\"q\"")
+    def decode(s: String): String = blocksOf(s"<p>$s</p>").map(_.text).mkString
+    assert(decode("a &amp; b") == "a & b")
+    assert(decode("&#65;&#x42;") == "AB")
+    assert(decode("&#x4E2D;") == "中")
+    assert(decode("&bogus; &amp") == "&bogus; &amp")
+    assert(decode("no entities") == "no entities")
+    assert(decode("&quot;q&quot;") == "\"q\"")
   }
 
   test("tokenizer: masks script/style/template content") {
@@ -122,6 +123,15 @@ class KernelSpec extends AnyFunSuite {
     assert(Cells.combineRectanglesKmeans(rects, 4) == rects)
     val two = Cells.combineRectanglesKmeans(rects, 2)
     assert(two.toSet == Set(Box(0, 0, 9, 4), Box(100, 0, 109, 4)))
+  }
+
+  test("text regions: two columns group left to right, each column's lines top-down") {
+    import graft.pdf.PdfParser.{TextBox, textRegions}
+    // col1: (0..80), col2: (200..280); two lines each, a 10 px line gap
+    def tb(x: Double, y: Double, t: String) = TextBox(Box(x, y, x + 80, y + 12), t, 0, 0)
+    val regions = textRegions(Vector(
+      tb(200, 40, "c2l1"), tb(0, 40, "c1l1"), tb(0, 62, "c1l2"), tb(200, 62, "c2l2")))
+    assert(regions.map(_.map(_.text)) == Vector(Vector("c1l1", "c1l2"), Vector("c2l1", "c2l2")))
   }
 
   test("sort-and-join: same-line tolerance joins with space (reference test vector)") {
@@ -241,23 +251,6 @@ class KernelSpec extends AnyFunSuite {
     val ftr = Sortable(Box(10, 780, 590, 792), NormalText, 5)
     val out = LayoutSort.enhancedOrder(Vector(hdr), Vector(ftr), Vector(r1, r2), Vector(doc, fig))
     assert(out.map(_.payload) == Vector(4, 2, 0, 3, 1, 5))
-  }
-
-  test("polygon kernels: convex hull, min-area rect, douglas-peucker") {
-    import graft.geom.Poly
-    val square = Vector((0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0), (5.0, 5.0))
-    val hull = Poly.convexHull(square)
-    assert(hull.toSet == Set((0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)))
-    val (cx, cy, w, h, _) = Poly.minAreaRect(square)
-    assert(math.abs(cx - 5) < 1e-9 && math.abs(cy - 5) < 1e-9)
-    assert(math.abs(w * h - 100) < 1e-6)
-    // rotated rectangle: min-area rect recovers the tilted extent, area < aabb area
-    val rot = Vector((0.0, 0.0), (8.0, 6.0), (5.0, 10.0), (-3.0, 4.0))
-    val (_, _, rw, rh, ang) = Poly.minAreaRect(rot)
-    assert(math.abs(rw * rh - 50.0) < 1e-6, s"area ${rw * rh}")
-    assert(ang > 0 && ang < 90)
-    val line = Vector((0.0, 0.0), (1.0, 0.05), (2.0, -0.04), (3.0, 0.0), (4.0, 5.0))
-    assert(Poly.douglasPeucker(line, 0.5) == Vector((0.0, 0.0), (3.0, 0.0), (4.0, 5.0)))
   }
 
   test("tokenizer: comments, doctype, PI skipped; literal < kept") {
@@ -417,10 +410,15 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("join rule: space only after ASCII alpha (reference stitching.rs:731-733)") {
-    assert(JoinRules.joinLine(Seq("A", "B")) == "A B")
-    assert(JoinRules.joinLine(Seq("end.", "next")) == "end.next")
-    assert(JoinRules.joinLine(Seq("中文", "词")) == "中文词")
-    assert(JoinRules.joinLine(Seq("num1", "x")) == "num1x")
+    import graft.pdf.PdfParser.{TextBox, sortAndJoin}
+    // two fragments on one visual line, left to right
+    def joinLine(frags: Seq[String]): String = sortAndJoin(
+      Vector(TextBox(Box(0, 0, 40, 10), frags(0), 0, 0),
+        TextBox(Box(50, 0, 90, 10), frags(1), 0, 0)), Box(0, 0, 100, 10))._1
+    assert(joinLine(Seq("A", "B")) == "A B")
+    assert(joinLine(Seq("end.", "next")) == "end.next")
+    assert(joinLine(Seq("中文", "词")) == "中文词")
+    assert(joinLine(Seq("num1", "x")) == "num1x")
   }
 
   test("table grid: rowspan/colspan occupancy (reference table_structure_decode.rs:210-291)") {
@@ -512,21 +510,6 @@ class KernelSpec extends AnyFunSuite {
   private lazy val bomLeDoc: Array[Byte] = {
     val s = "<html><body><p>unicode café 中文 words here</p></body></html>"
     Array(0xff.toByte, 0xfe.toByte) ++ s.getBytes(java.nio.charset.StandardCharsets.UTF_16LE)
-  }
-
-  test("xycut: two columns read column-major, lines top-down") {
-    // col1: (0..80), col2: (200..280); two lines each
-    val boxes = Array(
-      Box(200, 40, 280, 52), // c2 l1
-      Box(0, 40, 80, 52),    // c1 l1
-      Box(0, 62, 80, 74),    // c1 l2
-      Box(200, 62, 280, 74)) // c2 l2
-    assert(XYCut.readingOrder(boxes).toSeq == Seq(1, 2, 0, 3))
-  }
-
-  test("xycut: same line ordered left-to-right regardless of input order") {
-    val boxes = Array(Box(50, 10, 80, 22), Box(0, 11, 40, 23), Box(90, 9, 120, 21))
-    assert(XYCut.readingOrder(boxes).toSeq == Seq(1, 0, 2))
   }
 
   test("malformed html: unclosed tags and stray end tags survive") {
@@ -776,27 +759,5 @@ class KernelSpec extends AnyFunSuite {
         "<tr><td>1</td><td>2</td></tr><tr><td>3</td><td>4</td></tr></table>"
     val p = Page("u", new java.sql.Timestamp(0L), html.getBytes(StandardCharsets.UTF_8), "", "en")
     assert(Extractor.debugTables(p).nonEmpty)
-  }
-
-  test("minAreaRect: folding the angle by 90 swaps w/h so the triple stays consistent") {
-    import graft.geom.Poly
-    // 10x2 rectangle whose LONG side points at 100 degrees
-    val th = math.toRadians(100.0)
-    val (ux, uy) = (math.cos(th), math.sin(th))   // long axis
-    val (vx, vy) = (-uy, ux)                       // short axis
-    val pts = Vector(
-      (5 * ux + 1 * vx, 5 * uy + 1 * vy), (5 * ux - 1 * vx, 5 * uy - 1 * vy),
-      (-5 * ux + 1 * vx, -5 * uy + 1 * vy), (-5 * ux - 1 * vx, -5 * uy - 1 * vy))
-    val (cx, cy, w, h, ang) = Poly.minAreaRect(pts)
-    assert(math.abs(cx) < 1e-9 && math.abs(cy) < 1e-9)
-    assert(ang >= 0 && ang < 90, s"angle $ang")
-    // reconstruct: extent along the reported angle axis must equal the
-    // reported w; along its normal the reported h
-    val ra = math.toRadians(ang)
-    val (wx, wy) = (math.cos(ra), math.sin(ra))
-    val us = pts.map { case (px, py) => px * wx + py * wy }
-    val vs = pts.map { case (px, py) => -px * wy + py * wx }
-    assert(math.abs((us.max - us.min) - w) < 1e-6, s"w $w vs ${us.max - us.min}")
-    assert(math.abs((vs.max - vs.min) - h) < 1e-6, s"h $h vs ${vs.max - vs.min}")
   }
 }

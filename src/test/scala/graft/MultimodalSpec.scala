@@ -53,14 +53,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(a.toSeq != c.toSeq)
   }
 
-  test("frame sampling: evenly spaced offsets, deterministic") {
-    val b = FixtureGen.media(1)
-    val f = Multimodal.sampleFrames(b, 4)
-    assert(f.length == 4)
-    assert(f.map(_._2).toSeq == f.map(_._2).toSeq.sorted)
-    assert(f.toSeq == Multimodal.sampleFrames(b, 4).toSeq)
-  }
-
   test("word spans: offsets tile the words, CJK singletons") {
     val t = "hello 中文 world"
     val spans = graft.ops.TextOps.wordSpans(t)

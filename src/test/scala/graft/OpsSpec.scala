@@ -608,7 +608,7 @@ class OpsSpec extends AnyFunSuite {
       .crossJoin(embeddings.select(col("embedding").as("other")).limit(3))
     val both = df.select(
       dotF(col("embedding"), col("other")).as("native"),
-      Similarity.dot(col("embedding"), col("other")).as("hof"))
+      ReferenceForms.dot(col("embedding"), col("other")).as("hof"))
       .collect()
     assert(both.nonEmpty)
     for (r <- both)
@@ -636,13 +636,13 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("langId identifies scripts and latin stopword languages") {
-    assert(TextOps.langId("the cat and the dog went to the market and it is fine") == "en")
-    assert(TextOps.langId("der hund und die katze sind schön und das ist gut") == "de")
-    assert(TextOps.langId("中文文本的内容都是汉字组成的句子") == "zh")
-    assert(TextOps.langId("こんにちは世界のみなさんお元気ですか") == "ja")
-    assert(TextOps.langId("Привет мир это русский текст для проверки") == "ru")
-    assert(TextOps.langId("") == "und")
-    assert(TextOps.langId("12345 !!! ???") == "und")
+    assert(ReferenceForms.langId("the cat and the dog went to the market and it is fine") == "en")
+    assert(ReferenceForms.langId("der hund und die katze sind schön und das ist gut") == "de")
+    assert(ReferenceForms.langId("中文文本的内容都是汉字组成的句子") == "zh")
+    assert(ReferenceForms.langId("こんにちは世界のみなさんお元気ですか") == "ja")
+    assert(ReferenceForms.langId("Привет мир это русский текст для проверки") == "ru")
+    assert(ReferenceForms.langId("") == "und")
+    assert(ReferenceForms.langId("12345 !!! ???") == "und")
   }
 
   test("column langIdDF agrees with the row kernel on the reference vectors") {
@@ -667,8 +667,8 @@ class OpsSpec extends AnyFunSuite {
     val colLang = ReferenceForms.langIdDF(df, col("text")).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("detected_lang"))).toMap
     for ((t, i) <- texts.zipWithIndex)
-      assert(colLang(i.toLong) == TextOps.langId(t),
-        s"column/row langId disagree on '$t': ${colLang(i.toLong)} vs ${TextOps.langId(t)}")
+      assert(colLang(i.toLong) == ReferenceForms.langId(t),
+        s"column/row langId disagree on '$t': ${colLang(i.toLong)} vs ${ReferenceForms.langId(t)}")
   }
 
   test("fingerprint is stable and robust to tiny edits, changes on rewrites") {

@@ -1046,7 +1046,7 @@ class RealPdfSpec extends AnyFunSuite {
     val idx = new graft.pdf.RealPdf.Resync(junk)
     var from = 0
     while (from < junk.length) {
-      assert(idx.target(from) == graft.pdf.RealPdf.resyncTarget(junk, from), s"at $from")
+      assert(idx.target(from) == new graft.pdf.RealPdf.Resync(junk).target(from), s"at $from")
       from += 37
     }
   }

@@ -87,26 +87,4 @@ class StreamingSpec extends AnyFunSuite {
     val urls = spark.table("dedup_err_out").select("url").collect().map(_.getString(0)).toSet
     assert(urls == Set("probe://e1", "probe://e2", "probe://e3"))
   }
-
-  test("watermarked ingest metrics aggregate per window and lang") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val fixtures = FixtureGen.corpus(100).toVector
-    val stream = MemoryStream[graft.model.Page]
-    val q = StreamExtract.ingestMetrics(ExtractJob.run(stream.toDS()))
-      .writeStream.format("memory").queryName("metrics_out")
-      .outputMode("complete").start()
-    stream.addData(fixtures.map(_.page))
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table("metrics_out").collect()
-    assert(rows.nonEmpty)
-    val totalPages = rows.map(_.getAs[Long]("pages")).sum
-    assert(totalPages == 100)
-    assert(rows.map(_.getAs[Long]("errors")).sum == 0)
-    // fixture timestamps advance 1s per row: 100 rows span at least 2 windows
-    assert(rows.map(_.getAs[org.apache.spark.sql.Row]("window")).distinct.length >= 2)
-  }
 }

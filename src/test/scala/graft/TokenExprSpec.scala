@@ -126,7 +126,7 @@ class TokenExprSpec extends AnyFunSuite {
     for (n <- Seq(1, 2, 3, 8, 9)) {
       val both = df.select(
         Decontam.tokenNgrams(col("toks"), n).as("native"),
-        Decontam.tokenNgramsViaHof(col("toks"), n).as("ref")).collect()
+        ReferenceForms.tokenNgramsViaHof(col("toks"), n).as("ref")).collect()
       for (r <- both)
         assert(r.getSeq[String](0) == r.getSeq[String](1), s"n=$n")
     }
@@ -136,7 +136,7 @@ class TokenExprSpec extends AnyFunSuite {
     val withNulls = Seq(Tuple1(Seq[String]("a", null, "b", "c"))).toDF("toks")
     val r = withNulls.select(
       Decontam.tokenNgrams(col("toks"), 2).as("native"),
-      Decontam.tokenNgramsViaHof(col("toks"), 2).as("ref")).collect().head
+      ReferenceForms.tokenNgramsViaHof(col("toks"), 2).as("ref")).collect().head
     assert(r.getSeq[String](0) == r.getSeq[String](1))
     assert(r.getSeq[String](0) == Seq("a", "b", "b c"))
   }

@@ -3,12 +3,15 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Oracle-shaped SQL forms of operators whose production versions are native
-  * expressions or typed maps. Each is written the way its DuckDB oracle
-  * recomputes it, and the specs pin the production form against it:
+/** Reference forms of operators whose production versions are native
+  * expressions or typed maps. The SQL forms are written the way their DuckDB
+  * oracles recompute them, and the specs pin the production form against
+  * each:
   *   - [[asciiTokensViaRegexp]] vs `TextOps.asciiTokens` (TokenExprSpec);
-  *   - [[langIdDF]] vs `TextOps.langIdFast` (TextExprSpec) and the row kernel
-  *     `TextOps.langId` (OpsSpec);
+  *   - [[tokenNgramsViaHof]] vs `Decontam.tokenNgrams` (TokenExprSpec);
+  *   - [[langIdDF]] vs `TextOps.langIdFast` (TextExprSpec) and the row form
+  *     [[langId]] (OpsSpec);
+  *   - [[dot]] vs the native `graft_dot` (OpsSpec);
   *   - [[signatureExpr]] vs `Similarity.withSignatures` (OpsSpec).
   */
 object ReferenceForms {
@@ -19,8 +22,68 @@ object ReferenceForms {
       regexp_extract_all(coalesce(text, lit("")), lit("[A-Za-z0-9]+"), lit(0)),
       x => lower(x))
 
+  /** Space-joined word n-grams of a token array as a higher-order-function
+    * expression; fewer than n tokens → empty. */
+  def tokenNgramsViaHof(toks: Column, n: Int): Column = {
+    require(n >= 1, s"n must be >= 1, got $n")
+    when(size(toks) < n, array().cast("array<string>"))
+      .otherwise(transform(sequence(lit(1), size(toks) - (n - 1)),
+        i => array_join(slice(toks, i, lit(n)), " ")))
+  }
+
+  /** Cheap n-gram/char-class language ID heuristic (the reference's
+    * PP-LCNet-classifier analogue — a per-row classifier over cheap features,
+    * reference src/models/classification/pp_lcnet.rs:44-53).
+    * Returns ISO-ish code or "und".
+    */
+  def langId(text: String): String = {
+    if (text == null || text.isEmpty) return "und"
+    val n = math.min(text.length, 4000)
+    var cjk = 0; var arab = 0; var cyr = 0; var latin = 0; var hangul = 0; var kana = 0
+    var i = 0
+    while (i < n) {
+      val c = text.charAt(i)
+      if (c >= 0x4E00 && c <= 0x9FFF) cjk += 1
+      else if (c >= 0x3040 && c <= 0x30FF) kana += 1
+      else if (c >= 0xAC00 && c <= 0xD7AF) hangul += 1
+      else if (c >= 0x0600 && c <= 0x06FF) arab += 1
+      else if (c >= 0x0400 && c <= 0x04FF) cyr += 1
+      else if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= 0xC0 && c <= 0x17F)) latin += 1
+      i += 1
+    }
+    val total = cjk + arab + cyr + latin + hangul + kana
+    if (total == 0) return "und"
+    if (kana * 5 >= total) "ja"
+    else if (hangul * 2 >= total) "ko"
+    else if (cjk * 2 >= total) "zh"
+    else if (arab * 2 >= total) "ar"
+    else if (cyr * 2 >= total) "ru"
+    else if (latin * 2 >= total) latinLang(text, n)
+    else "und"
+  }
+
+  /** Distinguish big latin languages by stopword/diacritic evidence
+    * (n-gram-heuristic style; deterministic). */
+  private def latinLang(text: String, n: Int): String = {
+    val t = " " + text.substring(0, n).toLowerCase + " "
+    def c(w: String): Int = {
+      var cnt = 0; var at = t.indexOf(w)
+      while (at >= 0) { cnt += 1; at = t.indexOf(w, at + 1) }
+      cnt
+    }
+    val en = c(" the ") + c(" and ") + c(" of ") + c(" to ") + c(" is ")
+    val de = c(" der ") + c(" und ") + c(" die ") + c(" das ") + c(" ist ") +
+      t.count(ch => ch == 'ä' || ch == 'ö' || ch == 'ü' || ch == 'ß')
+    val fr = c(" le ") + c(" la ") + c(" les ") + c(" et ") + c(" est ")
+    val es = c(" el ") + c(" los ") + c(" las ") + c(" y ") + c(" es ")
+    val best = math.max(math.max(en, de), math.max(fr, es))
+    if (best == 0) "en"
+    else if (best == en) "en" else if (best == de) "de"
+    else if (best == fr) "fr" else "es"
+  }
+
   /** Column-expression language ID — the same script-range/stopword heuristic
-    * as `TextOps.langId` but as integer-exact Catalyst expressions, so a
+    * as [[langId]] but as integer-exact Catalyst expressions, so a
     * third-party SQL engine can reproduce the decision bit-for-bit (every
     * count is an integer; the language string is a pure CASE over them).
     * Examines the first 4000 characters like the row kernel. Returns
@@ -70,6 +133,13 @@ object ReferenceForms {
         .when(latin * 2 >= total, latinLang)
         .otherwise(lit("und")).as("detected_lang"))
   }
+
+  /** sum(a[i]*b[i]) as double, left fold in index order — the
+    * higher-order-function form of `graft_dot`. */
+  def dot(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
 
   /** Random-hyperplane LSH signature as a Catalyst column: rows sharing a
     * signature land in one bucket. Inlines `bits * dim` plane coefficients as
