@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 
 /** Native Catalyst expression for the similarity hot path: the dot product
@@ -80,11 +80,71 @@ case class FloatVecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Native Catalyst expression for the minhash verify: the number of
+  * positions at which two `array<bigint>` signatures hold equal, non-null
+  * values, over the shorter array's length. It counts what
+  * `size(filter(zip_with(a, b, (x, y) => x === y), x => x))` counts (zip_with
+  * pads the shorter side with nulls, and a null compare is not kept), in one
+  * codegen'd loop over both buffers instead of two interpreted higher-order
+  * functions and a zipped array per pair. */
+case class LongArrayEqCount(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ =>
+        TypeCheckResult.TypeCheckFailure(
+          s"graft_eq_count requires (array<bigint>, array<bigint>), got (${left.dataType}, ${right.dataType})")
+    }
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "graft_eq_count"
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    val n = math.min(x.numElements(), y.numElements())
+    var c = 0
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i) && !y.isNullAt(i) && x.getLong(i) == y.getLong(i)) c += 1
+      i += 1
+    }
+    c
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val i = ctx.freshName("i")
+      val n = ctx.freshName("n")
+      val c = ctx.freshName("c")
+      s"""
+         |int $n = Math.min($a.numElements(), $b.numElements());
+         |int $c = 0;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if (!$a.isNullAt($i) && !$b.isNullAt($i) && $a.getLong($i) == $b.getLong($i)) {
+         |    $c++;
+         |  }
+         |}
+         |${ev.value} = $c;
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): LongArrayEqCount =
+    copy(left = newLeft, right = newRight)
+}
+
 object VecFunctions {
   import org.apache.spark.sql.graft.Shims
   /** Column-level entry point used by ops.Similarity. */
   def dotF(a: Column, b: Column): Column =
     Shims.column(FloatVecDot(Shims.expression(a), Shims.expression(b)))
+
+  /** Column-level entry point used by ops.Dedup's minhash verify. */
+  def eqCount(a: Column, b: Column): Column =
+    Shims.column(LongArrayEqCount(Shims.expression(a), Shims.expression(b)))
 }
 
 /** SparkSessionExtensions hook: registers `graft_dot` so SQL users (and

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.VecFunctions
 
 /** Deduplication operators for web-scale corpora. Each returns a DataFrame
   * suitable for the driver's oracle compare; all are shuffle-conscious:
@@ -43,14 +44,15 @@ object Dedup {
   final case class DocSig(doc_id: Long, sig: Array[Long], nShingles: Int)
   final case class BandKey(band: Int, bucket: Long, doc_id: Long)
 
-  /** MinHash signatures: k char-5-shingles → 64 permutation mins. Narrow. */
+  /** MinHash signatures: k char-5-shingles → 64 permutation mins. A narrow
+    * map over the [[spread]] `(doc_id, text)` projection. */
   def minhashSignatures(spark: SparkSession, docs: DataFrame,
       numHashes: Int = 64, shingleK: Int = 5): Dataset[DocSig] = {
     import spark.implicits._
     // deterministic affine permutations over the shingle hash space
     val as = Array.tabulate(numHashes)(i => 0x9E3779B97F4A7C15L * (2L * i + 1))
     val bs = Array.tabulate(numHashes)(i => 0xC2B2AE3D27D4EB4FL * (i + 1))
-    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+    spread(docs.select(col("doc_id").cast("long"), col("text")), "doc_id").as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, text) =>
           val sh = TextOps.charShingleHashes(if (text == null) "" else text.toLowerCase, shingleK)
@@ -71,10 +73,12 @@ object Dedup {
       }
   }
 
-  /** MinHash-LSH near-dup pairs: band signatures, bucket-join, then exact
-    * Jaccard estimate from the full signatures. Returns (doc_a, doc_b,
-    * est_jaccard_pct) with doc_a < doc_b, est >= threshold, materialized
-    * with the signature cache released — see [[materialized]]. */
+  /** MinHash-LSH near-dup pairs: band signatures, [[bandedPairs]] per
+    * (band, bucket), then the Jaccard estimate from the full signatures
+    * (matching positions, counted by the native `graft_eq_count`). Returns
+    * (doc_a, doc_b, est_jaccard_pct) with doc_a < doc_b, est >= threshold,
+    * materialized with the signature cache released — see
+    * [[materialized]]. */
   def minhashPairs(spark: SparkSession, docs: DataFrame,
       bands: Int = 16, threshold: Double = 0.7, maxBucket: Int = 64,
       materialize: Boolean = true): DataFrame = {
@@ -105,11 +109,7 @@ object Dedup {
       }
     }
     // candidate pairs within a bucket; hot buckets capped (skew guard)
-    val candidates = banded
-      .groupByKey(k => (k.band, k.bucket))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[BandKey]) =>
-        bucketPairs(it.map(_.doc_id), maxBucket)(identity)
-      }
+    val candidates = bandedPairs(banded.toDF(), maxBucket)((a, b) => Some((a.getLong(2), b.getLong(2))))
       .distinct()
       .toDF("doc_a", "doc_b")
     // verify: estimated jaccard = fraction of matching signature positions
@@ -118,8 +118,7 @@ object Dedup {
     val out = candidates
       .join(s1, "doc_a").join(s2, "doc_b")
       .withColumn("est_jaccard_pct",
-        (lit(100) * size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b),
-          x => x)) / lit(64)).cast("int"))
+        (lit(100) * VecFunctions.eqCount(col("sig_a"), col("sig_b")) / lit(64)).cast("int"))
       // round, don't truncate: 0.29 * 100 is 28.999... in IEEE doubles, and
       // a floor would silently lower the nominal threshold by one point
       .filter(col("est_jaccard_pct") >= math.round(threshold * 100).toInt)
@@ -440,14 +439,18 @@ object Dedup {
     * quadratic past ~1e9 docs). Hot buckets are capped like minhash's
     * (skew guard, mirrors the reference's max-candidates cap in
     * /root/reference/src/processors/db_postprocess.rs:81).
-    * Returns (doc_a, doc_b, hamming), exact-Hamming verified.
+    * Returns (doc_a, doc_b, hamming), exact-Hamming verified inside the
+    * bucket pass of [[bandedPairs]], which carries each signature as the
+    * payload. The signatures are taken over the [[spread]] `(doc_id, text)`
+    * projection.
     *
     * Lazy by design, unlike the other pair producers: nothing is persisted.
     * d06 reads the result twice (a union over doc_a and doc_b), but AQE
     * plans the second branch's banded shuffle as a ReusedExchange of the
     * first (OpsSpec pins this), so the shuffle already runs once. A
     * materialized variant (persisted signatures, join-verify, a cached
-    * result) measured about 25 % slower on d06 at sf0.1, local[4]. */
+    * result) measured about 25 % slower on d06 at sf0.1, local[4], when the
+    * bucket pass still ran through `groupByKey`. */
   def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = 256): DataFrame = {
     import spark.implicits._
@@ -462,22 +465,18 @@ object Dedup {
     def chunk(sig: Long, c: Int): Long =
       (sig >>> offsets(c)) & ((1L << widths(c)) - 1)
     val tables = for { i <- 0 until 5; j <- (i + 1) until 5 } yield (i, j)
-    val sigs = docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+    val sigs = spread(docs.select(col("doc_id").cast("long"), col("text")), "doc_id")
+      .as[(Long, String)]
       .map { case (id, t) => (id, simhash(t)) }
     val banded = sigs.flatMap { case (id, sig) =>
       tables.iterator.zipWithIndex.map { case ((i, j), t) =>
         (t, (chunk(sig, i) << 13) | chunk(sig, j), id, sig)
       }
     }
-    banded
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[(Int, Long, Long, Long)]) =>
-        bucketPairs(it.map(r => (r._3, r._4)), maxBucket)(_._1).flatMap {
-          case ((a, sa), (b, sb)) =>
-            val h = java.lang.Long.bitCount(sa ^ sb)
-            if (h <= maxHamming) Some((a, b, h)) else None
-        }
-      }
+    bandedPairs(banded.toDF(), maxBucket) { (a, b) =>
+      val h = java.lang.Long.bitCount(a.getLong(3) ^ b.getLong(3))
+      if (h <= maxHamming) Some((a.getLong(2), b.getLong(2), h)) else None
+    }
       .toDF("doc_a", "doc_b", "hamming")
       .distinct()
   }

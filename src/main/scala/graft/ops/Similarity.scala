@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.VecFunctions.dotF
 
 /** Similarity search over an embedding column (Array[Float]).
   *
@@ -24,15 +25,26 @@ object Similarity {
 
   /** Cosine over float vectors via the native codegen'd graft_dot expression
     * (same double fold, no per-pair zipped-array allocation —
-    * graft.functions.FloatVecDot). */
+    * graft.functions.FloatVecDot), for the top-k scorers. A zero-norm side
+    * gives NaN, and in Spark SQL NaN sorts above every double, so
+    * `cosine(a, b) >= t` is TRUE for it: never filter on this column. The
+    * threshold filters use [[normedCosine]], where zero norm means 0.0. */
   def cosine(a: Column, b: Column): Column = {
-    import graft.functions.VecFunctions.dotF
     // zero-norm guard: under ANSI mode (Spark 4 default) 0/0 THROWS
-    // DIVIDE_BY_ZERO and kills the job on one zero embedding; NaN keeps the
-    // pre-ANSI "no similarity" semantics, and topKPerQuery's heap skips NaN
-    // candidates (Double.compare would otherwise rank NaN first)
+    // DIVIDE_BY_ZERO and kills the job on one zero embedding; the NaN is
+    // skipped by topKPerQuery's heap (Double.compare would otherwise rank
+    // NaN first)
     val denom = sqrt(dotF(a, a)) * sqrt(dotF(b, b))
     when(denom === 0.0, lit(Double.NaN)).otherwise(dotF(a, b) / denom)
+  }
+
+  /** Cosine of two float vectors over their norms, each computed once per
+    * vector beforehand as `sqrt(graft_dot(e, e))`: the same doubles
+    * [[cosine]] divides by. A zero (or null) norm product means similarity
+    * 0.0, so a zero vector never passes a threshold above 0. */
+  private def normedCosine(a: Column, nrmA: Column, b: Column, nrmB: Column): Column = {
+    val prod = nrmA * nrmB
+    when(prod > 0.0, dotF(a, b) / prod).otherwise(lit(0.0))
   }
 
   /** Per-partition bounded-heap top-k per query over (query_id, neighbor_id,
@@ -343,8 +355,11 @@ object Similarity {
     * construction (LSH misses some borderline pairs) — measured against the
     * exact product in OpsSpec. `bits <= 0` (the default) scales the signature
     * width with the corpus count ([[autoBits]]) so bucket occupancy stays
-    * bounded as the corpus grows. Returns the pair set materialized with
-    * the corpus-side cache released — see [[materialized]]. */
+    * bounded as the corpus grows. The persisted (vec_id, embedding, nrm)
+    * projection is [[spread]] over the cores and holds each vector's norm,
+    * so the verify costs one dot per candidate and a zero vector has
+    * similarity 0.0. Returns the pair set materialized with the corpus-side
+    * cache released — see [[materialized]]. */
   def nearDupPairsLsh(emb: DataFrame, threshold: Double, dim: Int,
       bits: Int = 0, nTables: Int = 6, seed: Long = 42L,
       maxBucket: Int = 1024, materialize: Boolean = true): DataFrame = {
@@ -354,7 +369,8 @@ object Similarity {
     // OR-construction: nTables independent hyperplane tables; a pair is a
     // candidate if it shares a bucket in ANY table (recall 1-(1-p^bits)^T).
     // The explode keys on (table, bucket) so all tables ride one shuffle.
-    val vecs = emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+    val vecs = spread(emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding")), "vec_id")
+      .withColumn("nrm", sqrt(dotF(col("embedding"), col("embedding"))))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // one broadcast-plane pass computes ALL table signatures (constant plan
     // size at any dim — a literal-expression form would inline
@@ -362,18 +378,14 @@ object Similarity {
     val banded = withSignatures(vecs, dim, nBits, (0 until nTables).map(t => seed + t * 1000003L))
       .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
       .select(col("tbl"), col("bucket"), col("vec_id"))
-    val candidates = banded
-      .groupByKey(r => (r.getInt(0), r.getLong(1)))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[org.apache.spark.sql.Row]) =>
-        bucketPairs(it.map(_.getLong(2)), maxBucket)(identity)
-      }
+    val candidates = bandedPairs(banded, maxBucket)((a, b) => Some((a.getLong(2), b.getLong(2))))
       .toDF("id_a", "id_b")
       .distinct()
-    val va = vecs.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
-    val vb = vecs.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
+    val va = vecs.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
+    val vb = vecs.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
     val out = candidates
       .join(va, "id_a").join(vb, "id_b")
-      .filter(cosine(col("emb_a"), col("emb_b")) >= threshold)
+      .filter(normedCosine(col("emb_a"), col("nrm_a"), col("emb_b"), col("nrm_b")) >= threshold)
       .select(col("id_a"), col("id_b"))
     if (materialize) materialized(vecs)(out) else out
   }
@@ -411,7 +423,6 @@ object Similarity {
     * (BroadcastNestedLoopJoin over InMemoryTableScan) before execution. */
   private[graft] def nearDupPairsPlan(emb: DataFrame, threshold: Double,
       maxBroadcast: Int): (DataFrame, DataFrame) = {
-    import graft.functions.VecFunctions.dotF
     // norms precomputed once per side; the join condition then costs ONE dot
     // per pair (the HOF formulation recomputed two norms per pair, 40x cost)
     val nd = emb.select(col("vec_id").cast("long").as("vec_id"),
@@ -423,11 +434,10 @@ object Similarity {
     val blockOf = pmod(xxhash64(col("vec_id")), lit(nBlocks.toLong))
     val a = nd.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
       col("nrm").as("nrm_a"))
-    // guarded cosine: zero-norm product → sim 0.0, not NaN (NaN >= t is
-    // false for any t, so thresholds > 0 were unaffected, but t <= 0 was
-    // undefined; the kernel's sim is 0.0 for zero vectors)
-    val prod = col("nrm_a") * col("nrm_b")
-    val sim = when(prod > 0.0, dotF(col("emb_a"), col("emb_b")) / prod).otherwise(lit(0.0))
+    // guarded cosine: zero-norm product → sim 0.0, not NaN (in Spark SQL
+    // NaN >= t is TRUE for every t, so a NaN sim would pair a zero vector
+    // with every vector)
+    val sim = normedCosine(col("emb_a"), col("nrm_a"), col("emb_b"), col("nrm_b"))
     val parts = (0 until nBlocks).map { b =>
       val block = (if (nBlocks == 1) nd else nd.filter(blockOf === b.toLong))
         .select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),

@@ -6,15 +6,10 @@ import java.util.concurrent.TimeoutException
 import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -104,23 +99,12 @@ object ExtractMain {
       val read = spark.read.schema(PageSchema).parquet(in)
       val file = read.inputFiles.headOption.getOrElse(throw new IllegalArgumentException(
         s"no parquet data file under $in to check the Page columns against"))
-      val fileSchema = footerSchema(spark, file)
+      val fileSchema = ParquetFooter.schema(spark, file)
       val typed =
         if (PageSchema.forall(f => fileSchema.exists(g => g.name == f.name && g.dataType == f.dataType))) read
         else spark.read.schema(fileSchema).parquet(in)
       typed.select(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as[Page]
     }
-  }
-
-  /** The Spark schema that inference reads from a parquet file's footer,
-    * read on the driver. */
-  private def footerSchema(spark: SparkSession, file: String): StructType = {
-    val path = new Path(new java.net.URI(file))
-    val footer = ParquetFooterReader.readFooter(
-      HadoopInputFile.fromPath(path, spark.sparkContext.hadoopConfiguration),
-      ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   final class InjectedFailure(msg: String) extends RuntimeException(msg)

@@ -88,7 +88,20 @@ object PlanCheck {
         spark.read.parquet(s"$sfDir/documents.parquet"), threshold = 0.7,
         materialize = false)
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
-    check("d05_minhash (lazy plan)", d05, Seq("InMemoryTableScan"))
+    check("d05_minhash (lazy plan)", d05, Seq("InMemoryTableScan"), Seq("zip_with"))
+    // d05/d06/d15: the banded pairs must bucket through the explicit
+    // repartition on the bucket key (REPARTITION_BY_NUM, which AQE never
+    // coalesces into one task) and a sorted-run pass — a groupByKey/
+    // flatMapGroups body plans as MapGroups over an ENSURE_REQUIREMENTS
+    // exchange instead
+    def bucketed(name: String, plan: String, key: String): Unit = {
+      val byNum = plan.linesIterator.exists(l =>
+        l.contains(s"Exchange hashpartitioning($key#") && l.contains("REPARTITION_BY_NUM"))
+      if (byNum) println(s"PASS $name: buckets through a REPARTITION_BY_NUM exchange on $key")
+      else { println(s"FAIL $name: no REPARTITION_BY_NUM exchange on $key"); failures += 1 }
+      check(name, plan, Nil, Seq("MapGroups"))
+    }
+    bucketed("d05_minhash (lazy plan)", d05, "band")
     // d15: the LSH near-dup path must read the embedding projection from the
     // persisted relation too (banding and both verify sides, one corpus
     // pass) — lazy plan, and a fixed bits so not even autoBits' count runs
@@ -97,6 +110,9 @@ object PlanCheck {
         bits = 8, materialize = false)
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
     check("d15_neardup_lsh (lazy plan)", d15, Seq("InMemoryTableScan"))
+    bucketed("d15_neardup_lsh (lazy plan)", d15, "tbl")
+    // d06 is lazy by design: its query plan is built without running a job
+    bucketed("d06_simhash", planOf("d06_simhash"), "_1")
     spark.catalog.clearCache() // drop plan-only persist markers registered above
 
     // d16/d19: the segment-dedup winner and the per-source quota must be

@@ -1,18 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
-import graft.model.{ExtractedPage, Page}
-import graft.spark.ExtractJob
+import org.apache.spark.sql.Dataset
+import graft.model.ExtractedPage
 
 /** Structured Streaming surface — the analogue of the reference's always-on
   * HTTP server mode (/root/reference/src/bin/server/server.rs:97-178): pages
-  * arrive continuously, each is extracted by the same per-row kernel, results
-  * stream to the output table. The batch and streaming paths share the exact
-  * same transform — `ExtractJob.run` at its defaults (no salt, no size sort:
-  * both would be a shuffle or a sort per micro-batch, and micro-batches are
-  * already bounded) — so correctness properties (byte identity, graceful
-  * degradation) carry over verbatim.
+  * arrive continuously and go through the batch job's own transform,
+  * `ExtractJob.run` at its defaults (no salt, no size sort: both would be a
+  * shuffle or a sort per micro-batch, and micro-batches are already
+  * bounded), so correctness properties (byte identity, graceful
+  * degradation) carry over verbatim. StreamingSpec and query x13 drive it
+  * through a `MemoryStream`. This object adds the one stage a stream needs
+  * and a batch does not: dedup across micro-batches.
   *
   * Scale notes: the map is narrow (no state, no shuffle), so micro-batch
   * throughput equals batch throughput.
@@ -68,38 +67,6 @@ object StreamExtract {
         })
   }
 
-  /** File-stream main: watch `inDir` for Page parquet, extract, append to
-    * `outDir` with exactly-once checkpointing.
-    * runMain graft.streaming.StreamExtract <inDir> <outDir> <checkpointDir>
-    */
   private val Sha256 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
     java.security.MessageDigest.getInstance("SHA-256"))
-
-  def main(args: Array[String]): Unit = {
-    if (args.length < 3) {
-      System.err.println("usage: StreamExtract <inDir> <outDir> <checkpointDir>")
-      sys.exit(2)
-    }
-    val Array(inDir, outDir, ckpt) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .appName("graft-stream-extract")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val pageSchema = implicitly[org.apache.spark.sql.Encoder[Page]].schema
-    val pages = spark.readStream.schema(pageSchema).parquet(inDir).as[Page]
-    val q = ExtractJob.run(pages)
-      .drop("spans") // parquet sink demo keeps scalar columns
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .start(outDir)
-    q.awaitTermination()
-    spark.stop()
-  }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.spark.{ExtractDemo, ExtractMain, LocalFs, TableIO}
 
-/** The input check of `ExtractMain.pagesFor`, the fork-free scratch
+/** The input check of `ExtractMain.pagesFor` and the footer-schema reads
+  * of the sf tables (`ParquetFooter`), the fork-free scratch
   * write (`LocalFs`) that `ExtractMain.run` commits from, and the argument
   * check of the `ExtractDemo` smoke main. */
 class ExtractMainSpec extends AnyFunSuite {
@@ -34,6 +35,23 @@ class ExtractMainSpec extends AnyFunSuite {
     val (pages, jobs) = SparkJobs.counted(spark)(ExtractMain.pagesFor(spark, in))
     assert(jobs == 0, s"pagesFor started $jobs jobs")
     assert(pages.get.collect().map(_.url).toSet == pagesDf(20).collect().map(_.getString(0)).toSet)
+  }
+
+  test("SparkEntry reads the documents and embeddings tables with their footer schema, without a job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-sf")
+    Seq((1L, "one text", "src1"), (2L, null, "src2")).toDF("doc_id", "text", "source")
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    Seq((1L, Array(0.5f, 1f)), (2L, Array(0f, 0f))).toDF("vec_id", "embedding").repartition(2)
+      .write.parquet(dir.resolve("embeddings.parquet").toString)
+    for ((table, read) <- Seq[(String, String => org.apache.spark.sql.DataFrame)](
+        "documents" -> (SparkEntry.docs(spark, _)), "embeddings" -> (SparkEntry.emb(spark, _)))) {
+      val (df, jobs) = SparkJobs.counted(spark)(read(dir.toString))
+      assert(jobs == 0, s"reading $table started $jobs jobs")
+      val inferred = spark.read.parquet(dir.resolve(s"$table.parquet").toString)
+      assert(df.get.schema == inferred.schema)
+      assert(df.get.collect().map(_.toString).sorted sameElements inferred.collect().map(_.toString).sorted)
+    }
   }
 
   test("pagesFor rejects a missing column, html stored as a string and an empty directory before any job") {

@@ -1,7 +1,9 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, ReferenceForms, Similarity, TextOps}
 
@@ -633,6 +635,87 @@ class OpsSpec extends AnyFunSuite {
       "SELECT graft_dot(array(CAST(1.0 AS FLOAT)), " +
         "array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))) AS d").collect()(0)
     assert(nullRow.isNullAt(0))
+  }
+
+  test("native graft_eq_count counts what size(filter(zip_with(===))) counts: ragged and null elements too") {
+    import spark.implicits._
+    import graft.functions.VecFunctions.eqCount
+    val r = new java.util.Random(11)
+    def arr(): Option[Seq[Option[Long]]] =
+      if (r.nextInt(20) == 0) None
+      else Some(Seq.fill(r.nextInt(9))(if (r.nextInt(8) == 0) None else Some(r.nextInt(3).toLong)))
+    val rows = Seq.fill(300)((arr(), arr())) ++ Seq(
+      (Some(Seq(Some(Long.MinValue), Some(7L))), Some(Seq(Some(Long.MinValue), Some(7L), Some(1L)))),
+      (Some(Seq.empty[Option[Long]]), Some(Seq(Some(1L)))))
+    // over the local relation the optimizer folds the projection (the
+    // interpreted eval); after an exchange it runs in generated code
+    val both = Seq(rows.toDF("a", "b"), rows.toDF("a", "b").repartition(2)).map(_.select(
+      eqCount(col("a"), col("b")).as("native"),
+      ReferenceForms.eqCount(col("a"), col("b")).as("hof")))
+    for (df <- both) {
+      val got = df.collect()
+      assert(got.count(_.isNullAt(0)) > 0 && got.count(r => !r.isNullAt(0) && r.getInt(0) >= 2) > 0)
+      for (row <- got) assert(row.get(0) == row.get(1), row)
+    }
+    // alone in its projection (the HOF form has no generated code and would
+    // take the whole Project out of whole-stage codegen)
+    val native = rows.toDF("a", "b").repartition(2).select(eqCount(col("a"), col("b")))
+    native.collect()
+    val plan = native.queryExecution.executedPlan.toString
+    assert("""\*\(\d+\) Project \[graft_eq_count\(""".r.findFirstIn(plan).nonEmpty, plan)
+  }
+
+  test("nearDupPairsLsh: a zero-norm vector pairs with no bucket-mate") {
+    import spark.implicits._
+    val vecs = Seq((1L, Array(0f, 0f, 0f, 0f)), (2L, Array(-1f, -2f, -3f, -4f)),
+      (3L, Array(-1f, -2f, -3f, -4.1f))).toDF("vec_id", "embedding")
+    val got = Similarity.nearDupPairsLsh(vecs, 0.45, dim = 4, bits = 4).as[(Long, Long)].collect()
+    assert(got.toSeq == Seq((2L, 3L)))
+  }
+
+  test("bandedPairs equals groupBy -> bucketPairs: random runs, buckets of exactly maxBucket and one over") {
+    import spark.implicits._
+    val cap = 4
+    // few keys, so runs sit next to each other and generated buckets merge
+    val bucket = for {
+      band <- Gen.choose(0, 1)
+      key <- Gen.choose(-2L, 2L)
+      n <- Gen.oneOf(Gen.const(cap), Gen.const(cap + 1), Gen.choose(1, cap + 2))
+      ids <- Gen.listOfN(n, Gen.choose(0L, 30L))
+    } yield ids.map(id => (band, key, id))
+    val prop = Prop.forAll(Gen.listOf(bucket).map(_.flatten)) { rows =>
+      val got = graft.ops.bandedPairs(rows.toDF("band", "bucket", "id"), cap)(
+        (a, b) => Some((a.getLong(2), b.getLong(2)))).collect().toSeq.sorted
+      val want = ReferenceForms.bandedPairs(rows, cap).sorted
+      Prop(got == want) :| s"rows=$rows got=$got want=$want"
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(30).withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("banded pair producers return the same rows at 1 or 7 input partitions and 1 or 5 shuffle partitions") {
+    import spark.implicits._
+    val corpus = (0 until 12).flatMap { f =>
+      val base = mkText(f + 10, 120)
+      Seq((3L * f, base), (3L * f + 1, base.replace(base.substring(20, 30), "zq wv")),
+        (3L * f + 2, base + " tail"))
+    }.toDF("doc_id", "text")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def all(docs: DataFrame, vecs: DataFrame): Seq[Seq[String]] = Seq(
+      rows(Dedup.minhashPairs(spark, docs, threshold = 0.5)),
+      rows(Dedup.simhashPairs(spark, docs, maxHamming = 3)),
+      rows(Similarity.nearDupPairsLsh(vecs, 0.9, dim = 16, bits = 6)))
+    val layouts = for {
+      shuffle <- Seq("1", "5")
+      (docs, vecs) <- Seq((corpus.coalesce(1), embeddings.coalesce(1)),
+        (corpus.repartition(7), embeddings.repartition(7)))
+    } yield {
+      spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+      try all(docs, vecs) finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
+    assert(layouts.head.forall(_.nonEmpty), layouts.head)
+    layouts.tail.foreach(l => assert(l == layouts.head))
   }
 
   test("langId identifies scripts and latin stopword languages") {

@@ -12,9 +12,19 @@ import org.apache.spark.sql.functions._
   *   - [[langIdDF]] vs `TextOps.langIdFast` (TextExprSpec) and the row form
   *     [[langId]] (OpsSpec);
   *   - [[dot]] vs the native `graft_dot` (OpsSpec);
-  *   - [[signatureExpr]] vs `Similarity.withSignatures` (OpsSpec).
+  *   - [[eqCount]] vs the native `graft_eq_count` (OpsSpec);
+  *   - [[signatureExpr]] vs `Similarity.withSignatures` (OpsSpec);
+  *   - [[bandedPairs]] vs the banded pair generator `ops.bandedPairs`
+  *     (OpsSpec).
   */
 object ReferenceForms {
+
+  /** In-bucket candidate pairs of `(band, bucket, id)` rows without an
+    * exchange or a sort: group by bucket key in collection code, then
+    * [[bucketPairs]] on each group. */
+  def bandedPairs(rows: Seq[(Int, Long, Long)], maxBucket: Int): Seq[(Long, Long)] =
+    rows.groupBy(r => (r._1, r._2)).values.toSeq
+      .flatMap(g => bucketPairs(g.iterator.map(_._3), maxBucket)(identity))
 
   /** ASCII `[A-Za-z0-9]+` token runs, lowercased; null text → no tokens. */
   def asciiTokensViaRegexp(text: Column): Column =
@@ -140,6 +150,11 @@ object ReferenceForms {
     aggregate(
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
+
+  /** Positions where two arrays hold equal values — the higher-order-function
+    * form of `graft_eq_count`, as the minhash verify once computed it. */
+  def eqCount(a: Column, b: Column): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), x => x))
 
   /** Random-hyperplane LSH signature as a Catalyst column: rows sharing a
     * signature land in one bucket. Inlines `bits * dim` plane coefficients as
