@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
-import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -33,31 +31,12 @@ package object ops {
     } finally releasing.foreach(_.unpersist(false))
 
   /** `df`, an `(id, payload)` projection, hash-partitioned on `id` over
-    * `defaultParallelism` partitions when its plan reads fewer partitions
-    * than that; otherwise `df` itself. A table stored as one small parquet
+    * `defaultParallelism` partitions. A table stored as one small parquet
     * file is one input split, so a per-row signature pass straight over it
-    * runs as one task on one core. The count is read off the physical plan,
-    * so deciding starts no Spark job. */
-  private[graft] def spread(df: DataFrame, id: String): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (plannedPartitions(df.queryExecution.sparkPlan) < cores) df.repartition(cores, col(id))
-    else df
-  }
-
-  /** The partition count of `p`'s output, known without running it: the
-    * first count a node fixes, looking down through narrow nodes to the file
-    * scan's split count. A leaf whose count the plan does not fix reads as
-    * `Int.MaxValue`, so it is never spread. */
-  private def plannedPartitions(p: SparkPlan): Int = p match {
-    case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions
-    case _ => p.outputPartitioning match {
-      case UnknownPartitioning(0) => p match {
-        case u: UnaryExecNode => plannedPartitions(u.child)
-        case _ => Int.MaxValue
-      }
-      case known => known.numPartitions
-    }
-  }
+    * runs as one task on one core; after the spread it runs one task per
+    * core. */
+  private[graft] def spread(df: DataFrame, id: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(id))
 
   /** Candidate pairs of a banded relation: the one pair generator of the
     * banded near-dup producers (minhash bands, simhash Manku tables,
@@ -71,9 +50,9 @@ package object ops {
     * `spark.sql.shuffle.partitions` on the key. AQE never coalesces such a
     * REPARTITION_BY_NUM exchange; the few-MB exchange of a `groupByKey` it
     * folds into one partition, and the whole enumeration then runs as one
-    * task. Each partition is sorted by (key, id), and one pass hands every
-    * run of equal key to [[bucketPairs]]. At most `maxBucket + 1` members of
-    * a run are held; the rest of a hot run is skipped. */
+    * task. Each partition is sorted by (key, id), and one pass over the
+    * runs of equal key ([[bucketRuns]]) yields every i < j pair of a run in
+    * ascending id order, smaller id first. */
   private[graft] def bandedPairs[U: Encoder](banded: DataFrame, maxBucket: Int)(
       pair: (Row, Row) => Option[U]): Dataset[U] = {
     val Array(band, bucket, id) = banded.columns.take(3).map(col)
@@ -81,15 +60,22 @@ package object ops {
       .repartition(banded.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, band, bucket)
       .sortWithinPartitions(band, bucket, id)
       .mapPartitions { rows =>
-        bucketRuns(rows, maxBucket).flatMap { run =>
-          bucketPairs(run.iterator, maxBucket)(_.getLong(2)).flatMap { case (a, b) => pair(a, b) }
-        }
+        for {
+          run <- bucketRuns(rows, maxBucket)
+          i <- run.indices.iterator
+          j <- (i + 1) until run.length
+          out <- pair(run(i), run(j))
+        } yield out
       }
   }
 
-  /** The runs of equal bucket key in rows sorted by it, each cut to its
-    * first `maxBucket + 1` members: enough for [[bucketPairs]] to see that
-    * a run is over the cap. */
+  /** The runs of equal bucket key in rows sorted by it, in arrival (so id)
+    * order. A run of more than `maxBucket` members is dropped: the skew
+    * guard that keeps one hot bucket from going quadratic, like the
+    * reference's cap on detection candidates (db_postprocess.rs:81,
+    * max_candidates). The skip is silent — nothing counts it. At most
+    * `maxBucket` members of a run are buffered; the rest of a hot run is
+    * read past. */
   private def bucketRuns(sorted: Iterator[Row], maxBucket: Int): Iterator[Vector[Row]] =
     new Iterator[Vector[Row]] {
       private val rows = sorted.buffered
@@ -101,30 +87,10 @@ package object ops {
         var n = 0
         while (rows.hasNext && rows.head.getInt(0) == band && rows.head.getLong(1) == bucket) {
           val r = rows.next()
-          if (n <= maxBucket) { run += r; n += 1 }
+          if (n < maxBucket) run += r
+          n += 1
         }
-        run.result()
+        if (n > maxBucket) Vector.empty else run.result()
       }
     }
-
-  /** Candidate pairs inside one LSH bucket: every i < j pair of its members
-    * in ascending id order, smaller id first. Members are sorted by `id`
-    * (stable, so equal ids keep arrival order); [[bandedPairs]] hands over
-    * runs already in id order. A bucket holding more than `maxBucket`
-    * members yields nothing: the skew guard that keeps one hot bucket from
-    * going quadratic, like the reference's cap on detection candidates
-    * (db_postprocess.rs:81, max_candidates). The skip is silent — nothing
-    * counts it. At most `maxBucket + 1` members are ever buffered. */
-  private[graft] def bucketPairs[T](it: Iterator[T], maxBucket: Int)(
-      id: T => Long): Iterator[(T, T)] = {
-    val members = it.take(maxBucket + 1).toVector
-    if (members.length > maxBucket) Iterator.empty
-    else {
-      val sorted = members.sortBy(id)
-      for {
-        i <- sorted.indices.iterator
-        j <- (i + 1) until sorted.length
-      } yield (sorted(i), sorted(j))
-    }
-  }
 }

@@ -694,6 +694,20 @@ class OpsSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  test("bandedPairs: a run of exactly maxBucket ids yields its C(n,2) pairs in ascending order, one more yields none") {
+    import spark.implicits._
+    val cap = 4
+    val rows = Seq(3L, 0L, 2L, 1L).map(id => (0, 7L, id)) ++ // at the cap
+      (0L until 5L).map(id => (0, 8L, id)) ++ // one over
+      Seq(9L, 4L).map(id => (1, 7L, id)) // same bucket, other band
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val got = try graft.ops.bandedPairs(rows.toDF("band", "bucket", "id"), cap)(
+      (a, b) => Some((a.getInt(0), a.getLong(2), b.getLong(2)))).collect().toSeq
+    finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val atCap = for (i <- 0L until 4L; j <- (i + 1) until 4L) yield (0, i, j)
+    assert(got == atCap :+ ((1, 4L, 9L)))
+  }
+
   test("banded pair producers return the same rows at 1 or 7 input partitions and 1 or 5 shuffle partitions") {
     import spark.implicits._
     val corpus = (0 until 12).flatMap { f =>
@@ -843,13 +857,13 @@ class OpsSpec extends AnyFunSuite {
     val cap = 6
     val ids = Seq(5L, 0L, 3L, 1L, 4L, 2L)
     val all = for (i <- 0L until 6L; j <- (i + 1) until 6L) yield (i, j)
-    assert(graft.ops.bucketPairs(ids.iterator, cap)(identity).toSeq == all)
-    assert(graft.ops.bucketPairs((ids :+ 6L).iterator, cap)(identity).isEmpty)
+    assert(ReferenceForms.bucketPairs(ids.iterator, cap)(identity).toSeq == all)
+    assert(ReferenceForms.bucketPairs((ids :+ 6L).iterator, cap)(identity).isEmpty)
     // the payload rides with its id; a hot bucket is read only to cap + 1
-    val rows = graft.ops.bucketPairs(Iterator((7L, "b"), (2L, "a")), cap)(_._1)
+    val rows = ReferenceForms.bucketPairs(Iterator((7L, "b"), (2L, "a")), cap)(_._1)
     assert(rows.toSeq == Seq(((2L, "a"), (7L, "b"))))
     val hot = Iterator.range(0, 100).map(_.toLong)
-    assert(graft.ops.bucketPairs(hot, cap)(identity).isEmpty)
+    assert(ReferenceForms.bucketPairs(hot, cap)(identity).isEmpty)
     assert(hot.size == 100 - (cap + 1))
   }
 

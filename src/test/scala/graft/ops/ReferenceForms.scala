@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *   - [[dot]] vs the native `graft_dot` (OpsSpec);
   *   - [[eqCount]] vs the native `graft_eq_count` (OpsSpec);
   *   - [[signatureExpr]] vs `Similarity.withSignatures` (OpsSpec);
-  *   - [[bandedPairs]] vs the banded pair generator `ops.bandedPairs`
-  *     (OpsSpec).
+  *   - [[bandedPairs]] (group by key, then [[bucketPairs]]) vs the banded
+  *     pair generator `ops.bandedPairs` (OpsSpec).
   */
 object ReferenceForms {
 
@@ -25,6 +25,23 @@ object ReferenceForms {
   def bandedPairs(rows: Seq[(Int, Long, Long)], maxBucket: Int): Seq[(Long, Long)] =
     rows.groupBy(r => (r._1, r._2)).values.toSeq
       .flatMap(g => bucketPairs(g.iterator.map(_._3), maxBucket)(identity))
+
+  /** Candidate pairs inside one bucket, as the `flatMapGroups` bodies of the
+    * banded producers once computed them: a bucket of more than `maxBucket`
+    * members yields nothing (at most `maxBucket + 1` are read); otherwise
+    * its members are sorted by `id` (stable) and every i < j pair is
+    * yielded, smaller id first. */
+  def bucketPairs[T](it: Iterator[T], maxBucket: Int)(id: T => Long): Iterator[(T, T)] = {
+    val members = it.take(maxBucket + 1).toVector
+    if (members.length > maxBucket) Iterator.empty
+    else {
+      val sorted = members.sortBy(id)
+      for {
+        i <- sorted.indices.iterator
+        j <- (i + 1) until sorted.length
+      } yield (sorted(i), sorted(j))
+    }
+  }
 
   /** ASCII `[A-Za-z0-9]+` token runs, lowercased; null text → no tokens. */
   def asciiTokensViaRegexp(text: Column): Column =
