@@ -109,7 +109,7 @@ object Dedup {
       }
     }
     // candidate pairs within a bucket; hot buckets capped (skew guard)
-    val candidates = bandedPairs(banded.toDF(), maxBucket)((a, b) => Some((a.getLong(2), b.getLong(2))))
+    val candidates = bandedPairs(banded.toDF(), maxBucket)(_.getLong(2))((a, b) => Some((a, b)))
       .distinct()
       .toDF("doc_a", "doc_b")
     // verify: estimated jaccard = fraction of matching signature positions
@@ -473,9 +473,10 @@ object Dedup {
         (t, (chunk(sig, i) << 13) | chunk(sig, j), id, sig)
       }
     }
-    bandedPairs(banded.toDF(), maxBucket) { (a, b) =>
-      val h = java.lang.Long.bitCount(a.getLong(3) ^ b.getLong(3))
-      if (h <= maxHamming) Some((a.getLong(2), b.getLong(2), h)) else None
+    bandedPairs(banded.toDF(), maxBucket)(r => (r.getLong(2), r.getLong(3))) {
+      case ((a, sa), (b, sb)) =>
+        val h = java.lang.Long.bitCount(sa ^ sb)
+        if (h <= maxHamming) Some((a, b, h)) else None
     }
       .toDF("doc_a", "doc_b", "hamming")
       .distinct()

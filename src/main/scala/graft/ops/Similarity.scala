@@ -28,7 +28,8 @@ object Similarity {
     * graft.functions.FloatVecDot), for the top-k scorers. A zero-norm side
     * gives NaN, and in Spark SQL NaN sorts above every double, so
     * `cosine(a, b) >= t` is TRUE for it: never filter on this column. The
-    * threshold filters use [[normedCosine]], where zero norm means 0.0. */
+    * threshold filters use [[normedCosine]] or, in the LSH bucket pass,
+    * [[cosineAtLeast]], where zero norm means 0.0. */
   def cosine(a: Column, b: Column): Column = {
     // zero-norm guard: under ANSI mode (Spark 4 default) 0/0 THROWS
     // DIVIDE_BY_ZERO and kills the job on one zero embedding; the NaN is
@@ -42,7 +43,7 @@ object Similarity {
     * vector beforehand as `sqrt(graft_dot(e, e))`: the same doubles
     * [[cosine]] divides by. A zero (or null) norm product means similarity
     * 0.0, so a zero vector never passes a threshold above 0. */
-  private def normedCosine(a: Column, nrmA: Column, b: Column, nrmB: Column): Column = {
+  private[graft] def normedCosine(a: Column, nrmA: Column, b: Column, nrmB: Column): Column = {
     val prod = nrmA * nrmB
     when(prod > 0.0, dotF(a, b) / prod).otherwise(lit(0.0))
   }
@@ -351,15 +352,17 @@ object Similarity {
     * partitioned; this variant generates candidates only from rows sharing a
     * random-hyperplane signature bucket (narrow map + ONE shuffle on the
     * short bucket key, hot buckets capped like minhash), then verifies each
-    * candidate with the exact cosine (native graft_dot). Recall < 1 by
-    * construction (LSH misses some borderline pairs) — measured against the
-    * exact product in OpsSpec. `bits <= 0` (the default) scales the signature
-    * width with the corpus count ([[autoBits]]) so bucket occupancy stays
-    * bounded as the corpus grows. The persisted (vec_id, embedding, nrm)
-    * projection is [[spread]] over the cores and holds each vector's norm,
-    * so the verify costs one dot per candidate and a zero vector has
-    * similarity 0.0. Returns the pair set materialized with the corpus-side
-    * cache released — see [[materialized]]. */
+    * candidate with the exact cosine. Recall < 1 by construction (LSH misses
+    * some borderline pairs) — measured against the exact product in OpsSpec.
+    * `bits <= 0` (the default) scales the signature width with the corpus
+    * count ([[autoBits]]) so bucket occupancy stays bounded as the corpus
+    * grows. The (vec_id, embedding) projection is [[spread]] over the cores.
+    * Each banded row carries its vector through the bucket exchange, and the
+    * bucket pass of [[bandedPairs]] verifies every candidate there
+    * ([[cosineAtLeast]], one norm per buffered member, a zero vector has
+    * similarity 0.0): no candidate set is deduplicated or joined back to
+    * the corpus, and only the verified pairs reach the final `distinct`.
+    * Returns the pair set materialized — see [[materialized]]. */
   def nearDupPairsLsh(emb: DataFrame, threshold: Double, dim: Int,
       bits: Int = 0, nTables: Int = 6, seed: Long = 42L,
       maxBucket: Int = 1024, materialize: Boolean = true): DataFrame = {
@@ -370,24 +373,54 @@ object Similarity {
     // candidate if it shares a bucket in ANY table (recall 1-(1-p^bits)^T).
     // The explode keys on (table, bucket) so all tables ride one shuffle.
     val vecs = spread(emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding")), "vec_id")
-      .withColumn("nrm", sqrt(dotF(col("embedding"), col("embedding"))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // one broadcast-plane pass computes ALL table signatures (constant plan
     // size at any dim — a literal-expression form would inline
     // nTables x bits x dim coefficients here)
     val banded = withSignatures(vecs, dim, nBits, (0 until nTables).map(t => seed + t * 1000003L))
-      .select(col("vec_id"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
-      .select(col("tbl"), col("bucket"), col("vec_id"))
-    val candidates = bandedPairs(banded, maxBucket)((a, b) => Some((a.getLong(2), b.getLong(2))))
+      .select(col("vec_id"), col("embedding"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
+      .select(col("tbl"), col("bucket"), col("vec_id"), col("embedding"))
+    val out = bandedPairs(banded, maxBucket)(Normed(_)) { (a, b) =>
+      if (cosineAtLeast(a, b, threshold)) Some((a.id, b.id)) else None
+    }
       .toDF("id_a", "id_b")
       .distinct()
-    val va = vecs.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
-    val vb = vecs.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
-    val out = candidates
-      .join(va, "id_a").join(vb, "id_b")
-      .filter(normedCosine(col("emb_a"), col("nrm_a"), col("emb_b"), col("nrm_b")) >= threshold)
-      .select(col("id_a"), col("id_b"))
-    if (materialize) materialized(vecs)(out) else out
+    if (materialize) materialized()(out) else out
+  }
+
+  /** One member of a hyperplane bucket in the LSH verify: its id, its
+    * vector (null for a null embedding) and the vector's norm. */
+  private[graft] final case class Normed(id: Long, e: Array[Float], nrm: Double)
+
+  private[graft] object Normed {
+    /** The norm is `sqrt(graft_dot(e, e))`, the same double. */
+    def of(id: Long, e: Array[Float]): Normed =
+      Normed(id, e, if (e == null) 0.0 else math.sqrt(dot(e, e)))
+
+    /** From a (tbl, bucket, vec_id, embedding) row. */
+    def apply(r: org.apache.spark.sql.Row): Normed = {
+      val s = r.getSeq[Float](3)
+      of(r.getLong(2), if (s == null) null else s.toArray)
+    }
+  }
+
+  /** graft_dot's fold over two vectors of one length: each element widened
+    * to double, summed in index order. */
+  private def dot(x: Array[Float], y: Array[Float]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < x.length) { s += x(i).toDouble * y(i).toDouble; i += 1 }
+    s
+  }
+
+  /** `normedCosine(a, b) >= t` as the SQL filter evaluates it, for the
+    * bucket pass: a null or zero norm product means similarity 0.0, vectors
+    * of different lengths have a null graft_dot (never kept), and doubles
+    * compare in Spark SQL's order (NaN above every double). */
+  private[graft] def cosineAtLeast(a: Normed, b: Normed, t: Double): Boolean = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val prod = a.nrm * b.nrm
+    if (a.e == null || b.e == null || compareDoubles(prod, 0.0) <= 0) compareDoubles(0.0, t) >= 0
+    else a.e.length == b.e.length && compareDoubles(dot(a.e, b.e) / prod, t) >= 0
   }
 
   /** Exact near-duplicate pairs by embedding cosine >= threshold, upper

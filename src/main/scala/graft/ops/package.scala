@@ -19,7 +19,7 @@ package object ops {
     * An operator's `materialize = false` skips this and returns `out`
     * UNEXECUTED — for explain/audit (PlanCheck) or lazy composition only.
     * Where the operator persists an upstream relation regardless (the
-    * minhash signatures, the n-gram sets, the LSH corpus projection, so the
+    * minhash signatures, the n-gram sets, so the
     * audited plan shows the InMemoryTableScan), that marker has no owner on
     * the lazy path: executing the plan builds a cache nothing releases.
     * Audit the plan, then call again with materialize = true to compute. */
@@ -42,9 +42,10 @@ package object ops {
     * banded near-dup producers (minhash bands, simhash Manku tables,
     * hyperplane tables). `banded` holds one row per bucket member. Its first
     * two columns are the bucket key (band or table: int, bucket: bigint),
-    * its third the member id (bigint); any further columns are a payload
-    * that `pair` may read. `pair` turns each in-bucket candidate (smaller id
-    * first) into an output row, or drops it with None.
+    * its third the member id (bigint); any further columns are a payload.
+    * `member` reads each buffered row once into what `pair` needs; `pair`
+    * turns each in-bucket candidate (smaller id first) into an output row,
+    * or drops it with None.
     *
     * The bucket exchange is an explicit `repartition` to
     * `spark.sql.shuffle.partitions` on the key. AQE never coalesces such a
@@ -53,15 +54,15 @@ package object ops {
     * task. Each partition is sorted by (key, id), and one pass over the
     * runs of equal key ([[bucketRuns]]) yields every i < j pair of a run in
     * ascending id order, smaller id first. */
-  private[graft] def bandedPairs[U: Encoder](banded: DataFrame, maxBucket: Int)(
-      pair: (Row, Row) => Option[U]): Dataset[U] = {
+  private[graft] def bandedPairs[M, U: Encoder](banded: DataFrame, maxBucket: Int)(
+      member: Row => M)(pair: (M, M) => Option[U]): Dataset[U] = {
     val Array(band, bucket, id) = banded.columns.take(3).map(col)
     banded
       .repartition(banded.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, band, bucket)
       .sortWithinPartitions(band, bucket, id)
       .mapPartitions { rows =>
         for {
-          run <- bucketRuns(rows, maxBucket)
+          run <- bucketRuns(rows, maxBucket).map(_.map(member))
           i <- run.indices.iterator
           j <- (i + 1) until run.length
           out <- pair(run(i), run(j))

@@ -673,6 +673,28 @@ class OpsSpec extends AnyFunSuite {
     assert(got.toSeq == Seq((2L, 3L)))
   }
 
+  test("nearDupPairsLsh's in-bucket verify keeps exactly the pairs the SQL normedCosine filter keeps") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val unit = Array(0.6f, 0.8f, 0f, 0f)
+    val vecs: Seq[Array[Float]] = Seq(unit, unit.clone(), Array(0f, 0f, 0f, 0f), null,
+      Array(-1f, -2f, -3f, -4f), Array(-1f, -2f, -3f, -4.1f), Array(1f, 2f, 3f),
+      Array(Float.NaN, 1f, 0f, 0f), Array(3f, 4f, 0f, 0f), Array(-0.6f, -0.8f, 0f, 0f)) ++
+      Seq.fill(12)(Array.fill(4)(rnd.nextGaussian().toFloat))
+    val pairs = for (a <- vecs.indices; b <- vecs.indices) yield (a, b)
+    val df = pairs.map { case (a, b) => (a, b, vecs(a), vecs(b)) }.toDF("a", "b", "ea", "eb")
+      .withColumn("na", sqrt(graft.functions.VecFunctions.dotF(col("ea"), col("ea"))))
+      .withColumn("nb", sqrt(graft.functions.VecFunctions.dotF(col("eb"), col("eb"))))
+    for (t <- Seq(-1.0, 0.0, 0.45, 0.999, 1.0)) {
+      val sim = Similarity.normedCosine(col("ea"), col("na"), col("eb"), col("nb"))
+      val want = df.filter(sim >= t).select("a", "b").as[(Int, Int)].collect().toSet
+      val got = pairs.filter { case (a, b) =>
+        Similarity.cosineAtLeast(Similarity.Normed.of(a, vecs(a)), Similarity.Normed.of(b, vecs(b)), t)
+      }.toSet
+      assert(got == want, s"t=$t: only in-bucket ${got -- want}, only SQL ${want -- got}")
+    }
+  }
+
   test("bandedPairs equals groupBy -> bucketPairs: random runs, buckets of exactly maxBucket and one over") {
     import spark.implicits._
     val cap = 4
@@ -684,8 +706,8 @@ class OpsSpec extends AnyFunSuite {
       ids <- Gen.listOfN(n, Gen.choose(0L, 30L))
     } yield ids.map(id => (band, key, id))
     val prop = Prop.forAll(Gen.listOf(bucket).map(_.flatten)) { rows =>
-      val got = graft.ops.bandedPairs(rows.toDF("band", "bucket", "id"), cap)(
-        (a, b) => Some((a.getLong(2), b.getLong(2)))).collect().toSeq.sorted
+      val got = graft.ops.bandedPairs(rows.toDF("band", "bucket", "id"), cap)(_.getLong(2))(
+        (a, b) => Some((a, b))).collect().toSeq.sorted
       val want = ReferenceForms.bandedPairs(rows, cap).sorted
       Prop(got == want) :| s"rows=$rows got=$got want=$want"
     }
@@ -701,7 +723,7 @@ class OpsSpec extends AnyFunSuite {
       (0L until 5L).map(id => (0, 8L, id)) ++ // one over
       Seq(9L, 4L).map(id => (1, 7L, id)) // same bucket, other band
     spark.conf.set("spark.sql.shuffle.partitions", "1")
-    val got = try graft.ops.bandedPairs(rows.toDF("band", "bucket", "id"), cap)(
+    val got = try graft.ops.bandedPairs(rows.toDF("band", "bucket", "id"), cap)(identity)(
       (a, b) => Some((a.getInt(0), a.getLong(2), b.getLong(2)))).collect().toSeq
     finally spark.conf.set("spark.sql.shuffle.partitions", "4")
     val atCap = for (i <- 0L until 4L; j <- (i + 1) until 4L) yield (0, i, j)
