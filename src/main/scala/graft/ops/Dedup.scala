@@ -3,23 +3,27 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.functions.VecFunctions
 
 /** Deduplication operators for web-scale corpora. Each returns a DataFrame
   * suitable for the driver's oracle compare; all are shuffle-conscious:
   *
   *   - exact: one hash-groupBy shuffle, map-side partial agg free.
   *   - minhash-LSH: shingle→signature in a narrow map, ONE shuffle on the
-  *     (band, bucket) key, candidate pairs verified with exact Jaccard inside
-  *     the bucket group (no second pass over the corpus) — the standard
-  *     banding scheme (Broder; Leskovec et al. MMDS ch.3).
-  *   - simhash: 64-bit signature in a narrow map; pigeonhole banding on 4×16
-  *     bit chunks → bucket join → exact Hamming verify (Charikar; Manku et
-  *     al. WWW'07 near-duplicate detection).
+  *     (band, bucket) key that carries each full signature, candidate pairs
+  *     verified by their estimated Jaccard inside the bucket pass (no
+  *     persist, no join back to the signatures) — the standard banding
+  *     scheme (Broder; Leskovec et al. MMDS ch.3).
+  *   - simhash: 64-bit signature in a narrow map; pigeonhole banding on
+  *     Manku's combined-chunk tables → exact Hamming verify in the bucket
+  *     pass (Charikar; Manku et al. WWW'07 near-duplicate detection).
   *   - ngram-jaccard: rare-shingle inverted-index blocking, exact verify.
   *   - embedding cosine: exact all-pairs above a threshold via block-nested
   *     join (sf scale); the LSH-bucketed variant for the 100 TB path is in
   *     Similarity.scala.
+  *
+  * The banded producers (minhash, simhash and that LSH variant) are each
+  * one lazy plan that persists nothing; building one runs no job, save the
+  * LSH variant's corpus count when it derives its signature width.
   *
   * At 10^12 rows the LSH variants are the only viable paths: their shuffles
   * key on short signatures (bytes, not documents), hot buckets are capped
@@ -42,7 +46,7 @@ object Dedup {
     * similar); [[minhashPairs]] excludes them, mirroring the witness form's
     * null-signature convention. */
   final case class DocSig(doc_id: Long, sig: Array[Long], nShingles: Int)
-  final case class BandKey(band: Int, bucket: Long, doc_id: Long)
+  final case class BandKey(band: Int, bucket: Long, doc_id: Long, sig: Array[Long])
 
   /** MinHash signatures: k char-5-shingles → 64 permutation mins. A narrow
     * map over the [[spread]] `(doc_id, text)` projection. */
@@ -73,15 +77,18 @@ object Dedup {
       }
   }
 
-  /** MinHash-LSH near-dup pairs: band signatures, [[bandedPairs]] per
-    * (band, bucket), then the Jaccard estimate from the full signatures
-    * (matching positions, counted by the native `graft_eq_count`). Returns
-    * (doc_a, doc_b, est_jaccard_pct) with doc_a < doc_b, est >= threshold,
-    * materialized with the signature cache released — see
-    * [[materialized]]. */
+  /** MinHash-LSH near-dup pairs: band signatures, then [[bandedPairs]] per
+    * (band, bucket), where each banded row carries its doc's full signature
+    * through the bucket exchange and the bucket pass keeps a candidate when
+    * [[minhashEstimate]] clears the threshold. Returns (doc_a, doc_b,
+    * est_jaccard_pct) with doc_a < doc_b, est >= threshold.
+    *
+    * Lazy by design, like [[simhashPairs]]: nothing is persisted, and no
+    * candidate set is deduplicated or joined back to the signatures — only
+    * the verified pairs reach the final `distinct` (a pair found in several
+    * bands has one estimate, so it dedups to one row). */
   def minhashPairs(spark: SparkSession, docs: DataFrame,
-      bands: Int = 16, threshold: Double = 0.7, maxBucket: Int = 64,
-      materialize: Boolean = true): DataFrame = {
+      bands: Int = 16, threshold: Double = 0.7, maxBucket: Int = 64): DataFrame = {
     import spark.implicits._
     // bands must tile the 64-row signature exactly: bands > 64 makes
     // rowsPerBand 0 (every doc hashes to ONE constant bucket — silently
@@ -89,13 +96,9 @@ object Dedup {
     // non-divisor silently ignores the trailing signature rows
     require(bands >= 1 && bands <= 64 && 64 % bands == 0,
       s"bands must divide 64 (got $bands)")
-    // persisted: feeds the banding pass AND both sides of the signature
-    // verify join — without it the full shingle+64-permutation pass over
-    // every document runs three times
     // shingle-less docs (text shorter than shingleK) carry no evidence:
     // exclude them here or every pair of them estimates 100 % similar
     val sigs = minhashSignatures(spark, docs).filter(_.nShingles > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val rowsPerBand = 64 / bands
     val banded = sigs.flatMap { s =>
       (0 until bands).iterator.map { b =>
@@ -105,25 +108,31 @@ object Dedup {
           h = (h ^ s.sig(b * rowsPerBand + r)) * 0x100000001b3L
           r += 1
         }
-        BandKey(b, h, s.doc_id)
+        BandKey(b, h, s.doc_id, s.sig)
       }
     }
-    // candidate pairs within a bucket; hot buckets capped (skew guard)
-    val candidates = bandedPairs(banded.toDF(), maxBucket)(_.getLong(2))((a, b) => Some((a, b)))
+    // candidate pairs within a bucket, verified there; hot buckets capped
+    // (skew guard)
+    bandedPairs(banded.toDF(), maxBucket)(r => (r.getLong(2), r.getSeq[Long](3).toArray)) {
+      case ((a, sa), (b, sb)) => minhashEstimate(sa, sb, threshold).map(est => (a, b, est))
+    }
+      .toDF("doc_a", "doc_b", "est_jaccard_pct")
       .distinct()
-      .toDF("doc_a", "doc_b")
-    // verify: estimated jaccard = fraction of matching signature positions
-    val s1 = sigs.toDF("doc_a", "sig_a", "n_a").drop("n_a")
-    val s2 = sigs.toDF("doc_b", "sig_b", "n_b").drop("n_b")
-    val out = candidates
-      .join(s1, "doc_a").join(s2, "doc_b")
-      .withColumn("est_jaccard_pct",
-        (lit(100) * VecFunctions.eqCount(col("sig_a"), col("sig_b")) / lit(64)).cast("int"))
-      // round, don't truncate: 0.29 * 100 is 28.999... in IEEE doubles, and
-      // a floor would silently lower the nominal threshold by one point
-      .filter(col("est_jaccard_pct") >= math.round(threshold * 100).toInt)
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard_pct"))
-    if (materialize) materialized(sigs)(out) else out
+  }
+
+  /** The in-bucket minhash verify: the estimated Jaccard of two 64-position
+    * signatures in whole percent, `((100 * eq) / 64).toInt` over the `eq`
+    * equal positions — the double and the truncating cast of the SQL form
+    * `(100 * eq / 64).cast("int")` — or None below `threshold`. */
+  private[graft] def minhashEstimate(a: Array[Long], b: Array[Long], threshold: Double): Option[Int] = {
+    val n = math.min(a.length, b.length)
+    var eq = 0
+    var i = 0
+    while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
+    val est = ((100 * eq).toDouble / 64).toInt
+    // round, don't truncate: 0.29 * 100 is 28.999... in IEEE doubles, and
+    // a floor would silently lower the nominal threshold by one point
+    if (est >= math.round(threshold * 100).toInt) Some(est) else None
   }
 
   /** MinHash signatures in an engine-agnostic md5 hash family — the oracle
@@ -444,13 +453,13 @@ object Dedup {
     * payload. The signatures are taken over the [[spread]] `(doc_id, text)`
     * projection.
     *
-    * Lazy by design, unlike the other pair producers: nothing is persisted.
-    * d06 reads the result twice (a union over doc_a and doc_b), but AQE
-    * plans the second branch's banded shuffle as a ReusedExchange of the
-    * first (OpsSpec pins this), so the shuffle already runs once. A
-    * materialized variant (persisted signatures, join-verify, a cached
-    * result) measured about 25 % slower on d06 at sf0.1, local[4], when the
-    * bucket pass still ran through `groupByKey`. */
+    * Lazy by design, like the other banded producers ([[minhashPairs]],
+    * `Similarity.nearDupPairsLsh`): nothing is persisted. d06 reads the
+    * result once (one explode over doc_a and doc_b), so its banded shuffle
+    * runs once (OpsSpec pins this). A materialized variant (persisted
+    * signatures, join-verify, a cached result) measured about 25 % slower
+    * on d06 at sf0.1, local[4], when the bucket pass still ran through
+    * `groupByKey`. */
   def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = 256): DataFrame = {
     import spark.implicits._

@@ -362,10 +362,12 @@ object Similarity {
     * ([[cosineAtLeast]], one norm per buffered member, a zero vector has
     * similarity 0.0): no candidate set is deduplicated or joined back to
     * the corpus, and only the verified pairs reach the final `distinct`.
-    * Returns the pair set materialized — see [[materialized]]. */
+    * Lazy by design, like `Dedup.minhashPairs` and `Dedup.simhashPairs`:
+    * nothing is persisted, and the only job it runs is [[autoBits]]'
+    * `count()` when `bits <= 0`. */
   def nearDupPairsLsh(emb: DataFrame, threshold: Double, dim: Int,
       bits: Int = 0, nTables: Int = 6, seed: Long = 42L,
-      maxBucket: Int = 1024, materialize: Boolean = true): DataFrame = {
+      maxBucket: Int = 1024): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val nBits = if (bits > 0) bits else autoBits(emb.count())
@@ -379,12 +381,11 @@ object Similarity {
     val banded = withSignatures(vecs, dim, nBits, (0 until nTables).map(t => seed + t * 1000003L))
       .select(col("vec_id"), col("embedding"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
       .select(col("tbl"), col("bucket"), col("vec_id"), col("embedding"))
-    val out = bandedPairs(banded, maxBucket)(Normed(_)) { (a, b) =>
+    bandedPairs(banded, maxBucket)(Normed(_)) { (a, b) =>
       if (cosineAtLeast(a, b, threshold)) Some((a.id, b.id)) else None
     }
       .toDF("id_a", "id_b")
       .distinct()
-    if (materialize) materialized()(out) else out
   }
 
   /** One member of a hyperplane bucket in the LSH verify: its id, its

@@ -9,8 +9,8 @@ package object ops {
   /** The one cache lifecycle of the materializing operators in this
     * package: persist `out` at MEMORY_AND_DISK and run one count() over it,
     * so the returned DataFrame is already computed and its upstream caches
-    * (`releasing`: signatures, gram sets, a token pass, a corpus
-    * projection) can go. They are unpersisted in a finally — after the
+    * (`releasing`: gram sets, a token pass, a corpus projection) can go.
+    * They are unpersisted in a finally — after the
     * count, whether it succeeded or threw — and if the count throws, `out`'s
     * own cache is unpersisted too, so no cache outlives an exception. The
     * caller owns the returned cache and may `unpersist()` it; repeated calls
@@ -19,8 +19,8 @@ package object ops {
     * An operator's `materialize = false` skips this and returns `out`
     * UNEXECUTED — for explain/audit (PlanCheck) or lazy composition only.
     * Where the operator persists an upstream relation regardless (the
-    * minhash signatures, the n-gram sets, so the
-    * audited plan shows the InMemoryTableScan), that marker has no owner on
+    * n-gram sets of `Dedup.ngramJaccardPairs`, so the audited plan shows the
+    * InMemoryTableScan), that marker has no owner on
     * the lazy path: executing the plan builds a cache nothing releases.
     * Audit the plan, then call again with materialize = true to compute. */
   private[graft] def materialized(releasing: Dataset[_]*)(out: => DataFrame): DataFrame =

@@ -637,32 +637,34 @@ class OpsSpec extends AnyFunSuite {
     assert(nullRow.isNullAt(0))
   }
 
-  test("native graft_eq_count counts what size(filter(zip_with(===))) counts: ragged and null elements too") {
+  test("minhashEstimate keeps exactly the pairs the SQL eqCount form keeps") {
     import spark.implicits._
-    import graft.functions.VecFunctions.eqCount
-    val r = new java.util.Random(11)
-    def arr(): Option[Seq[Option[Long]]] =
-      if (r.nextInt(20) == 0) None
-      else Some(Seq.fill(r.nextInt(9))(if (r.nextInt(8) == 0) None else Some(r.nextInt(3).toLong)))
-    val rows = Seq.fill(300)((arr(), arr())) ++ Seq(
-      (Some(Seq(Some(Long.MinValue), Some(7L))), Some(Seq(Some(Long.MinValue), Some(7L), Some(1L)))),
-      (Some(Seq.empty[Option[Long]]), Some(Seq(Some(1L)))))
-    // over the local relation the optimizer folds the projection (the
-    // interpreted eval); after an exchange it runs in generated code
-    val both = Seq(rows.toDF("a", "b"), rows.toDF("a", "b").repartition(2)).map(_.select(
-      eqCount(col("a"), col("b")).as("native"),
-      ReferenceForms.eqCount(col("a"), col("b")).as("hof")))
-    for (df <- both) {
-      val got = df.collect()
-      assert(got.count(_.isNullAt(0)) > 0 && got.count(r => !r.isNullAt(0) && r.getInt(0) >= 2) > 0)
-      for (row <- got) assert(row.get(0) == row.get(1), row)
+    // a pair of 64-position signatures with exactly `eq` equal positions;
+    // near-threshold counts (18/19 at 0.29, 31/32 at 0.5, 44/45 at 0.7,
+    // 63/64 at 1.0) and random ones
+    val near = Gen.oneOf(18, 19, 31, 32, 44, 45, 63, 64)
+    val pair = for {
+      eq <- Gen.frequency(2 -> near, 1 -> Gen.choose(0, 64))
+      a <- Gen.listOfN(64, Gen.oneOf(Gen.long, Gen.choose(-2L, 2L)))
+      diff <- Gen.pick(64 - eq, 0 until 64)
+    } yield (a, a.indices.map(i => if (diff.contains(i)) a(i) ^ 1L else a(i)))
+    val random = Gen.zip(Gen.listOfN(64, Gen.choose(0L, 1L)), Gen.listOfN(64, Gen.choose(0L, 1L)))
+    // no shrinking: each candidate would rerun the four SQL filters
+    val prop = Prop.forAllNoShrink(Gen.listOfN(12, Gen.oneOf(pair, random))) { pairs =>
+      val df = pairs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("i", "a", "b")
+        .withColumn("est", (lit(100) * ReferenceForms.eqCount(col("a"), col("b")) / lit(64)).cast("int"))
+      Prop.all(Seq(0.29, 0.5, 0.7, 1.0).map { t =>
+        val want = df.filter(col("est") >= math.round(t * 100).toInt)
+          .select("i", "est").as[(Int, Int)].collect().toSet
+        val got = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
+          Dedup.minhashEstimate(a.toArray, b.toArray, t).map(i -> _)
+        }.toSet
+        Prop(got == want) :| s"t=$t only in-bucket ${got -- want}, only SQL ${want -- got}"
+      }: _*)
     }
-    // alone in its projection (the HOF form has no generated code and would
-    // take the whole Project out of whole-stage codegen)
-    val native = rows.toDF("a", "b").repartition(2).select(eqCount(col("a"), col("b")))
-    native.collect()
-    val plan = native.queryExecution.executedPlan.toString
-    assert("""\*\(\d+\) Project \[graft_eq_count\(""".r.findFirstIn(plan).nonEmpty, plan)
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(25).withInitialSeed(Seed(20261020L)), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("nearDupPairsLsh: a zero-norm vector pairs with no bucket-mate") {
@@ -900,14 +902,14 @@ class OpsSpec extends AnyFunSuite {
     val badEmb = embeddings.repartition(2).select(col("vec_id"),
       badVec(col("vec_id"), col("embedding")).as("embedding"))
     val cases: Seq[(String, () => Any)] = Seq(
-      "minhashPairs" -> (() => Dedup.minhashPairs(spark, bad)),
+      "minhashPairs" -> (() => Dedup.minhashPairs(spark, bad).collect()),
       "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(spark, bad)),
       "dupWindowStats" -> (() => Dedup.dupWindowStats(bad, n = 3)),
       "removeDupWindows" -> (() => Dedup.removeDupWindows(bad, n = 3)),
       "dsirWeights" -> (() => ops.Sampling.dsirWeights(bad, bad)),
       "unigramNll" -> (() => ops.Sampling.unigramNll(bad, bad)),
       "nearDupPairsLsh" -> (() =>
-        Similarity.nearDupPairsLsh(badEmb, 0.9, dim = 16, bits = 8)),
+        Similarity.nearDupPairsLsh(badEmb, 0.9, dim = 16, bits = 8).collect()),
       "nearDupPairs" -> (() => Similarity.nearDupPairs(badEmb, 0.9)))
     // a failed count can leave a persist marker without a cached RDD, so
     // check both: no cache entry and no new persistent RDD
@@ -924,13 +926,41 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("simhashPairs stays lazy: the d06 union reuses its banded exchange") {
-    val pairs = Dedup.simhashPairs(spark, docs, maxHamming = 3)
-    val perDoc = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id")))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_neardups"))
+  /** `docs` and `embeddings` as an sf directory's documents and embeddings
+    * tables, for the `SparkEntry` queries. */
+  private lazy val sfDir = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ops-sf")
+    docs.write.parquet(dir.resolve("documents.parquet").toString)
+    embeddings.select("vec_id", "embedding").write.parquet(dir.resolve("embeddings.parquet").toString)
+    dir.toString
+  }
+
+  test("simhashPairs stays lazy: d06 runs its banded exchange once") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val perDoc = SparkEntry.queries("d06_simhash")(spark, sfDir)
     perDoc.collect()
-    val plan = perDoc.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedExchange"), plan)
+    val plan = perDoc.queryExecution.executedPlan
+    // a reused exchange is a leaf here, so each banded shuffle that runs is
+    // counted once
+    val banded = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM && (e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.headOption.exists(_.references.exists(_.name == "_1"))
+        case _ => false
+      }) => e
+    }
+    assert(banded.length == 1, plan)
+  }
+
+  test("banded near-dup queries build with no job but autoBits' count") {
+    val (_, countJobs) = SparkJobs.counted(spark)(SparkEntry.emb(spark, sfDir).count())
+    spark.catalog.clearCache() // earlier tests leave their results cached
+    for ((q, allowed) <- Seq("d05_minhash" -> 0, "d06_simhash" -> 0, "d15_neardup_lsh" -> countJobs)) {
+      val (built, jobs) = SparkJobs.counted(spark)(SparkEntry.queries(q)(spark, sfDir))
+      assert(built.isSuccess, s"$q: $built")
+      assert(jobs == allowed, s"building $q started $jobs jobs, allowed $allowed")
+      assert(spark.sharedState.cacheManager.isEmpty, s"building $q left a cache entry")
+    }
   }
 }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   *   - [[langIdDF]] vs `TextOps.langIdFast` (TextExprSpec) and the row form
   *     [[langId]] (OpsSpec);
   *   - [[dot]] vs the native `graft_dot` (OpsSpec);
-  *   - [[eqCount]] vs the native `graft_eq_count` (OpsSpec);
+  *   - [[eqCount]] vs the in-bucket minhash verify `Dedup.minhashEstimate`
+  *     (OpsSpec);
   *   - [[signatureExpr]] vs `Similarity.withSignatures` (OpsSpec);
   *   - [[bandedPairs]] (group by key, then [[bucketPairs]]) vs the banded
   *     pair generator `ops.bandedPairs` (OpsSpec).
@@ -168,8 +169,9 @@ object ReferenceForms {
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
-  /** Positions where two arrays hold equal values — the higher-order-function
-    * form of `graft_eq_count`, as the minhash verify once computed it. */
+  /** Positions where two arrays hold equal values — the SQL form of the
+    * minhash verify's count, as it once ran over a join back to the
+    * signatures. */
   def eqCount(a: Column, b: Column): Column =
     size(filter(zip_with(a, b, (x, y) => x === y), x => x))
 
