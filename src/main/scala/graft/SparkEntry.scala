@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.Page
 import graft.spark.{ExtractJob, ParquetFooter}
-import graft.ops.{Dedup, Similarity, TextOps}
+import graft.ops.{Dedup, Similarity, TextOps, TypedEncoders}
 
 /** Driver contract — one `queries` entry per implemented operator
   * (SURVEY.md §2 + the training-data ops), with DuckDB oracle SQL wherever
@@ -86,17 +86,54 @@ object SparkEntry {
     ownedCaches.clear()
   }
 
-  /** `base` (its first column the id) with `n_neardups`: the number of
-    * `pairs` rows whose first or second column holds the row's id, 0 for
-    * none. One explode reads each pair once, so a lazy pair set's plan runs
-    * once. */
+  /** `base` (its first column the id, unique per row) with `n_neardups`:
+    * the number of distinct `pairs` rows, by their first two columns, that
+    * hold the row's id in the first or the second column, 0 for none. The
+    * pair stream may repeat a pair (once per band or table it shares).
+    *
+    * One exchange: the base rows and both orientations of each pair,
+    * exploded from one read of `pairs`, are hash-repartitioned on the id
+    * (REPARTITION_BY_NUM, as in `ops.bandedPairs`) and sorted by (id, base
+    * rows first, partner, orientation). One pass over each run of equal id
+    * then counts the distinct (partner, orientation) entries: no
+    * `distinct`, no `groupBy` exchange, no join back to `base`. Pairs whose
+    * id is not in `base` are dropped, and a null id counts nothing, as in
+    * the left join of `ReferenceForms.withNearDups`. */
   private[graft] def withNearDups(base: DataFrame, pairs: DataFrame): DataFrame = {
-    val id = base.columns.head
-    val Array(a, b) = pairs.columns.take(2)
-    val perId = pairs.select(explode(array(col(a), col(b))).as(id))
-      .groupBy(id).agg(count(lit(1)).as("n_neardups"))
-    base.join(perId, Seq(id), "left")
-      .select(base.columns.map(col) :+ coalesce(col("n_neardups"), lit(0L)).as("n_neardups"): _*)
+    val idField = base.schema.head
+    val id = idField.name
+    val extras = base.schema.tail
+    val Array(a, b) = pairs.columns.take(2).map(c => col(c).cast(idField.dataType))
+    def entry(x: Column, partner: Column, side: Int) =
+      struct(x.as("x"), partner.as("p"), lit(side).as("s"))
+    val baseRows = Seq(col(id), lit(0).as("__kind"), lit(null).cast(idField.dataType).as("__partner"),
+      lit(null).cast("int").as("__side")) ++ extras.map(f => col(f.name))
+    val pairRows = Seq(col("__e.x").as(id), lit(1).as("__kind"), col("__e.p").as("__partner"),
+      col("__e.s").as("__side")) ++ extras.map(f => lit(null).cast(f.dataType).as(f.name))
+    val keyed = base.select(baseRows: _*)
+      .union(pairs.select(explode(array(entry(a, b, 0), entry(b, a, 1))).as("__e")).select(pairRows: _*))
+    val out = base.schema.add("n_neardups", "long", nullable = false)
+    keyed
+      .repartition(base.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(id))
+      .sortWithinPartitions(id, "__kind", "__partner", "__side")
+      .mapPartitions { rows =>
+        val it = rows.buffered
+        Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+          val key = it.head.get(0)
+          val bases = Vector.newBuilder[Row]
+          while (it.hasNext && it.head.get(0) == key && it.head.getInt(1) == 0) bases += it.next()
+          var n = 0L
+          var last: Row = null
+          while (it.hasNext && it.head.get(0) == key) {
+            val r = it.next()
+            if (last == null || r.get(2) != last.get(2) || r.get(3) != last.get(3)) n += 1
+            last = r
+          }
+          val partners = if (key == null) 0L else n
+          bases.result().iterator.map(r =>
+            Row.fromSeq(r.get(0) +: (4 until r.length).map(r.get) :+ partners))
+        }
+      }(Encoders.row(out))
   }
 
   /** Cached (url, block) rows — the detection-stage debug surface shared by
@@ -264,23 +301,27 @@ object SparkEntry {
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("int").as("rank"))),
     "d04_embed_neardup" -> ((s, d) =>
       owned(Similarity.nearDupPairs(emb(s, d), 0.45))),
-    "d05_minhash" -> ((s, d) =>
-      withNearDups(docs(s, d).select(col("doc_id").cast("long").as("doc_id")),
-        Dedup.minhashPairs(s, docs(s, d), threshold = 0.7))),
+    "d05_minhash" -> ((s, d) => {
+      val dd = docs(s, d)
+      withNearDups(dd.select(col("doc_id").cast("long").as("doc_id")),
+        Dedup.minhashPairStream(s, dd, threshold = 0.7))
+    }),
     "d06_simhash" -> ((s, d) => {
-      import s.implicits._
       // signature surface + the banded pair path (Manku tables) in one query;
       // both signature passes read the same spread projection, so its
       // exchange runs once (a ReusedExchange)
-      val sigs = graft.ops.spread(docs(s, d).select(col("doc_id").cast("long"), col("text")), "doc_id")
-        .as[(Long, String)]
-        .map { case (id, t) => (id, Dedup.simhash(t)) }
+      val dd = docs(s, d)
+      val sigs = graft.ops.spread(dd.select(col("doc_id").cast("long"), col("text")), "doc_id")
+        .as(TypedEncoders.idText)
+        .map { case (id, t) => (id, Dedup.simhash(t)) }(TypedEncoders.idLong)
         .toDF("doc_id", "simhash_sig")
-      withNearDups(sigs, Dedup.simhashPairs(s, docs(s, d), maxHamming = 3))
+      withNearDups(sigs, Dedup.simhashPairStream(s, dd, maxHamming = 3))
     }),
-    "d07_ngram_jaccard" -> ((s, d) =>
-      withNearDups(docs(s, d).select(col("doc_id").cast("long").as("doc_id")),
-        owned(Dedup.ngramJaccardPairs(s, docs(s, d), threshold = 0.5)))),
+    "d07_ngram_jaccard" -> ((s, d) => {
+      val dd = docs(s, d)
+      withNearDups(dd.select(col("doc_id").cast("long").as("doc_id")),
+        owned(Dedup.ngramJaccardPairs(s, dd, threshold = 0.5)))
+    }),
     "d08_lang_id" -> ((s, d) =>
       // native one-pass graft_lang_id scan; the regex form
       // (ReferenceForms.langIdDF, test tree) is the oracle-shaped reference
@@ -624,11 +665,15 @@ object SparkEntry {
       Dedup.jaccardWitness(
           docs(s, d).filter(col("doc_id") % 10 === 0), n = 3)
         .orderBy("doc_a", "doc_b")),
-    "d15_neardup_lsh" -> ((s, d) =>
+    "d15_neardup_lsh" -> ((s, d) => {
       // the 1e12-row near-dup path: LSH OR-construction candidates + exact
-      // cosine verify (no O(n^2) product anywhere)
-      withNearDups(emb(s, d).select(col("vec_id").cast("long").as("vec_id")),
-        Similarity.nearDupPairsLsh(emb(s, d), 0.45, dim = 64))),
+      // cosine verify (no O(n^2) product anywhere); the signature width
+      // comes from the footers' row count, so building runs no job
+      val e = emb(s, d)
+      val bits = Similarity.autoBits(ParquetFooter.rows(s, s"$d/embeddings.parquet"))
+      withNearDups(e.select(col("vec_id").cast("long").as("vec_id")),
+        Similarity.nearDupPairStreamLsh(e, 0.45, dim = 64, bits = bits))
+    }),
     "x13_stream_extract" -> ((s, d) => {
       // the streaming surface through the driver gate: a bounded MemoryStream
       // runs the SAME kernel via ExtractJob.run into a memory sink; results

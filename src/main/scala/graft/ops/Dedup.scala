@@ -52,11 +52,10 @@ object Dedup {
     * map over the [[spread]] `(doc_id, text)` projection. */
   def minhashSignatures(spark: SparkSession, docs: DataFrame,
       numHashes: Int = 64, shingleK: Int = 5): Dataset[DocSig] = {
-    import spark.implicits._
     // deterministic affine permutations over the shingle hash space
     val as = Array.tabulate(numHashes)(i => 0x9E3779B97F4A7C15L * (2L * i + 1))
     val bs = Array.tabulate(numHashes)(i => 0xC2B2AE3D27D4EB4FL * (i + 1))
-    spread(docs.select(col("doc_id").cast("long"), col("text")), "doc_id").as[(Long, String)]
+    spread(docs.select(col("doc_id").cast("long"), col("text")), "doc_id").as(TypedEncoders.idText)
       .mapPartitions { it =>
         it.map { case (id, text) =>
           val sh = TextOps.charShingleHashes(if (text == null) "" else text.toLowerCase, shingleK)
@@ -74,7 +73,7 @@ object Dedup {
           }
           DocSig(id, sig, sh.length)
         }
-      }
+      }(TypedEncoders.docSig)
   }
 
   /** MinHash-LSH near-dup pairs: band signatures, then [[bandedPairs]] per
@@ -88,8 +87,14 @@ object Dedup {
     * the verified pairs reach the final `distinct` (a pair found in several
     * bands has one estimate, so it dedups to one row). */
   def minhashPairs(spark: SparkSession, docs: DataFrame,
+      bands: Int = 16, threshold: Double = 0.7, maxBucket: Int = 64): DataFrame =
+    minhashPairStream(spark, docs, bands, threshold, maxBucket).distinct()
+
+  /** [[minhashPairs]] before its `distinct`: every verified pair once per
+    * band it shares, for consumers that deduplicate on their own exchange
+    * (`SparkEntry.withNearDups`, d05). */
+  private[graft] def minhashPairStream(spark: SparkSession, docs: DataFrame,
       bands: Int = 16, threshold: Double = 0.7, maxBucket: Int = 64): DataFrame = {
-    import spark.implicits._
     // bands must tile the 64-row signature exactly: bands > 64 makes
     // rowsPerBand 0 (every doc hashes to ONE constant bucket — silently
     // zero pairs once maxBucket skips it), bands = 0 divides by zero, and a
@@ -110,14 +115,13 @@ object Dedup {
         }
         BandKey(b, h, s.doc_id, s.sig)
       }
-    }
+    }(TypedEncoders.bandKey)
     // candidate pairs within a bucket, verified there; hot buckets capped
     // (skew guard)
     bandedPairs(banded.toDF(), maxBucket)(r => (r.getLong(2), r.getSeq[Long](3).toArray)) {
       case ((a, sa), (b, sb)) => minhashEstimate(sa, sb, threshold).map(est => (a, b, est))
-    }
+    }(TypedEncoders.pairInt)
       .toDF("doc_a", "doc_b", "est_jaccard_pct")
-      .distinct()
   }
 
   /** The in-bucket minhash verify: the estimated Jaccard of two 64-position
@@ -454,15 +458,20 @@ object Dedup {
     * projection.
     *
     * Lazy by design, like the other banded producers ([[minhashPairs]],
-    * `Similarity.nearDupPairsLsh`): nothing is persisted. d06 reads the
-    * result once (one explode over doc_a and doc_b), so its banded shuffle
-    * runs once (OpsSpec pins this). A materialized variant (persisted
-    * signatures, join-verify, a cached result) measured about 25 % slower
-    * on d06 at sf0.1, local[4], when the bucket pass still ran through
-    * `groupByKey`. */
+    * `Similarity.nearDupPairsLsh`): nothing is persisted. d06 reads
+    * [[simhashPairStream]] once (one explode over doc_a and doc_b), so its
+    * banded shuffle runs once (OpsSpec pins this). A materialized variant
+    * (persisted signatures, join-verify, a cached result) measured about
+    * 25 % slower on d06 at sf0.1, local[4], when the bucket pass still ran
+    * through `groupByKey`. */
   def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int = 3,
-      maxBucket: Int = 256): DataFrame = {
-    import spark.implicits._
+      maxBucket: Int = 256): DataFrame =
+    simhashPairStream(spark, docs, maxHamming, maxBucket).distinct()
+
+  /** [[simhashPairs]] before its `distinct`: every verified pair once per
+    * table it shares (d06 counts partners on its own exchange). */
+  private[graft] def simhashPairStream(spark: SparkSession, docs: DataFrame,
+      maxHamming: Int = 3, maxBucket: Int = 256): DataFrame = {
     // the C(5,2) construction pigeonholes only d <= 3 (>= 2 untouched
     // chunks); a larger maxHamming would silently lose recall — refuse it
     // rather than under-deliver (Manku's general construction would derive
@@ -475,20 +484,19 @@ object Dedup {
       (sig >>> offsets(c)) & ((1L << widths(c)) - 1)
     val tables = for { i <- 0 until 5; j <- (i + 1) until 5 } yield (i, j)
     val sigs = spread(docs.select(col("doc_id").cast("long"), col("text")), "doc_id")
-      .as[(Long, String)]
-      .map { case (id, t) => (id, simhash(t)) }
+      .as(TypedEncoders.idText)
+      .map { case (id, t) => (id, simhash(t)) }(TypedEncoders.idLong)
     val banded = sigs.flatMap { case (id, sig) =>
       tables.iterator.zipWithIndex.map { case ((i, j), t) =>
         (t, (chunk(sig, i) << 13) | chunk(sig, j), id, sig)
       }
-    }
+    }(TypedEncoders.simhashBand)
     bandedPairs(banded.toDF(), maxBucket)(r => (r.getLong(2), r.getLong(3))) {
       case ((a, sa), (b, sb)) =>
         val h = java.lang.Long.bitCount(sa ^ sb)
         if (h <= maxHamming) Some((a, b, h)) else None
-    }
+    }(TypedEncoders.pairInt)
       .toDF("doc_a", "doc_b", "hamming")
-      .distinct()
   }
 
   /** Jaccard oracle witness (d31) — the d28/d29/d30 pattern applied to the

@@ -143,10 +143,9 @@ object Similarity {
     * folding the available dims. */
   def withSignatures(emb: DataFrame, dim: Int, bits: Int, seeds: Seq[Long]): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val bc = spark.sparkContext.broadcast(seeds.map(s => planesFor(dim, bits, s)).toArray)
     emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
+      .as(TypedEncoders.idVec)
       .mapPartitions { it =>
         val tables = bc.value
         it.map { case (id, e) =>
@@ -172,15 +171,17 @@ object Similarity {
           }
           (id, e, sigs)
         }
-      }
+      }(TypedEncoders.idVecSigs)
       .toDF("vec_id", "embedding", "buckets")
   }
 
   /** Signature width scaled to the corpus: bits ≈ log2(n / targetBucket),
     * clamped to [4, 24] — expected bucket occupancy stays ~targetBucket as
     * the corpus grows, so probe cost is flat from sf0.001 to 10^12 rows
-    * instead of buckets going quadratic at a fixed width. `n` comes from
-    * `count()` on the source, which parquet answers from footer metadata. */
+    * instead of buckets going quadratic at a fixed width. d15 passes the
+    * row count summed from the embeddings table's parquet footers
+    * (`ParquetFooter.rows`, no job); a DataFrame input keeps
+    * `autoBits(emb.count())`, which runs two Spark jobs. */
   def autoBits(n: Long, targetBucket: Int = 64): Int = {
     val raw = math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)).toInt
     math.max(4, math.min(24, raw))
@@ -367,10 +368,15 @@ object Similarity {
     * `count()` when `bits <= 0`. */
   def nearDupPairsLsh(emb: DataFrame, threshold: Double, dim: Int,
       bits: Int = 0, nTables: Int = 6, seed: Long = 42L,
-      maxBucket: Int = 1024): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val nBits = if (bits > 0) bits else autoBits(emb.count())
+      maxBucket: Int = 1024): DataFrame =
+    nearDupPairStreamLsh(emb, threshold, dim,
+      if (bits > 0) bits else autoBits(emb.count()), nTables, seed, maxBucket).distinct()
+
+  /** [[nearDupPairsLsh]] at a fixed `bits`, before its `distinct`: every
+    * verified pair once per table it shares (d15 counts partners on its own
+    * exchange). */
+  private[graft] def nearDupPairStreamLsh(emb: DataFrame, threshold: Double, dim: Int,
+      bits: Int, nTables: Int = 6, seed: Long = 42L, maxBucket: Int = 1024): DataFrame = {
     // OR-construction: nTables independent hyperplane tables; a pair is a
     // candidate if it shares a bucket in ANY table (recall 1-(1-p^bits)^T).
     // The explode keys on (table, bucket) so all tables ride one shuffle.
@@ -378,14 +384,13 @@ object Similarity {
     // one broadcast-plane pass computes ALL table signatures (constant plan
     // size at any dim — a literal-expression form would inline
     // nTables x bits x dim coefficients here)
-    val banded = withSignatures(vecs, dim, nBits, (0 until nTables).map(t => seed + t * 1000003L))
+    val banded = withSignatures(vecs, dim, bits, (0 until nTables).map(t => seed + t * 1000003L))
       .select(col("vec_id"), col("embedding"), posexplode(col("buckets")).as(Seq("tbl", "bucket")))
       .select(col("tbl"), col("bucket"), col("vec_id"), col("embedding"))
     bandedPairs(banded, maxBucket)(Normed(_)) { (a, b) =>
       if (cosineAtLeast(a, b, threshold)) Some((a.id, b.id)) else None
-    }
+    }(TypedEncoders.idLong)
       .toDF("id_a", "id_b")
-      .distinct()
   }
 
   /** One member of a hyperplane bucket in the LSH verify: its id, its

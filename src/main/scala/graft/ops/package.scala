@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -29,6 +29,25 @@ package object ops {
       try { cached.count(); cached }
       catch { case t: Throwable => cached.unpersist(false); throw t }
     } finally releasing.foreach(_.unpersist(false))
+
+  /** The encoders of the banded producers' typed passes (and d06's
+    * signature surface), derived once per JVM and passed by name.
+    * `spark.implicits._` derives a tuple or case-class encoder by TypeTag
+    * reflection at every call; these are built once and shared by every
+    * session, since an encoder only describes the row layout. */
+  private[graft] object TypedEncoders {
+    import Encoders.{scalaInt, scalaLong, STRING}
+    val idText: Encoder[(Long, String)] = Encoders.tuple(scalaLong, STRING)
+    val idLong: Encoder[(Long, Long)] = Encoders.tuple(scalaLong, scalaLong)
+    val pairInt: Encoder[(Long, Long, Int)] = Encoders.tuple(scalaLong, scalaLong, scalaInt)
+    val simhashBand: Encoder[(Int, Long, Long, Long)] =
+      Encoders.tuple(scalaInt, scalaLong, scalaLong, scalaLong)
+    val docSig: Encoder[Dedup.DocSig] = Encoders.product[Dedup.DocSig]
+    val bandKey: Encoder[Dedup.BandKey] = Encoders.product[Dedup.BandKey]
+    val idVec: Encoder[(Long, Array[Float])] = Encoders.product[(Long, Array[Float])]
+    val idVecSigs: Encoder[(Long, Array[Float], Array[Long])] =
+      Encoders.product[(Long, Array[Float], Array[Long])]
+  }
 
   /** `df`, an `(id, payload)` projection, hash-partitioned on `id` over
     * `defaultParallelism` partitions. A table stored as one small parquet

@@ -1,6 +1,10 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 
 /** Physical-plan audit for the headline queries: asserts the plan shapes that
   * matter at 100 TB — filter/projection pushdown into the parquet scan,
@@ -110,8 +114,31 @@ object PlanCheck {
       .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
     check("d15_neardup_lsh (lazy plan)", d15, Nil, Seq("Join", "InMemoryTableScan"))
     bucketed("d15_neardup_lsh (lazy plan)", d15, "tbl")
-    // d06 is lazy by design: its query plan is built without running a job
-    bucketed("d06_simhash", planOf("d06_simhash"), "_1")
+    // d05/d06/d15 as SparkEntry runs them (building none runs a job): the
+    // per-id partner counts of withNearDups ride ONE REPARTITION_BY_NUM
+    // exchange on the id above the bucket pass — no candidate distinct, no
+    // per-id groupBy exchange, no broadcast join back to the corpus, nothing
+    // persisted. The signature input's spread exchange, on the same id, sits
+    // below the bucket pass and is not counted.
+    def byNumOn(key: String)(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.headOption.exists(_.references.exists(_.name == key))
+        case _ => false
+      }
+      case _ => false
+    }
+    for ((q, id, key) <- Seq(("d05_minhash", "doc_id", "band"), ("d06_simhash", "doc_id", "_1"),
+        ("d15_neardup_lsh", "vec_id", "tbl"))) {
+      val qe = graft.SparkEntry.queries(q)(spark, sfDir).queryExecution
+      val plan = qe.explainString(org.apache.spark.sql.execution.SimpleMode)
+      check(q, plan, Nil, Seq("Join", "BroadcastExchange", "InMemoryTableScan"))
+      bucketed(q, plan, key)
+      val perId = new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+        case e if byNumOn(id)(e) && e.find(byNumOn(key)).isDefined => e
+      }
+      if (perId.length == 1) println(s"PASS $q: one REPARTITION_BY_NUM exchange on $id above the bucket pass")
+      else { println(s"FAIL $q: ${perId.length} REPARTITION_BY_NUM exchanges on $id above the bucket pass"); failures += 1 }
+    }
 
     // d16/d19: the segment-dedup winner and the per-source quota must be
     // partial-aggregation shapes, NEVER a corpus-wide Window — a window

@@ -54,6 +54,49 @@ class ExtractMainSpec extends AnyFunSuite {
     }
   }
 
+  test("ParquetFooter.rows equals count() for a file, a Spark-written directory and a zero-row file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-footer-rows")
+    val df = (0L until 50L).map(i => (i, s"t$i")).toDF("id", "text")
+    val multi = dir.resolve("multi").toString
+    df.repartition(3).write.parquet(multi)
+    val one = dir.resolve("one").toString
+    df.coalesce(1).write.option("parquet.block.size", "256").parquet(one)
+    val empty = dir.resolve("empty").toString
+    df.limit(0).coalesce(1).write.parquet(empty)
+    def partFile(d: String) = {
+      val s = Files.list(Paths.get(d))
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList.sorted.head
+      finally s.close()
+    }
+    for (path <- Seq(multi, one, partFile(one), empty, partFile(empty))) {
+      val (rows, jobs) = SparkJobs.counted(spark)(graft.spark.ParquetFooter.rows(spark, path))
+      assert(jobs == 0, s"$path: rows started $jobs jobs")
+      assert(rows.get == spark.read.parquet(path).count(), path)
+    }
+    assert(graft.spark.ParquetFooter.rows(spark, empty) == 0L)
+  }
+
+  test("ParquetFooter.read gives the same rows for a file and its directory; a directory without data files throws") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-footer-read")
+    val one = dir.resolve("one").toString
+    Seq((1L, "a", Some(2)), (2L, null, None)).toDF("id", "text", "n").coalesce(1).write.parquet(one)
+    val file = {
+      val s = Files.list(Paths.get(one))
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList.head
+      finally s.close()
+    }
+    val fromDir = graft.spark.ParquetFooter.read(spark, one)
+    val fromFile = graft.spark.ParquetFooter.read(spark, file)
+    assert(fromDir.schema == fromFile.schema)
+    assert(fromDir.collect().map(_.toString).sorted sameElements fromFile.collect().map(_.toString).sorted)
+    val noData = Files.createDirectories(dir.resolve("no-data"))
+    Files.writeString(noData.resolve("_SUCCESS"), "")
+    val e = intercept[IllegalArgumentException](graft.spark.ParquetFooter.read(spark, noData.toString))
+    assert(e.getMessage.contains("no parquet data file"), e.getMessage)
+  }
+
   test("pagesFor rejects a missing column, html stored as a string and an empty directory before any job") {
     val dir = Files.createTempDirectory("graft-badpages")
     val noHtml = dir.resolve("no-html").toString

@@ -953,14 +953,57 @@ class OpsSpec extends AnyFunSuite {
     assert(banded.length == 1, plan)
   }
 
-  test("banded near-dup queries build with no job but autoBits' count") {
-    val (_, countJobs) = SparkJobs.counted(spark)(SparkEntry.emb(spark, sfDir).count())
+  test("banded near-dup queries build with no job") {
     spark.catalog.clearCache() // earlier tests leave their results cached
-    for ((q, allowed) <- Seq("d05_minhash" -> 0, "d06_simhash" -> 0, "d15_neardup_lsh" -> countJobs)) {
+    for (q <- Seq("d05_minhash", "d06_simhash", "d15_neardup_lsh")) {
       val (built, jobs) = SparkJobs.counted(spark)(SparkEntry.queries(q)(spark, sfDir))
       assert(built.isSuccess, s"$q: $built")
-      assert(jobs == allowed, s"building $q started $jobs jobs, allowed $allowed")
+      assert(jobs == 0, s"building $q started $jobs jobs")
       assert(spark.sharedState.cacheManager.isEmpty, s"building $q left a cache entry")
     }
+  }
+
+  test("banded near-dup queries run at most 5 jobs for their fingerprint aggregate") {
+    // the signature spread, the bucket pass, the per-id count exchange, the
+    // aggregate's exchange and its result: a re-added exchange, count or
+    // broadcast is one job more
+    for (q <- Seq("d05_minhash", "d06_simhash", "d15_neardup_lsh")) {
+      val (fp, jobs) = SparkJobs.counted(spark)(
+        SparkEntry.queries(q)(spark, sfDir).agg(bit_xor(xxhash64(struct(col("*"))))).head())
+      assert(fp.isSuccess, s"$q: $fp")
+      assert(jobs <= 5, s"the fingerprint of $q ran $jobs jobs")
+    }
+  }
+
+  test("withNearDups over a pair stream equals the groupBy -> left-join form over its distinct pairs") {
+    import spark.implicits._
+    // unique ids (one may be null) with nullable payload columns; pairs drawn
+    // around the base's ids, some outside it, some self-pairs, with repeats
+    val base = for {
+      ids <- Gen.someOf(0L to 12L)
+      withNull <- Gen.oneOf(false, false, true)
+      tags <- Gen.listOfN(ids.size + 1, Gen.option(Gen.alphaStr.map(_.take(3))))
+      scores <- Gen.listOfN(ids.size + 1, Gen.option(Gen.choose(-5, 5)))
+    } yield {
+      val keys = ids.toSeq.map(java.lang.Long.valueOf) ++ (if (withNull) Seq(null) else Nil)
+      keys.zip(tags).zip(scores).map { case ((k, t), sc) => (k, t, sc) }
+    }
+    val stream = for {
+      ps <- Gen.listOf(Gen.zip(Gen.choose(0L, 15L), Gen.choose(0L, 15L), Gen.choose(0, 2)))
+      again <- Gen.someOf(ps)
+    } yield ps ++ again
+    // no shrinking: each candidate runs two Spark queries
+    val prop = Prop.forAllNoShrink(base, stream) { (rows, ps) =>
+      val b = rows.toDF("id", "tag", "score")
+      val p = ps.toDF("a", "b", "w")
+      def sorted(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      val got = SparkEntry.withNearDups(b, p)
+      val want = ReferenceForms.withNearDups(b, p.select("a", "b").distinct())
+      Prop(got.columns.toSeq == want.columns.toSeq && sorted(got) == sorted(want)) :|
+        s"base=$rows pairs=$ps got=${sorted(got)} want=${sorted(want)}"
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(25).withInitialSeed(Seed(20261021L)), prop)
+    assert(res.passed, res.status.toString)
   }
 }

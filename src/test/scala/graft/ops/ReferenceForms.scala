@@ -16,9 +16,25 @@ import org.apache.spark.sql.functions._
   *     (OpsSpec);
   *   - [[signatureExpr]] vs `Similarity.withSignatures` (OpsSpec);
   *   - [[bandedPairs]] (group by key, then [[bucketPairs]]) vs the banded
-  *     pair generator `ops.bandedPairs` (OpsSpec).
+  *     pair generator `ops.bandedPairs` (OpsSpec);
+  *   - [[withNearDups]] over the distinct pairs vs the one-exchange
+  *     `SparkEntry.withNearDups` over the pair stream (OpsSpec).
   */
 object ReferenceForms {
+
+  /** `base` (its first column the id) with `n_neardups`, the number of
+    * `pairs` rows whose first or second column holds the row's id, 0 for
+    * none: explode each pair into its two ids, count them per id with a
+    * `groupBy`, left-join the counts back to `base`. The form d05, d06, d07
+    * and d15 used over their deduplicated pair sets. */
+  def withNearDups(base: DataFrame, pairs: DataFrame): DataFrame = {
+    val id = base.columns.head
+    val Array(a, b) = pairs.columns.take(2)
+    val perId = pairs.select(explode(array(col(a), col(b))).as(id))
+      .groupBy(id).agg(count(lit(1)).as("n_neardups"))
+    base.join(perId, Seq(id), "left")
+      .select(base.columns.map(col) :+ coalesce(col("n_neardups"), lit(0L)).as("n_neardups"): _*)
+  }
 
   /** In-bucket candidate pairs of `(band, bucket, id)` rows without an
     * exchange or a sort: group by bucket key in collection code, then
