@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.Page
 import graft.spark.{ExtractJob, ParquetFooter}
-import graft.ops.{Dedup, Similarity, TextOps, TypedEncoders}
+import graft.ops.{Dedup, Similarity, TextOps}
 
 /** Driver contract — one `queries` entry per implemented operator
   * (SURVEY.md §2 + the training-data ops), with DuckDB oracle SQL wherever
@@ -304,18 +304,16 @@ object SparkEntry {
     "d05_minhash" -> ((s, d) => {
       val dd = docs(s, d)
       withNearDups(dd.select(col("doc_id").cast("long").as("doc_id")),
-        Dedup.minhashPairStream(s, dd, threshold = 0.7))
+        Dedup.minhashPairs(dd, threshold = 0.7))
     }),
     "d06_simhash" -> ((s, d) => {
       // signature surface + the banded pair path (Manku tables) in one query;
-      // both signature passes read the same spread projection, so its
-      // exchange runs once (a ReusedExchange)
+      // both branches sign through Dedup.simhashSignatures, so the spread
+      // exchange below them runs once (a ReusedExchange); the simhash map
+      // above it still runs in each branch
       val dd = docs(s, d)
-      val sigs = graft.ops.spread(dd.select(col("doc_id").cast("long"), col("text")), "doc_id")
-        .as(TypedEncoders.idText)
-        .map { case (id, t) => (id, Dedup.simhash(t)) }(TypedEncoders.idLong)
-        .toDF("doc_id", "simhash_sig")
-      withNearDups(sigs, Dedup.simhashPairStream(s, dd, maxHamming = 3))
+      withNearDups(Dedup.simhashSignatures(dd).toDF("doc_id", "simhash_sig"),
+        Dedup.simhashPairs(dd, maxHamming = 3))
     }),
     "d07_ngram_jaccard" -> ((s, d) => {
       val dd = docs(s, d)
@@ -672,7 +670,7 @@ object SparkEntry {
       val e = emb(s, d)
       val bits = Similarity.autoBits(ParquetFooter.rows(s, s"$d/embeddings.parquet"))
       withNearDups(e.select(col("vec_id").cast("long").as("vec_id")),
-        Similarity.nearDupPairStreamLsh(e, 0.45, dim = 64, bits = bits))
+        Similarity.nearDupPairsLsh(e, 0.45, dim = 64, bits = bits))
     }),
     "x13_stream_extract" -> ((s, d) => {
       // the streaming surface through the driver gate: a bounded MemoryStream

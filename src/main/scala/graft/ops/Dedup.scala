@@ -22,8 +22,7 @@ import org.apache.spark.storage.StorageLevel
   *     Similarity.scala.
   *
   * The banded producers (minhash, simhash and that LSH variant) are each
-  * one lazy plan that persists nothing; building one runs no job, save the
-  * LSH variant's corpus count when it derives its signature width.
+  * one lazy plan that persists nothing; building one runs no job.
   *
   * At 10^12 rows the LSH variants are the only viable paths: their shuffles
   * key on short signatures (bytes, not documents), hot buckets are capped
@@ -48,23 +47,29 @@ object Dedup {
   final case class DocSig(doc_id: Long, sig: Array[Long], nShingles: Int)
   final case class BandKey(band: Int, bucket: Long, doc_id: Long, sig: Array[Long])
 
-  /** MinHash signatures: k char-5-shingles → 64 permutation mins. A narrow
-    * map over the [[spread]] `(doc_id, text)` projection. */
-  def minhashSignatures(spark: SparkSession, docs: DataFrame,
-      numHashes: Int = 64, shingleK: Int = 5): Dataset[DocSig] = {
+  /** Signature length of [[minhashSignatures]]: the positions that
+    * [[minhashPairs]] bands and [[minhashEstimate]] compares. */
+  private final val NumHashes = 64
+  /** Shingle width of [[minhashSignatures]], in chars. */
+  private final val ShingleK = 5
+
+  /** MinHash signatures: k char-[[ShingleK]]-shingles → [[NumHashes]]
+    * permutation mins. A narrow map over the [[spread]] `(doc_id, text)`
+    * projection. */
+  def minhashSignatures(docs: DataFrame): Dataset[DocSig] = {
     // deterministic affine permutations over the shingle hash space
-    val as = Array.tabulate(numHashes)(i => 0x9E3779B97F4A7C15L * (2L * i + 1))
-    val bs = Array.tabulate(numHashes)(i => 0xC2B2AE3D27D4EB4FL * (i + 1))
+    val as = Array.tabulate(NumHashes)(i => 0x9E3779B97F4A7C15L * (2L * i + 1))
+    val bs = Array.tabulate(NumHashes)(i => 0xC2B2AE3D27D4EB4FL * (i + 1))
     spread(docs.select(col("doc_id").cast("long"), col("text")), "doc_id").as(TypedEncoders.idText)
       .mapPartitions { it =>
         it.map { case (id, text) =>
-          val sh = TextOps.charShingleHashes(if (text == null) "" else text.toLowerCase, shingleK)
-          val sig = Array.fill(numHashes)(Long.MaxValue)
+          val sh = TextOps.charShingleHashes(if (text == null) "" else text.toLowerCase, ShingleK)
+          val sig = Array.fill(NumHashes)(Long.MaxValue)
           var i = 0
           while (i < sh.length) {
             val h = sh(i)
             var j = 0
-            while (j < numHashes) {
+            while (j < NumHashes) {
               val v = as(j) * h + bs(j)
               if (v < sig(j)) sig(j) = v
               j += 1
@@ -80,31 +85,25 @@ object Dedup {
     * (band, bucket), where each banded row carries its doc's full signature
     * through the bucket exchange and the bucket pass keeps a candidate when
     * [[minhashEstimate]] clears the threshold. Returns (doc_a, doc_b,
-    * est_jaccard_pct) with doc_a < doc_b, est >= threshold.
+    * est_jaccard_pct) with doc_a < doc_b, est >= threshold: every verified
+    * pair once per band it shares, with the same estimate each time. A
+    * caller that wants the pair set calls `.distinct()`; d05 counts
+    * distinct partners on its own exchange (`SparkEntry.withNearDups`).
     *
     * Lazy by design, like [[simhashPairs]]: nothing is persisted, and no
-    * candidate set is deduplicated or joined back to the signatures — only
-    * the verified pairs reach the final `distinct` (a pair found in several
-    * bands has one estimate, so it dedups to one row). */
-  def minhashPairs(spark: SparkSession, docs: DataFrame,
-      bands: Int = 16, threshold: Double = 0.7, maxBucket: Int = 64): DataFrame =
-    minhashPairStream(spark, docs, bands, threshold, maxBucket).distinct()
-
-  /** [[minhashPairs]] before its `distinct`: every verified pair once per
-    * band it shares, for consumers that deduplicate on their own exchange
-    * (`SparkEntry.withNearDups`, d05). */
-  private[graft] def minhashPairStream(spark: SparkSession, docs: DataFrame,
+    * candidate set is deduplicated or joined back to the signatures. */
+  def minhashPairs(docs: DataFrame,
       bands: Int = 16, threshold: Double = 0.7, maxBucket: Int = 64): DataFrame = {
-    // bands must tile the 64-row signature exactly: bands > 64 makes
+    // bands must tile the signature exactly: bands > NumHashes makes
     // rowsPerBand 0 (every doc hashes to ONE constant bucket — silently
     // zero pairs once maxBucket skips it), bands = 0 divides by zero, and a
     // non-divisor silently ignores the trailing signature rows
-    require(bands >= 1 && bands <= 64 && 64 % bands == 0,
-      s"bands must divide 64 (got $bands)")
-    // shingle-less docs (text shorter than shingleK) carry no evidence:
+    require(bands >= 1 && bands <= NumHashes && NumHashes % bands == 0,
+      s"bands must divide $NumHashes (got $bands)")
+    // shingle-less docs (text shorter than ShingleK) carry no evidence:
     // exclude them here or every pair of them estimates 100 % similar
-    val sigs = minhashSignatures(spark, docs).filter(_.nShingles > 0)
-    val rowsPerBand = 64 / bands
+    val sigs = minhashSignatures(docs).filter(_.nShingles > 0)
+    val rowsPerBand = NumHashes / bands
     val banded = sigs.flatMap { s =>
       (0 until bands).iterator.map { b =>
         var h = 0xcbf29ce484222325L
@@ -124,16 +123,17 @@ object Dedup {
       .toDF("doc_a", "doc_b", "est_jaccard_pct")
   }
 
-  /** The in-bucket minhash verify: the estimated Jaccard of two 64-position
-    * signatures in whole percent, `((100 * eq) / 64).toInt` over the `eq`
-    * equal positions — the double and the truncating cast of the SQL form
+  /** The in-bucket minhash verify: the estimated Jaccard of two
+    * [[NumHashes]]-position signatures in whole percent,
+    * `((100 * eq) / NumHashes).toInt` over the `eq` equal positions — the
+    * double and the truncating cast of the SQL form
     * `(100 * eq / 64).cast("int")` — or None below `threshold`. */
   private[graft] def minhashEstimate(a: Array[Long], b: Array[Long], threshold: Double): Option[Int] = {
     val n = math.min(a.length, b.length)
     var eq = 0
     var i = 0
     while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
-    val est = ((100 * eq).toDouble / 64).toInt
+    val est = ((100 * eq).toDouble / NumHashes).toInt
     // round, don't truncate: 0.29 * 100 is 28.999... in IEEE doubles, and
     // a floor would silently lower the nominal threshold by one point
     if (est >= math.round(threshold * 100).toInt) Some(est) else None
@@ -440,6 +440,14 @@ object Dedup {
     out
   }
 
+  /** SimHash signatures: [[simhash]] of each document, as (doc_id,
+    * simhash). A narrow map over the [[spread]] `(doc_id, text)`
+    * projection, the counterpart of [[minhashSignatures]]. */
+  def simhashSignatures(docs: DataFrame): Dataset[(Long, Long)] =
+    spread(docs.select(col("doc_id").cast("long"), col("text")), "doc_id")
+      .as(TypedEncoders.idText)
+      .map { case (id, t) => (id, simhash(t)) }(TypedEncoders.idLong)
+
   /** SimHash near-dup pairs with Hamming distance <= maxHamming, GUARANTEED
     * complete only for maxHamming <= 3 (enforced), via
     * Manku-style combined-chunk banding (Manku/Jain/Sarma, WWW'07 §3): the
@@ -454,24 +462,20 @@ object Dedup {
     * /root/reference/src/processors/db_postprocess.rs:81).
     * Returns (doc_a, doc_b, hamming), exact-Hamming verified inside the
     * bucket pass of [[bandedPairs]], which carries each signature as the
-    * payload. The signatures are taken over the [[spread]] `(doc_id, text)`
-    * projection.
+    * payload: every verified pair once per table it shares. A caller that
+    * wants the pair set calls `.distinct()`; d06 counts distinct partners
+    * on its own exchange (`SparkEntry.withNearDups`). The signatures are
+    * [[simhashSignatures]].
     *
     * Lazy by design, like the other banded producers ([[minhashPairs]],
-    * `Similarity.nearDupPairsLsh`): nothing is persisted. d06 reads
-    * [[simhashPairStream]] once (one explode over doc_a and doc_b), so its
-    * banded shuffle runs once (OpsSpec pins this). A materialized variant
-    * (persisted signatures, join-verify, a cached result) measured about
-    * 25 % slower on d06 at sf0.1, local[4], when the bucket pass still ran
-    * through `groupByKey`. */
-  def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int = 3,
-      maxBucket: Int = 256): DataFrame =
-    simhashPairStream(spark, docs, maxHamming, maxBucket).distinct()
-
-  /** [[simhashPairs]] before its `distinct`: every verified pair once per
-    * table it shares (d06 counts partners on its own exchange). */
-  private[graft] def simhashPairStream(spark: SparkSession, docs: DataFrame,
-      maxHamming: Int = 3, maxBucket: Int = 256): DataFrame = {
+    * `Similarity.nearDupPairsLsh`): nothing is persisted. d06 reads the
+    * stream once (one explode over doc_a and doc_b), so its banded shuffle
+    * runs once (OpsSpec pins this). A materialized variant (persisted
+    * signatures, join-verify, a cached result) measured about 25 % slower
+    * on d06 at sf0.1, local[4], when the bucket pass still ran through
+    * `groupByKey`. */
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
+      maxBucket: Int = 256): DataFrame = {
     // the C(5,2) construction pigeonholes only d <= 3 (>= 2 untouched
     // chunks); a larger maxHamming would silently lose recall — refuse it
     // rather than under-deliver (Manku's general construction would derive
@@ -483,10 +487,7 @@ object Dedup {
     def chunk(sig: Long, c: Int): Long =
       (sig >>> offsets(c)) & ((1L << widths(c)) - 1)
     val tables = for { i <- 0 until 5; j <- (i + 1) until 5 } yield (i, j)
-    val sigs = spread(docs.select(col("doc_id").cast("long"), col("text")), "doc_id")
-      .as(TypedEncoders.idText)
-      .map { case (id, t) => (id, simhash(t)) }(TypedEncoders.idLong)
-    val banded = sigs.flatMap { case (id, sig) =>
+    val banded = simhashSignatures(docs).flatMap { case (id, sig) =>
       tables.iterator.zipWithIndex.map { case ((i, j), t) =>
         (t, (chunk(sig, i) << 13) | chunk(sig, j), id, sig)
       }

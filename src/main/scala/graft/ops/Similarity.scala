@@ -178,10 +178,11 @@ object Similarity {
   /** Signature width scaled to the corpus: bits ≈ log2(n / targetBucket),
     * clamped to [4, 24] — expected bucket occupancy stays ~targetBucket as
     * the corpus grows, so probe cost is flat from sf0.001 to 10^12 rows
-    * instead of buckets going quadratic at a fixed width. d15 passes the
-    * row count summed from the embeddings table's parquet footers
-    * (`ParquetFooter.rows`, no job); a DataFrame input keeps
-    * `autoBits(emb.count())`, which runs two Spark jobs. */
+    * instead of buckets going quadratic at a fixed width.
+    * [[nearDupPairsLsh]] takes its `bits` from the caller: d15 passes
+    * `autoBits` of the row count summed from the embeddings table's parquet
+    * footers (`ParquetFooter.rows`, no job). [[lshTopK]] derives its own
+    * from `emb.count()`, which runs two Spark jobs. */
   def autoBits(n: Long, targetBucket: Int = 64): Int = {
     val raw = math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)).toInt
     math.max(4, math.min(24, raw))
@@ -355,28 +356,23 @@ object Similarity {
     * short bucket key, hot buckets capped like minhash), then verifies each
     * candidate with the exact cosine. Recall < 1 by construction (LSH misses
     * some borderline pairs) — measured against the exact product in OpsSpec.
-    * `bits <= 0` (the default) scales the signature width with the corpus
-    * count ([[autoBits]]) so bucket occupancy stays bounded as the corpus
-    * grows. The (vec_id, embedding) projection is [[spread]] over the cores.
-    * Each banded row carries its vector through the bucket exchange, and the
-    * bucket pass of [[bandedPairs]] verifies every candidate there
-    * ([[cosineAtLeast]], one norm per buffered member, a zero vector has
-    * similarity 0.0): no candidate set is deduplicated or joined back to
-    * the corpus, and only the verified pairs reach the final `distinct`.
+    * `bits` is the signature width; [[autoBits]] of the corpus row count
+    * keeps bucket occupancy bounded as the corpus grows. The (vec_id,
+    * embedding) projection is [[spread]] over the cores. Each banded row
+    * carries its vector through the bucket exchange, and the bucket pass of
+    * [[bandedPairs]] verifies every candidate there ([[cosineAtLeast]], one
+    * norm per buffered member, a zero vector has similarity 0.0): no
+    * candidate set is deduplicated or joined back to the corpus. Returns
+    * (id_a, id_b): every verified pair once per table it shares. A caller
+    * that wants the pair set calls `.distinct()`; d15 counts distinct
+    * partners on its own exchange (`SparkEntry.withNearDups`).
     * Lazy by design, like `Dedup.minhashPairs` and `Dedup.simhashPairs`:
-    * nothing is persisted, and the only job it runs is [[autoBits]]'
-    * `count()` when `bits <= 0`. */
+    * nothing is persisted, and building it runs no job. */
   def nearDupPairsLsh(emb: DataFrame, threshold: Double, dim: Int,
-      bits: Int = 0, nTables: Int = 6, seed: Long = 42L,
-      maxBucket: Int = 1024): DataFrame =
-    nearDupPairStreamLsh(emb, threshold, dim,
-      if (bits > 0) bits else autoBits(emb.count()), nTables, seed, maxBucket).distinct()
-
-  /** [[nearDupPairsLsh]] at a fixed `bits`, before its `distinct`: every
-    * verified pair once per table it shares (d15 counts partners on its own
-    * exchange). */
-  private[graft] def nearDupPairStreamLsh(emb: DataFrame, threshold: Double, dim: Int,
       bits: Int, nTables: Int = 6, seed: Long = 42L, maxBucket: Int = 1024): DataFrame = {
+    // bits = 0 would put every vector in one bucket, which the hot-bucket
+    // cap then drops without a word
+    require(bits >= 1 && bits <= 64, s"bits must be in [1, 64] (got $bits)")
     // OR-construction: nTables independent hyperplane tables; a pair is a
     // candidate if it shares a bucket in ANY table (recall 1-(1-p^bits)^T).
     // The explode keys on (table, bucket) so all tables ride one shuffle.
@@ -467,7 +463,8 @@ object Similarity {
     val nd = emb.select(col("vec_id").cast("long").as("vec_id"),
       col("embedding"), sqrt(dotF(col("embedding"), col("embedding"))).as("nrm"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // parquet sources answer count() from footer metadata — no compute pass
+    // a Spark pass over the source, not a footer lookup: count() runs two
+    // jobs (the partial-count scan stage and the final aggregate)
     val total = emb.count()
     val nBlocks = math.max(1L, (total + maxBroadcast - 1) / maxBroadcast).toInt
     val blockOf = pmod(xxhash64(col("vec_id")), lit(nBlocks.toLong))

@@ -30,8 +30,9 @@ package object ops {
       catch { case t: Throwable => cached.unpersist(false); throw t }
     } finally releasing.foreach(_.unpersist(false))
 
-  /** The encoders of the banded producers' typed passes (and d06's
-    * signature surface), derived once per JVM and passed by name.
+  /** The encoders of the banded producers' typed passes (the minhash and
+    * simhash signatures and pair streams, the hyperplane signatures),
+    * derived once per JVM and passed by name.
     * `spark.implicits._` derives a tuple or case-class encoder by TypeTag
     * reflection at every call; these are built once and shared by every
     * session, since an encoder only describes the row layout. */

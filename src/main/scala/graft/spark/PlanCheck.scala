@@ -85,41 +85,15 @@ object PlanCheck {
       Seq("BroadcastNestedLoopJoin", "InMemoryTableScan"), Seq("Window"))
     d04Nd.unpersist()
 
-    // d05: the minhash signatures ride the bucket exchange and each
-    // candidate is verified inside the bucket pass — one lazy plan with no
-    // persisted signatures and no join back to them
-    val d05 = graft.ops.Dedup.minhashPairs(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet"), threshold = 0.7)
-      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
-    check("d05_minhash (lazy plan)", d05, Nil, Seq("Join", "InMemoryTableScan", "zip_with"))
-    // d05/d06/d15: the banded pairs must bucket through the explicit
-    // repartition on the bucket key (REPARTITION_BY_NUM, which AQE never
-    // coalesces into one task) and a sorted-run pass — a groupByKey/
-    // flatMapGroups body plans as MapGroups over an ENSURE_REQUIREMENTS
-    // exchange instead
-    def bucketed(name: String, plan: String, key: String): Unit = {
-      val byNum = plan.linesIterator.exists(l =>
-        l.contains(s"Exchange hashpartitioning($key#") && l.contains("REPARTITION_BY_NUM"))
-      if (byNum) println(s"PASS $name: buckets through a REPARTITION_BY_NUM exchange on $key")
-      else { println(s"FAIL $name: no REPARTITION_BY_NUM exchange on $key"); failures += 1 }
-      check(name, plan, Nil, Seq("MapGroups"))
-    }
-    bucketed("d05_minhash (lazy plan)", d05, "band")
-    // d15: the LSH near-dup path reads the embedding projection once and
-    // verifies each candidate inside the bucket pass, where the vectors
-    // ride with their bucket rows: no join back to the corpus — lazy plan,
-    // and a fixed bits so not even autoBits' count runs
-    val d15 = graft.ops.Similarity.nearDupPairsLsh(
-        spark.read.parquet(s"$sfDir/embeddings.parquet"), 0.45, dim = 64, bits = 8)
-      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
-    check("d15_neardup_lsh (lazy plan)", d15, Nil, Seq("Join", "InMemoryTableScan"))
-    bucketed("d15_neardup_lsh (lazy plan)", d15, "tbl")
-    // d05/d06/d15 as SparkEntry runs them (building none runs a job): the
-    // per-id partner counts of withNearDups ride ONE REPARTITION_BY_NUM
-    // exchange on the id above the bucket pass — no candidate distinct, no
-    // per-id groupBy exchange, no broadcast join back to the corpus, nothing
-    // persisted. The signature input's spread exchange, on the same id, sits
-    // below the bucket pass and is not counted.
+    // d05/d06/d15 as SparkEntry runs them (building none runs a job). The
+    // signatures (d05, d06) and vectors (d15) ride the bucket exchange and
+    // each candidate is verified inside the bucket pass: one lazy plan with
+    // nothing persisted, no join back to the signatures or the corpus, and
+    // no SQL verify (`zip_with`). The per-id partner counts of withNearDups
+    // ride ONE REPARTITION_BY_NUM exchange on the id above the bucket pass:
+    // no candidate distinct, no per-id groupBy exchange, no broadcast join
+    // back to the corpus. The signature input's spread exchange, on the same
+    // id, sits below the bucket pass and is not counted.
     def byNumOn(key: String)(p: SparkPlan): Boolean = p match {
       case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e.outputPartitioning match {
         case h: HashPartitioning => h.expressions.headOption.exists(_.references.exists(_.name == key))
@@ -127,13 +101,22 @@ object PlanCheck {
       }
       case _ => false
     }
+    val plans = new AdaptiveSparkPlanHelper {}
+    // the banded pairs must bucket through the explicit repartition on the
+    // bucket key (REPARTITION_BY_NUM, which AQE never coalesces into one
+    // task) and a sorted-run pass — a groupByKey/flatMapGroups body plans
+    // as MapGroups over an ENSURE_REQUIREMENTS exchange instead
+    def bucketed(name: String, plan: SparkPlan, key: String): Unit =
+      if (plans.find(plan)(byNumOn(key)).isDefined)
+        println(s"PASS $name: buckets through a REPARTITION_BY_NUM exchange on $key")
+      else { println(s"FAIL $name: no REPARTITION_BY_NUM exchange on $key"); failures += 1 }
     for ((q, id, key) <- Seq(("d05_minhash", "doc_id", "band"), ("d06_simhash", "doc_id", "_1"),
         ("d15_neardup_lsh", "vec_id", "tbl"))) {
       val qe = graft.SparkEntry.queries(q)(spark, sfDir).queryExecution
       val plan = qe.explainString(org.apache.spark.sql.execution.SimpleMode)
-      check(q, plan, Nil, Seq("Join", "BroadcastExchange", "InMemoryTableScan"))
-      bucketed(q, plan, key)
-      val perId = new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+      check(q, plan, Nil, Seq("Join", "BroadcastExchange", "InMemoryTableScan", "zip_with", "MapGroups"))
+      bucketed(q, qe.executedPlan, key)
+      val perId = plans.collect(qe.executedPlan) {
         case e if byNumOn(id)(e) && e.find(byNumOn(key)).isDefined => e
       }
       if (perId.length == 1) println(s"PASS $q: one REPARTITION_BY_NUM exchange on $id above the bucket pass")

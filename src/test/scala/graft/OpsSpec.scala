@@ -217,7 +217,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("minhash-LSH finds planted near-dups, no false pairs across distinct docs") {
-    val pairs = Dedup.minhashPairs(spark, docs, threshold = 0.6)
+    val pairs = Dedup.minhashPairs(docs, threshold = 0.6)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(pairs.contains((0L, 2L)) && pairs.contains((1L, 2L)))
@@ -247,8 +247,7 @@ class OpsSpec extends AnyFunSuite {
     val shorts = Seq(
       (100L, "ok"), (101L, "no"), (102L, ""),
       (103L, "a proper document with enough text to shingle and stand alone"))
-    val pairs = Dedup.minhashPairs(spark, shorts.toDF("doc_id", "text"),
-        threshold = 0.6)
+    val pairs = Dedup.minhashPairs(shorts.toDF("doc_id", "text"), threshold = 0.6)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(pairs.isEmpty, s"sub-shingle docs paired: $pairs")
   }
@@ -330,7 +329,7 @@ class OpsSpec extends AnyFunSuite {
     val s0 = Dedup.simhash(mkText(1, 200))
     val s1 = Dedup.simhash(mkText(1, 200))
     assert(s0 == s1)
-    val pairs = Dedup.simhashPairs(spark, docs, maxHamming = 3)
+    val pairs = Dedup.simhashPairs(docs, maxHamming = 3)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(!pairs.contains((0L, 3L)) && !pairs.contains((3L, 4L)))
@@ -429,7 +428,8 @@ class OpsSpec extends AnyFunSuite {
   test("LSH-prefiltered near-dup: no false positives, recall >= 0.7 vs exact at 0.9") {
     val exact = Similarity.nearDupPairs(embeddings, 0.9).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    val lsh = Similarity.nearDupPairsLsh(embeddings, 0.9, dim = 16).collect()
+    val lsh = Similarity.nearDupPairsLsh(embeddings, 0.9, dim = 16,
+        bits = Similarity.autoBits(embeddings.count())).collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     // exact verify ⇒ every emitted pair is a true near-dup
     assert(lsh.subsetOf(exact), s"false positives: ${lsh -- exact}")
@@ -671,7 +671,7 @@ class OpsSpec extends AnyFunSuite {
     import spark.implicits._
     val vecs = Seq((1L, Array(0f, 0f, 0f, 0f)), (2L, Array(-1f, -2f, -3f, -4f)),
       (3L, Array(-1f, -2f, -3f, -4.1f))).toDF("vec_id", "embedding")
-    val got = Similarity.nearDupPairsLsh(vecs, 0.45, dim = 4, bits = 4).as[(Long, Long)].collect()
+    val got = Similarity.nearDupPairsLsh(vecs, 0.45, dim = 4, bits = 4).distinct().as[(Long, Long)].collect()
     assert(got.toSeq == Seq((2L, 3L)))
   }
 
@@ -739,10 +739,12 @@ class OpsSpec extends AnyFunSuite {
       Seq((3L * f, base), (3L * f + 1, base.replace(base.substring(20, 30), "zq wv")),
         (3L * f + 2, base + " tail"))
     }.toDF("doc_id", "text")
+    // the sorted row multiset: a pair repeats once per band or table it
+    // shares, and that stream is what d05/d06/d15 read
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
     def all(docs: DataFrame, vecs: DataFrame): Seq[Seq[String]] = Seq(
-      rows(Dedup.minhashPairs(spark, docs, threshold = 0.5)),
-      rows(Dedup.simhashPairs(spark, docs, maxHamming = 3)),
+      rows(Dedup.minhashPairs(docs, threshold = 0.5)),
+      rows(Dedup.simhashPairs(docs, maxHamming = 3)),
       rows(Similarity.nearDupPairsLsh(vecs, 0.9, dim = 16, bits = 6)))
     val layouts = for {
       shuffle <- Seq("1", "5")
@@ -821,9 +823,14 @@ class OpsSpec extends AnyFunSuite {
   test("minhashPairs validates bands: non-divisors and out-of-range reject loudly") {
     import spark.implicits._
     val docs = Seq((1L, "some words"), (2L, "some words")).toDF("doc_id", "text")
-    intercept[IllegalArgumentException](Dedup.minhashPairs(spark, docs, bands = 128))
-    intercept[IllegalArgumentException](Dedup.minhashPairs(spark, docs, bands = 0))
-    intercept[IllegalArgumentException](Dedup.minhashPairs(spark, docs, bands = 24))
+    intercept[IllegalArgumentException](Dedup.minhashPairs(docs, bands = 128))
+    intercept[IllegalArgumentException](Dedup.minhashPairs(docs, bands = 0))
+    intercept[IllegalArgumentException](Dedup.minhashPairs(docs, bands = 24))
+  }
+
+  test("nearDupPairsLsh rejects bits outside [1, 64]") {
+    for (bits <- Seq(0, -1, 65))
+      intercept[IllegalArgumentException](Similarity.nearDupPairsLsh(embeddings, 0.9, dim = 16, bits = bits))
   }
 
   test("incrementalNew: bloom path, anti-join fallback, and extreme fpp all equal the exact anti-join") {
@@ -902,7 +909,7 @@ class OpsSpec extends AnyFunSuite {
     val badEmb = embeddings.repartition(2).select(col("vec_id"),
       badVec(col("vec_id"), col("embedding")).as("embedding"))
     val cases: Seq[(String, () => Any)] = Seq(
-      "minhashPairs" -> (() => Dedup.minhashPairs(spark, bad).collect()),
+      "minhashPairs" -> (() => Dedup.minhashPairs(bad).collect()),
       "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(spark, bad)),
       "dupWindowStats" -> (() => Dedup.dupWindowStats(bad, n = 3)),
       "removeDupWindows" -> (() => Dedup.removeDupWindows(bad, n = 3)),
